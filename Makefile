@@ -10,11 +10,13 @@
 #                      a stale audit vouches for plans that no longer
 #                      exist - VERDICT r6 #7)
 #   make bench       - bench.py at sf0.1 (run alone: CPU contention skews)
+#   make perfbench   - perfbench self-tests, then one untraced run of each
+#                      BENCHMARK.json workload (run alone, like bench)
 #   make close       - gate + plan-audit + bench, sequentially
 
 SF_DIR ?= /root/testdata/sf0.01
 
-.PHONY: test test-fast gate gate-all plan-audit bench close
+.PHONY: test test-fast gate gate-all plan-audit bench perfbench close
 
 test:
 	PQS_FULL_TESTS=1 python -m pytest tests/ -q
@@ -44,6 +46,16 @@ bench:
 	# the working copy this run is about to overwrite.  A bare
 	# `python bench.py` auto-resolves the same baseline report-only.
 	python bench.py --against HEAD
+
+PERFBENCH_SEED ?= 1
+BENCHMARK = python3 -c "import json; b = json.load(open('BENCHMARK.json')); print($(1))"
+
+perfbench:
+	python3 -m pytest perfbench/tests -q
+	for w in $$($(call BENCHMARK,*(w['name'] for w in b['workloads']))); do \
+		python3 perfbench/run.py --workload $$w --seed $(PERFBENCH_SEED) \
+			--seconds $$($(call BENCHMARK,b['run_seconds'])) --trace 0 || exit 1; \
+	done
 
 scale-smoke:
 	python scripts/scale_smoke.py 10

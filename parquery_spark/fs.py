@@ -266,14 +266,16 @@ def open_input(path: str):
 class _JStream:
     """Minimal seekable binary reader over a Hadoop FSDataInputStream —
     just enough surface for pyarrow's footer reader (read/seek/tell/
-    close; pyarrow wraps arbitrary Python file objects via PythonFile,
-    which seeks from the END to find the footer — hence the size)."""
+    close/closed; pyarrow wraps arbitrary Python file objects via
+    PythonFile, which checks ``closed`` before every call and seeks from
+    the END to find the footer — hence the size)."""
 
     def __init__(self, jstream, size: int, jvm):
         self._j = jstream
         self._size = size
         self._jvm = jvm
         self._pos = 0
+        self.closed = False
 
     def read(self, n=-1):
         # CRITICAL: never read through a py4j out-parameter buffer — py4j
@@ -328,6 +330,7 @@ class _JStream:
         return False
 
     def close(self):
+        self.closed = True
         try:
             self._j.close()
         except Exception:  # pragma: no cover

@@ -39,13 +39,15 @@ DataFrame handles themselves are per-session; the cache stores one per
 
 from __future__ import annotations
 
-import glob as _glob
+import functools
 import os
 import threading
 from collections import OrderedDict
 from typing import Sequence
 
 import pyarrow.parquet as papq
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 
 from parquery_spark import fs
@@ -85,16 +87,19 @@ _relations: "OrderedDict[tuple, _Entry]" = OrderedDict()
 _by_paths: dict[tuple, tuple] = {}
 
 #: (session id, stat-key) -> LAZY analyzed relation (round 12).  Building a
-#: ``spark.read.parquet(path)`` costs ~90 ms of driver work (file listing,
-#: footer/schema decode, py4j round-trips) REGARDLESS of file size, paid on
-#: every call even though the resulting plan object is immutable for a given
-#: file version.  This cache reuses the analyzed DataFrame by stat identity:
-#: nothing is persisted (no executor memory, no TableCacheQueryStage — AQE
-#: exchange reuse is unaffected), PushedFilters/pruning stay per-query, and
-#: a replaced file gets a fresh relation through the stat key exactly like
-#: the persisted cache above.  At cluster scale this is the guide-§6
-#: file-listing-cache advice applied at the engine layer: re-listing a
-#: heavily partitioned table per query is minutes of driver time.
+#: relation over a literal Parquet file costs ~30 ms of driver work (footer
+#: schema read, file listing, analysis, py4j round-trips; ~100-120 ms when
+#: Spark infers the schema with a job, as it still does for directories)
+#: REGARDLESS of file size, paid on every call even though the resulting
+#: plan object is immutable for a given file version (4-core host,
+#: 1000-row files, median of 29).  This cache reuses the analyzed DataFrame
+#: by stat identity: nothing is persisted (no executor memory, no
+#: TableCacheQueryStage — AQE exchange reuse is unaffected), PushedFilters/
+#: pruning stay per-query, and a replaced file gets a fresh relation through
+#: the stat key exactly like the persisted cache above.  At cluster scale
+#: this is the guide-§6 file-listing-cache advice applied at the engine
+#: layer: re-listing a heavily partitioned table per query is minutes of
+#: driver time.
 _lazy_relations: "OrderedDict[tuple, DataFrame]" = OrderedDict()
 _MAX_LAZY_RELATIONS = int(
     os.environ.get("PARQUERY_SPARK_LAZY_RELATION_ENTRIES", "512")
@@ -320,10 +325,74 @@ def _read(spark: SparkSession, paths: Sequence[str]) -> DataFrame:
         return spark.read.json(list(paths))
     if fmt == "orc":
         return spark.read.orc(*paths)
+    try:
+        df = _read_with_footer_schema(spark, paths)
+    except (Py4JError, PySparkException):
+        # any JVM-side failure (missing, truncated or replaced file,
+        # conflicting types) is left to the inferring read below, so the
+        # error raised is Spark's own
+        df = None
+    if df is not None:
+        return df
     reader = spark.read
     if len(paths) > 1:
         reader = reader.option("mergeSchema", "true")
     return reader.parquet(*paths)
+
+
+@functools.lru_cache(maxsize=2)
+def _jvm_classes(jvm) -> tuple:
+    """``(Path, ParquetFileFormat, PythonUtils)`` of one JVM.  A py4j class
+    lookup costs one round trip per package name (~5 ms for these three),
+    so each gateway resolves them once."""
+    parquet = getattr(
+        jvm.org.apache.spark.sql.execution.datasources.parquet, "ParquetFileFormat$"
+    )
+    return (
+        jvm.org.apache.hadoop.fs.Path,
+        getattr(parquet, "MODULE$"),
+        jvm.org.apache.spark.api.python.PythonUtils,
+    )
+
+
+def _read_with_footer_schema(
+    spark: SparkSession, paths: Sequence[str]
+) -> DataFrame | None:
+    """``spark.read.parquet(*paths)`` with its schema read from the footers
+    on the driver, or None when ``paths`` are not all literal files.
+
+    Spark's inferring read runs ``mergeSchemasInParallel``, a Spark job, even
+    for one file.  Here the same footers are read by Spark's own driver-side
+    helpers (a thread pool, no job), and the schema is converted by the
+    converter that job would use, so every type rule (INT96, unsigned ints,
+    nanos-as-long, the Spark row-metadata key) is identical.  A list is
+    merged in path order, as the job merges it.  ``readSchema`` merges
+    case-sensitively; under ``spark.sql.caseSensitive=false`` a merged schema
+    whose names collide ignoring case would differ from the job's, and Spark
+    rejects it as a user-specified schema (``COLUMN_ALREADY_EXISTS``, nested
+    fields included), so the caller falls back."""
+    js = spark._jsparkSession
+    path_cls, parquet, utils = _jvm_classes(spark._jvm)
+    hconf = js.sessionState().newHadoopConf()
+    statuses = []
+    for p in paths:
+        jpath = path_cls(p)
+        status = jpath.getFileSystem(hconf).getFileStatus(jpath)
+        if not status.isFile():
+            return None
+        statuses.append(status)
+    if len(statuses) > 1:
+        statuses.sort(key=lambda s: s.getPath().toString())
+    ignore_corrupt = js.sessionState().conf().ignoreCorruptFiles()
+    footers = parquet.readParquetFootersInParallel(
+        hconf, utils.toSeq(statuses), ignore_corrupt
+    )
+    schema = parquet.readSchema(footers, js)
+    if schema.isEmpty():  # every footer skipped as corrupt
+        return None
+    # a given schema is used as is: lists need no mergeSchema option
+    jdf = js.read().schema(schema.get()).parquet(utils.toSeq(list(paths)))
+    return DataFrame(jdf, spark)
 
 
 def _plan_slices(paths: Sequence[str]) -> int:
