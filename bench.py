@@ -32,7 +32,7 @@ above the floor is signal; the old floor (relative spread of 5
 BACK-TO-BACK canary runs, measured 2.16 on this host) was measuring
 exactly the burst noise the spaced discipline avoids.  The parity
 head-to-head uses median-of-5 for all three engines.  Re-runs may hit
-the engine's own caches (hot-relation cache, stat-keyed artifacts) — the
+the engine's own caches (relation and plan caches, stat-keyed artifacts) — the
 same warm-state benefit the embedded reference engines get from the OS
 page cache on their re-reads; since round 9 the CacheManager contract
 guarantees no query leaves a persisted relation behind, so warm numbers

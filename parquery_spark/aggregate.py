@@ -35,7 +35,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from parquery_spark import fs, relations, tool
-from parquery_spark.plans.aggregation import build_aggregation_plan
+from parquery_spark.plans.aggregation import build_aggregation_plan, is_small_input
 from parquery_spark.session import get_small_query_session, get_spark
 
 logger = logging.getLogger(__name__)
@@ -50,13 +50,13 @@ def aggregate_plan(
     standard_missing_id: int = -1,
     handle_missing_file: bool = True,
     spark: SparkSession | None = None,
-    use_relation_cache: bool = True,
 ) -> DataFrame:
     """Lazy-DataFrame variant of :func:`aggregate_pq` — the scale path.
 
-    ``use_relation_cache=False`` forces the streaming parquet scan (full
-    predicate pushdown, nothing persisted) even for small inputs — the plan
-    shape a 100 TB table always gets.
+    The plan is a parquet scan with full predicate pushdown and column
+    pruning whatever the input size; nothing is persisted.  It runs on
+    ``spark`` (default: the shared session), never on the small-query
+    session.
     """
     spark = spark or get_spark()
     return build_aggregation_plan(
@@ -68,7 +68,6 @@ def aggregate_plan(
         aggregate=aggregate,
         standard_missing_id=standard_missing_id,
         handle_missing_file=handle_missing_file,
-        use_relation_cache=use_relation_cache,
     )
 
 
@@ -136,19 +135,16 @@ def aggregate_pq(
             with _pinned_snapshot(file_name) as snapshot:
                 if _post_snapshot_hook is not None:  # test seam: concurrent
                     _post_snapshot_hook(file_name)   # writer lands mid-read
-                # unique per-call snapshot paths must not pollute the
-                # relation cache
-                return _execute(snapshot, use_relation_cache=False)
+                return _execute(snapshot)
         return _execute(file_name)
 
-    def _execute(paths, use_relation_cache=True):
+    def _execute(paths):
         spark = get_spark()
-        if _is_small_input(paths):
+        if is_small_input(paths):
             # Execute under the dedicated small-query session (AQE off,
-            # single reduce partition, interpreted codegen) instead of
-            # mutating the shared session's conf — thread-safe by
-            # construction: a concurrent large query on the parent session
-            # keeps AQE/codegen untouched.
+            # single reduce partition) instead of mutating the shared
+            # session's conf — thread-safe by construction: a concurrent
+            # large query on the parent session keeps AQE untouched.
             spark = get_small_query_session(spark)
         df = build_aggregation_plan(
             spark,
@@ -159,7 +155,6 @@ def aggregate_pq(
             aggregate=aggregate,
             standard_missing_id=standard_missing_id,
             handle_missing_file=handle_missing_file,
-            use_relation_cache=use_relation_cache,
         )
         if as_df:
             return df.toPandas()
@@ -203,7 +198,9 @@ def _pinned_snapshot(file_name):
     refuses hardlinks (or the directory is read-only), the fallback is a
     byte copy into a temp dir — slower, same guarantee.  Missing files are
     passed through un-snapshotted so ``handle_missing_file`` semantics are
-    unchanged.  Every attempt creates (and removes) fresh snapshots.
+    unchanged.  Every attempt creates (and removes) fresh snapshots, and
+    drops what the relation cache holds for them, so a snapshot read
+    leaves nothing behind once its result is fetched.
     """
     paths = [file_name] if isinstance(file_name, str) else list(file_name)
     snaps: list[str] = []
@@ -234,28 +231,13 @@ def _pinned_snapshot(file_name):
             out.append(snap)
         yield out[0] if isinstance(file_name, str) else out
     finally:
+        if snaps:
+            relations.invalidate(snaps)
         for s in snaps:
             try:
                 os.unlink(s)
             except OSError:  # pragma: no cover - already gone
                 pass
-
-
-#: below this total input size, per-query latency is dominated by fixed
-#: scheduling costs — AQE's extra stage re-planning and a wide shuffle buy
-#: nothing (measured ~25% latency saving at 600k rows, local mode)
-SMALL_INPUT_BYTES = 256 << 20
-
-
-def _is_small_input(file_name) -> bool:
-    paths = [file_name] if isinstance(file_name, str) else list(file_name)
-    try:
-        total = sum(fs.getsize(p) for p in paths if fs.exists(p))
-    except OSError:
-        # unknown size (remote URI without a metadata backend): treat as
-        # large — the full-session scale path is the safe default
-        return False
-    return total < SMALL_INPUT_BYTES
 
 
 #: aggregate_pq op name → pyarrow group_by aggregation name, for

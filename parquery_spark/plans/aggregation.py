@@ -24,11 +24,9 @@ Scale notes (design target: 1000 executors, 100 TB):
 
 from __future__ import annotations
 
-import os
 from functools import reduce
 from typing import Any, Sequence
 
-import pyarrow.parquet as papq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -201,7 +199,6 @@ def build_aggregation_plan(
     aggregate: bool = True,
     standard_missing_id: int = tool.STANDARD_MISSING_ID,
     handle_missing_file: bool = True,
-    use_relation_cache: bool = True,
 ) -> DataFrame:
     """Build the lazy Spark plan implementing ``aggregate_pq`` semantics.
 
@@ -290,28 +287,30 @@ def build_aggregation_plan(
     # Semantics identical to the Column-API construction this replaces (same
     # Catalyst plan); the SQL surface exists because building the plan
     # expression-by-expression costs dozens of Py4J roundtrips (~0.7 ms
-    # each, measured ~90 ms/query) while spark.sql() costs one.  Small
-    # inputs resolve through the hot-relation cache (columnar in-memory,
-    # re-sliced for parallelism); large inputs stream lazily with full
-    # parquet pushdown — relations.get_relation_view applies the size gate.
-    view = relations.get_relation_view(spark, live_paths, cache=use_relation_cache)
+    # each, measured ~90 ms/query) while spark.sql() costs one.  Every
+    # input, small or large, is a lazy parquet scan with full pushdown and
+    # pruning; the view's relation comes from the relation cache.
+    view = relations.get_relation_view(spark, live_paths)
     where, args = _sql_where(filters)
 
-    # Small cached inputs: COUNT(DISTINCT c) → SIZE(COLLECT_SET(c)).  Spark
-    # plans COUNT(DISTINCT) as Expand + two aggregate/exchange rounds (three
+    # Small inputs: COUNT(DISTINCT c) → SIZE(COLLECT_SET(c)).  Spark plans
+    # COUNT(DISTINCT) as Expand + two aggregate/exchange rounds (three
     # stages); collect_set is a single aggregation (one exchange, two
-    # stages) — measured ~2× faster at this scale.  Gated to the cached
-    # small-input path because collect_set materializes per-group distinct
-    # sets in executor memory: exactly right under the 256 MiB cache bound,
-    # wrong for a 100 TB high-cardinality column, which keeps Spark's
-    # Expand-based distributed plan.  CAST keeps the engine's BIGINT
-    # count-distinct output type.
+    # stages) — measured ~2× faster at this scale.  Gated on input size
+    # because collect_set materializes per-group distinct sets in executor
+    # memory: right under SMALL_INPUT_BYTES, wrong for a 100 TB
+    # high-cardinality column, which keeps Spark's Expand-based distributed
+    # plan.  CAST keeps the engine's BIGINT count-distinct output type.
     sql_aggs = _SQL_AGGS
-    if use_relation_cache and _cached_small_input(live_paths):
+    if (
+        aggregate
+        and any(op.lower() in _COUNT_DISTINCT_OPS for _, op, _ in live_measures)
+        and is_small_input(live_paths)
+    ):
         sql_aggs = dict(
-            _SQL_AGGS,
-            count_distinct="CAST(SIZE(COLLECT_SET({c})) AS BIGINT)",
-            sorted_count_distinct="CAST(SIZE(COLLECT_SET({c})) AS BIGINT)",
+            _SQL_AGGS, **dict.fromkeys(
+                _COUNT_DISTINCT_OPS, "CAST(SIZE(COLLECT_SET({c})) AS BIGINT)"
+            )
         )
 
     # engine columns, in the engine's output order
@@ -374,14 +373,25 @@ def build_aggregation_plan(
     return relations.cached_sql(spark, sql, args)
 
 
-def _cached_small_input(paths: Sequence[str]) -> bool:
-    """True when the input is under the hot-relation-cache size bound.
-    Unknown sizes (remote URIs without a metadata backend) are NOT small —
-    the scale path is the safe default."""
+#: below this total input size, per-query latency is dominated by fixed
+#: scheduling costs: ``aggregate_pq`` runs such inputs on the small-query
+#: session (AQE's re-planning and a wide shuffle buy nothing there; measured
+#: ~25% latency saving at 600k rows, local mode), and COUNT(DISTINCT) plans
+#: as one collect_set aggregation
+SMALL_INPUT_BYTES = 256 << 20
+
+_COUNT_DISTINCT_OPS = ("count_distinct", "sorted_count_distinct")
+
+
+def is_small_input(paths: str | Sequence[str]) -> bool:
+    """True when the existing files of ``paths`` (globs expanded) total
+    under :data:`SMALL_INPUT_BYTES`.  Unknown sizes (remote URIs without a
+    metadata backend) are NOT small — the scale path is the safe default."""
+    path_list = [paths] if isinstance(paths, str) else list(paths)
     try:
-        return (
-            sum(fs.getsize(p) for p in paths)
-            < relations.MAX_CACHED_INPUT_BYTES
+        total = sum(
+            fs.getsize(p) for p in relations.expand_globs(path_list) if fs.exists(p)
         )
     except OSError:
         return False
+    return total < SMALL_INPUT_BYTES

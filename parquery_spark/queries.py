@@ -72,24 +72,16 @@ def _e4_to_cents(sum_col):
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Uncached, fully lazy scan — deliberately NOT the hot-relation
-    cache (round 9).  Two measured reasons:
-
-    * a cached base table plans as ``TableCacheQueryStage``, which
-      DEFEATS AQE exchange reuse for every multi-consumer relation above
-      it (Spark 4.1: identical exchanges over a table-cache stage are
-      not unified; over a real scan they are) — the registry leans on
-      ReuseExchange as its zero-cache sharing mechanism, and a 27-query
-      mini-bench ran 16% faster uncached;
-    * at 100 TB nobody columnar-caches base facts — real scans keep
-      PushedFilters/partition pruning visible and honest.
-
-    The hot cache (``relations.get_relation``) remains on the
-    reference-parity aggregate surface, where repeated small-table
-    aggregation is the workload it was built for."""
-    return relations.get_relation(
-        spark, os.path.join(sf_dir, f"{table}.parquet"), cache=False
-    )
+    """A fully lazy scan of one table, its analyzed relation reused by file
+    version through ``relations.get_relation``.  Nothing is persisted (round
+    9): a persisted base table plans as ``TableCacheQueryStage``, which
+    DEFEATS AQE exchange reuse for every multi-consumer relation above it
+    (Spark 4.1: identical exchanges over a table-cache stage are not
+    unified; over a real scan they are) — the registry leans on
+    ReuseExchange as its zero-cache sharing mechanism, and a 27-query
+    mini-bench ran 16% faster without the persisted copy; and real scans
+    keep PushedFilters/partition pruning visible and honest."""
+    return relations.get_relation(spark, os.path.join(sf_dir, f"{table}.parquet"))
 
 
 def _path(sf_dir: str, table: str) -> str:
@@ -102,7 +94,7 @@ def _footer_rows(path: str) -> int:
     when the relation is an unfiltered scan (round 12, guide §5 "the
     driver should do almost no data work" cuts both ways: a count JOB
     for a number the footers already hold is a scheduler round-trip
-    wasted).  Same metadata source as ``relations._plan_slices``."""
+    wasted)."""
     import glob as _glob
 
     import pyarrow.parquet as papq

@@ -1,46 +1,39 @@
-"""Hot-relation cache: the engine's buffer-pool analog for small tables.
+"""Relation cache: analyzed plans over input files, keyed by file version.
 
-The reference opens the Parquet file fresh on every ``aggregate_pq`` call and
-leans on the OS page cache for re-reads (reference: parquery/
-aggregate_pyarrow.py:60-74 — ``pq.ParquetFile`` per query).  Spark's
-equivalent of "the file is hot" is an ``InMemoryRelation``: this module keeps
-an LRU of persisted, columnar-cached DataFrames for *small* inputs so that
-repeated queries over the same file skip listing, footer decode, and the
-parquet scan entirely.
+The reference opens each Parquet file fresh per query and leans on the OS
+page cache for re-reads (reference: parquery/aggregate_pyarrow.py:60-74 —
+``pq.ParquetFile`` per query).  This module does the same for data: nothing
+is persisted, and every query scans its file with pushdown and pruning.
+What it reuses is driver work.  Building a relation over a literal Parquet
+file costs ~30 ms (footer schema read, file listing, analysis, py4j round
+trips), ~100-120 ms for a directory whose schema Spark infers with a job,
+whatever the size of the data (4-core host, 1000-row files, median of 29),
+and the analyzed plan is immutable for a given file version.  At cluster
+scale this is the file-listing cache applied at the engine layer:
+re-listing a heavily partitioned table per query is minutes of driver time.
 
-Two scale-aware rules:
+One LRU, ``_relations``, maps (session, stat identity) to the analyzed
+relation; the stat identity is ``(canonical path, mtime_ns, size)`` per
+file.  It serves every read: ``aggregate_pq``, ``aggregate_plan`` and the
+registry's ``queries.load``.  A replaced file has a new identity, so it
+gets a fresh relation, and that read evicts every entry over an older
+version of any of its files.  An entry owns the temp view
+:func:`get_relation_view` registers for it and the prepared plans over
+that view; eviction and :func:`invalidate` drop all of them, the view from
+the owning session's catalog.
 
-* **Only small inputs are cached** (default < 256 MiB total).  A 100 TB
-  table never lands here — the lazy plan path streams it with full predicate
-  pushdown; caching is a small-hot-table optimization, exactly like keeping
-  dimension tables in a buffer pool.
-* **Single-row-group files are re-sliced.**  Parquet assigns whole row
-  groups to tasks, so a 600 k-row single-row-group file caps every
-  downstream partial aggregation at parallelism 1 no matter how many cores
-  exist.  The cache build repartitions to ``rows // ROWS_PER_SLICE`` slices
-  (bounded by the scheduler's default parallelism) once, and every
-  subsequent query runs its map stage in parallel over cached columnar
-  batches.
-
-Staleness: entries are keyed by ``(abspath, mtime_ns, size)`` per file.  A
-replaced file (``os.replace``) produces a new key — and the stale entry is
-**eagerly unpersisted** before the new one is built, because Spark's shared
-``CacheManager`` matches plans structurally (path-based, not
-mtime-based): without the eviction, a fresh read of the replaced file would
-silently resolve to the stale in-memory copy.
-
-Sessions: cached data lives in the SparkContext-wide ``SharedState`` cache
-manager, so a relation persisted through one ``SparkSession`` is picked up
-by plan-equality from every other session of the same context (the
-small-query session in :mod:`parquery_spark.aggregate` relies on this).
-DataFrame handles themselves are per-session; the cache stores one per
-``(key, session)``.
+Spark's ``CacheManager`` is never used.  A persisted columnar copy of small
+inputs was measured and removed: it scanned every column of a file that
+most reads touch once, and because the ``CacheManager`` matches cached
+plans by path, every other reader of a replaced file (a plain
+``spark.read.parquet`` included) saw the old bytes until it was evicted.
 """
 
 from __future__ import annotations
 
 import functools
-import os
+import itertools
+import re
 import threading
 from collections import OrderedDict
 from typing import Sequence
@@ -52,84 +45,44 @@ from pyspark.sql import DataFrame, SparkSession
 
 from parquery_spark import fs
 
-#: Inputs at or above this total size are never cached (scale path).
-MAX_CACHED_INPUT_BYTES = int(
-    os.environ.get("PARQUERY_SPARK_RELATION_CACHE_MAX_FILE_BYTES", str(256 << 20))
-)
-
-#: LRU capacity — number of distinct (path-set, stat) entries kept persisted.
-MAX_CACHED_RELATIONS = int(
-    os.environ.get("PARQUERY_SPARK_RELATION_CACHE_ENTRIES", "16")
-)
-
-#: Target rows per cached partition slice; chosen so a partial aggregation
-#: over one slice is a few milliseconds of work (scheduling overhead and
-#: per-slice work stay balanced in local mode and on executors alike).
-ROWS_PER_SLICE = 40_000
-
-_ENABLED = os.environ.get("PARQUERY_SPARK_RELATION_CACHE", "1") not in ("0", "false")
-
 _lock = threading.RLock()
 
+#: (session id, stat key) -> analyzed relation (LRU: most recently used
+#: last).  An entry holds a plan, never data.
+_relations: "OrderedDict[tuple, DataFrame]" = OrderedDict()
+MAX_CACHED_RELATIONS = 512
 
-class _Entry:
-    __slots__ = ("slices", "by_session", "persisted_df")
-
-    def __init__(self, slices: int):
-        self.slices = slices
-        self.by_session: dict[int, DataFrame] = {}
-        self.persisted_df: DataFrame | None = None
-
-
-#: stat-key -> _Entry (LRU: most-recently-used last)
-_relations: "OrderedDict[tuple, _Entry]" = OrderedDict()
-#: path-set -> last seen stat-key (to detect replaced files)
-_by_paths: dict[tuple, tuple] = {}
-
-#: (session id, stat-key) -> LAZY analyzed relation (round 12).  Building a
-#: relation over a literal Parquet file costs ~30 ms of driver work (footer
-#: schema read, file listing, analysis, py4j round-trips; ~100-120 ms when
-#: Spark infers the schema with a job, as it still does for directories)
-#: REGARDLESS of file size, paid on every call even though the resulting
-#: plan object is immutable for a given file version (4-core host,
-#: 1000-row files, median of 29).  This cache reuses the analyzed DataFrame
-#: by stat identity: nothing is persisted (no executor memory, no
-#: TableCacheQueryStage — AQE exchange reuse is unaffected), PushedFilters/
-#: pruning stay per-query, and a replaced file gets a fresh relation through
-#: the stat key exactly like the persisted cache above.  At cluster scale
-#: this is the guide-§6 file-listing-cache advice applied at the engine
-#: layer: re-listing a heavily partitioned table per query is minutes of
-#: driver time.
-_lazy_relations: "OrderedDict[tuple, DataFrame]" = OrderedDict()
-_MAX_LAZY_RELATIONS = int(
-    os.environ.get("PARQUERY_SPARK_LAZY_RELATION_ENTRIES", "512")
-)
-_LAZY_ENABLED = os.environ.get(
-    "PARQUERY_SPARK_LAZY_RELATION_CACHE", "1"
-) not in ("0", "false")
+#: entry key -> the temp view the entry owns
+_views: dict[tuple, str] = {}
+_view_ids = itertools.count(1)
 
 
-def _lazy_read(spark: SparkSession, path_list: Sequence[str]) -> DataFrame:
-    """``_read`` through the lazy analyzed-relation cache (plan reuse only,
-    never data).  Falls back to a fresh read when stat identity is
-    unavailable (remote URI without a metadata backend)."""
-    if not _LAZY_ENABLED:
-        return _read(spark, path_list)
-    try:
-        key = (id(spark), _stat_key(path_list))
-    except OSError:
-        return _read(spark, path_list)
+def _lazy_read(spark: SparkSession, path_list: Sequence[str]) -> tuple[tuple, DataFrame]:
+    """The cached relation over ``path_list`` in ``spark``, and its key.
+
+    A miss reads the relation with :func:`_read` and evicts every entry
+    over an older version of one of its files.  A reader still holding such
+    an entry's view is reading a file that has been replaced under it;
+    failing loud is right there (``pin_snapshot`` is the contract for
+    reads under concurrent writers, and snapshot paths are never
+    replaced).  The LRU trim never evicts the entry being returned."""
+    key = _key(spark, path_list)
     with _lock:
-        df = _lazy_relations.get(key)
+        df = _relations.get(key)
         if df is not None:
-            _lazy_relations.move_to_end(key)
-            return df
+            _relations.move_to_end(key)
+            return key, df
     df = _read(spark, path_list)
     with _lock:
-        _lazy_relations[key] = df
-        while len(_lazy_relations) > _MAX_LAZY_RELATIONS:
-            _lazy_relations.popitem(last=False)
-    return df
+        df = _relations.setdefault(key, df)
+        _relations.move_to_end(key)
+        current = {f[0]: f for f in key[1]}
+        for old in [k for k in _relations
+                    if any(current.get(f[0], f) != f for f in k[1])]:
+            _evict(old)
+        while len(_relations) > MAX_CACHED_RELATIONS and next(iter(_relations)) != key:
+            _evict(next(iter(_relations)))
+    return key, df
 
 
 #: (abspath, mtime_ns, size) -> frozenset of column names; footer schema is
@@ -244,8 +197,14 @@ def _parse_schema_names(path: str) -> frozenset:
     return names
 
 
-def _stat_key(paths: Sequence[str]) -> tuple:
-    return tuple((fs.canonical(p), *fs.stat(p)) for p in paths)
+def _key(spark: SparkSession, paths: Sequence[str]) -> tuple:
+    """``(session id, ((canonical path, mtime_ns, size), ...))``.  A path
+    no backend can stat (or a file gone since the pre-flight, whose read
+    then raises Spark's own error) is keyed by its name alone."""
+    try:
+        return id(spark), tuple((fs.canonical(p), *fs.stat(p)) for p in paths)
+    except OSError:
+        return id(spark), tuple((fs.canonical(p), None, None) for p in paths)
 
 
 #: extension → source format.  Parquet is the reference's only format
@@ -395,142 +354,43 @@ def _read_with_footer_schema(
     return DataFrame(jdf, spark)
 
 
-def _plan_slices(paths: Sequence[str]) -> int:
-    """Driver-side, footer-only: how many partitions the cached relation
-    should have.  More slices than the scan would naturally produce →
-    repartition once at build.  Non-parquet sources have no row metadata;
-    slice by bytes instead (~2 MiB of source text per slice).  Remote
-    inputs keep their natural partitioning (0): the re-slice is a repair
-    for the degenerate under-split local layout, not worth a remote
-    footer fetch.
-
-    The natural-parallelism estimate is BYTE-based (round 12): Spark
-    packs files into splits by ``maxPartitionBytes``, NOT by row group —
-    a 20 MB file with 15 row groups still scans as ONE task, so the
-    former row-group comparison left every mid-sized cached table at 1-3
-    partitions and capped heavy downstream work (pair-explode joins,
-    shingling) at that parallelism (measured: q128's basket self-join ran
-    on 3 tasks)."""
-    if not all(fs.is_local(p) for p in paths):
-        return 0
-    if any(format_of(p) != "parquet" for p in paths):
-        total = sum(fs.getsize(p) for p in paths)
-        return max(1, min(total // (2 << 20), os.cpu_count() or 8))
-    rows = 0
-    total = 0
-    for p in paths:
-        md = papq.read_metadata(fs.local_part(p))
-        rows += md.num_rows
-        total += fs.getsize(p)
-    want = max(1, min(rows // ROWS_PER_SLICE, os.cpu_count() or 8))
-    # one split per maxPartitionBytes (default 128 MB) is what the scan
-    # yields; re-slice only when that under-uses the machine
-    natural = max(1, total // (128 << 20))
-    return want if want > natural else 0  # 0 → keep natural partitioning
-
-
-def get_relation(
-    spark: SparkSession, paths: str | Sequence[str], cache: bool = True
-) -> DataFrame:
-    """Resolve a parquet path list to a DataFrame, through the hot cache.
-
-    Large inputs (≥ :data:`MAX_CACHED_INPUT_BYTES`) and disabled-cache calls
-    go straight to ``spark.read`` — fully lazy, nothing persisted.
-    """
-    path_list = [paths] if isinstance(paths, str) else list(paths)
-    path_list = expand_globs(path_list)
+def _expand(paths: str | Sequence[str]) -> list[str]:
+    path_list = expand_globs([paths] if isinstance(paths, str) else list(paths))
     if not path_list:
         from parquery_spark.tool import MissingInputError
 
         raise MissingInputError(f"no files match: {paths}")
-    if not (_ENABLED and cache):
-        return _lazy_read(spark, path_list)
-    try:
-        total = sum(fs.getsize(p) for p in path_list)
-    except OSError:
-        # unknown size (e.g. remote URI with no metadata backend): go
-        # straight to the lazy uncached scan — the scale path
-        return _read(spark, path_list)
-    if total >= MAX_CACHED_INPUT_BYTES:
-        return _lazy_read(spark, path_list)
-
-    try:
-        key = _stat_key(path_list)
-    except OSError:
-        return _read(spark, path_list)
-    paths_id = tuple(fs.canonical(p) for p in path_list)
-
-    with _lock:
-        stale_key = _by_paths.get(paths_id)
-        if stale_key is not None and stale_key != key:
-            # file replaced in place: evict BEFORE building the new relation,
-            # or the shared CacheManager would resolve the new (structurally
-            # identical) plan to the stale in-memory copy
-            _evict(stale_key)
-        _by_paths[paths_id] = key
-
-        entry = _relations.get(key)
-        if entry is None:
-            entry = _Entry(_plan_slices(path_list))
-            _relations[key] = entry
-        _relations.move_to_end(key)
-
-        sid = id(spark)
-        df = entry.by_session.get(sid)
-        if df is None:
-            df = _read(spark, path_list)
-            if entry.slices:
-                df = df.repartition(entry.slices)
-            entry.by_session[sid] = df
-            if entry.persisted_df is None:
-                # persist once; every session's equivalent plan hits the
-                # shared CacheManager by structural plan matching
-                entry.persisted_df = df.persist()
-
-        while len(_relations) > MAX_CACHED_RELATIONS:
-            oldest = next(iter(_relations))
-            if oldest == key:
-                break
-            _evict(oldest)
-    return df
+    return path_list
 
 
-#: (stat-key-or-paths-id, session id) -> registered temp-view name
-_views: dict[tuple, str] = {}
-_view_seq = 0
+def get_relation(spark: SparkSession, paths: str | Sequence[str]) -> DataFrame:
+    """Resolve a path list (globs expanded) to its analyzed relation,
+    through the relation cache.  The relation is a lazy scan: filters and
+    column pruning stay per query."""
+    return _lazy_read(spark, _expand(paths))[1]
 
 
-def get_relation_view(
-    spark: SparkSession, paths: str | Sequence[str], cache: bool = True
-) -> str:
-    """Resolve a parquet path list to a registered temp-view name — the
+def get_relation_view(spark: SparkSession, paths: str | Sequence[str]) -> str:
+    """Resolve a path list to a registered temp-view name — the
     single-Py4J-roundtrip query surface: ``spark.sql`` over the view costs
     one gateway call, where the equivalent Column-API plan construction
     costs dozens (~0.7 ms each).
 
-    The view is registered once per (relation identity, session); replaced
-    files get a fresh relation through :func:`get_relation`'s staleness key,
-    and the view is re-pointed at it."""
-    global _view_seq
-    path_list = [paths] if isinstance(paths, str) else list(paths)
-    df = get_relation(spark, path_list, cache=cache)
-    try:
-        ident = _stat_key(path_list)
-    except OSError:
-        ident = tuple(fs.canonical(p) for p in path_list)
-    # cache=True and cache=False views live in separate namespaces: the
-    # uncached (streaming-scan) contract must never resolve through a view
-    # registered from a persisted relation, and vice versa — and downstream
-    # plan caches key on the SQL text, so the names must differ too.
-    vkey = (ident, id(spark), bool(cache))
-    with _lock:
-        name = _views.get(vkey)
-        if name is None:
-            _view_seq += 1
-            name = f"__pq_rel_{_view_seq}" + ("" if cache else "_raw")
-            df.createOrReplaceTempView(name)
-            _views[vkey] = name
-    return name
+    The view belongs to the relation's cache entry: it is registered on the
+    entry's first view request and dropped with the entry.  A replaced
+    file gets a new entry, so a new view name."""
+    path_list = _expand(paths)
+    while True:
+        key, df = _lazy_read(spark, path_list)
+        with _lock:
+            if key not in _relations:
+                continue  # evicted by a concurrent miss: a view needs an owner
+            name = _views.get(key)
+            if name is None:
+                name = f"__pq_rel_{next(_view_ids)}"
+                df.createOrReplaceTempView(name)
+                _views[key] = name
+            return name
 
 
 #: (session id, sql, frozen args) -> analyzed DataFrame.  A prepared-
@@ -540,8 +400,9 @@ def get_relation_view(
 #: the SQL text embeds the relation's temp-view name, and view names are
 #: minted fresh per (path-set, mtime, size) identity — a replaced file gets a
 #: new view name, hence a new cache key, so a stale plan can never be served.
+#: Plans over a view leave the cache with the view's entry.
 _plans: "OrderedDict[tuple, DataFrame]" = OrderedDict()
-MAX_CACHED_PLANS = int(os.environ.get("PARQUERY_SPARK_PLAN_CACHE_ENTRIES", "128"))
+MAX_CACHED_PLANS = 128
 
 
 def cached_sql(spark: SparkSession, sql: str, args: dict | None = None) -> DataFrame:
@@ -572,26 +433,32 @@ def cached_sql(spark: SparkSession, sql: str, args: dict | None = None) -> DataF
 
 
 def _evict(key: tuple) -> None:
-    entry = _relations.pop(key, None)
-    for vkey in [k for k in _views if k[0] == key]:
-        _views.pop(vkey, None)
-    if entry is not None and entry.persisted_df is not None:
-        try:
-            entry.persisted_df.unpersist(blocking=False)
-        except Exception:
-            pass  # session may already be stopped
+    """Drop one entry with its temp view and the prepared plans over that
+    view.  The caller holds ``_lock``."""
+    df = _relations.pop(key, None)
+    view = _views.pop(key, None)
+    if view is None:
+        return
+    over_view = re.compile(rf"\b{view}\b")
+    for pkey in [k for k in _plans if over_view.search(k[1])]:
+        del _plans[pkey]
+    try:
+        df.sparkSession.catalog.dropTempView(view)
+    except Exception:
+        pass  # the session is already stopped
 
 
 def invalidate(paths: str | Sequence[str] | None = None) -> None:
-    """Drop cached relations — all of them, or just the given path set."""
-    with _lock:
-        if paths is None:
-            for key in list(_relations):
-                _evict(key)
-            _by_paths.clear()
-            return
+    """Drop cached relations (with their views and prepared plans) and
+    footer schemas: all of them, or every one that reads any of ``paths``
+    (globs expanded, missing files allowed)."""
+    gone = None
+    if paths is not None:
         path_list = [paths] if isinstance(paths, str) else list(paths)
-        paths_id = tuple(fs.canonical(p) for p in path_list)
-        key = _by_paths.pop(paths_id, None)
-        if key is not None:
+        gone = {fs.canonical(p) for p in expand_globs(path_list)}
+    with _lock:
+        for key in [k for k in _relations
+                    if gone is None or any(f[0] in gone for f in k[1])]:
             _evict(key)
+        for key in [k for k in _schema_names if gone is None or k[0] in gone]:
+            del _schema_names[key]

@@ -69,8 +69,7 @@ _SMALL_QUERY_CONF = {
     # Janino compilation (~0.2-0.4s), but the generated-class cache makes
     # every repeat of that shape ~20-30% faster than interpreted execution
     # (measured at 600k rows: ~85-110ms/query compiled-warm vs ~110-150ms
-    # interpreted), and it enables the vectorized in-memory-columnar scan
-    # over the hot-relation cache.  Production query mixes repeat shapes
+    # interpreted).  Production query mixes repeat shapes
     # (same dashboards, different filter values — named-parameter binding
     # keeps the plan shape stable), so warm-shape latency is the metric.
     "spark.sql.codegen.wholeStage": "true",
@@ -96,8 +95,9 @@ def _alive(s: SparkSession | None) -> bool:
 
 
 def get_small_query_session(parent: SparkSession) -> SparkSession:
-    """A sibling ``SparkSession`` (same SparkContext, same shared relation
-    cache) tuned for low-latency small queries.
+    """A sibling ``SparkSession`` (same SparkContext) tuned for low-latency
+    small queries.  Its relations are cached apart from the parent's: the
+    relation cache and its temp views are per session.
 
     Using a separate session instead of mutating ``parent.conf`` makes the
     small-input fast path safe under concurrency: two threads can run a

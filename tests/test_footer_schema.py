@@ -243,8 +243,6 @@ class TestErrorParity:
                     _truncate(path)
             return names
 
-        # the uncached path goes straight from the pre-flight to _read
-        monkeypatch.setattr(relations, "MAX_CACHED_INPUT_BYTES", 0)
         monkeypatch.setattr(relations, "schema_names", preflight_then_damage)
         got = _outcome(lambda: aggregate_pq(p, ["d"], [["m", "sum"]]))
         assert got[0] == "err"

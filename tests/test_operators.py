@@ -1026,8 +1026,8 @@ class TestCacheContract:
     verified pairs, co-purchase edges, semdedup prune sets, PQ
     codes/codebooks) are stat-keyed STORAGE artifacts built once per
     corpus version; iterative trainers persist per-round and OWNER-RELEASE
-    before returning.  The only in-session cache left is the hot-relation
-    cache, which fills once per table and never grows per call."""
+    before returning.  Nothing in the session is persisted: the relation
+    cache holds analyzed plans only, bounded and keyed by file version."""
 
     @staticmethod
     def _n_cached(spark) -> int:

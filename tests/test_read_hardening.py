@@ -4,7 +4,7 @@ reads under concurrent ``os.replace`` (S3).
 Mirrors the reference's tests/test_duckdb_read_hardening.py:40-146 — same
 failure modes, Spark-side mechanics: the snapshot pin is a hardlink to the
 source inode (vs the reference's ``/dev/fd``), and the retry invalidates the
-hot-relation cache before re-running.
+relation cache before re-running.
 """
 
 from __future__ import annotations

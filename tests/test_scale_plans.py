@@ -27,7 +27,6 @@ class TestAggregationPlans:
             [["l_quantity", "sum", "s"]],
             data_filter=[["l_quantity", ">", 30]],
             spark=spark,
-            use_relation_cache=False,
         )
         plan = plan_of(df)
         assert "PushedFilters: [IsNotNull(l_quantity), GreaterThan(l_quantity,30" in plan
@@ -40,7 +39,6 @@ class TestAggregationPlans:
             ["l_returnflag"],
             [["l_quantity", "sum", "s"]],
             spark=spark,
-            use_relation_cache=False,
         )
         plan = plan_of(df)
         scan = next(l for l in plan.splitlines() if "FileScan" in l)
@@ -54,7 +52,6 @@ class TestAggregationPlans:
             ["l_returnflag"],
             [["l_quantity", "sum", "s"]],
             spark=spark,
-            use_relation_cache=False,
         )
         plan = plan_of(df)
         # two-phase hash agg: partial_sum on the map side
@@ -67,21 +64,22 @@ class TestAggregationPlans:
             [["l_quantity", "mean"], ["l_extendedprice", "std"]],
             data_filter=[["l_returnflag", "in", ["A", "R"]]],
             spark=spark,
-            use_relation_cache=False,
         )
         assert "EvalPython" not in plan_of(df)
 
-    def test_small_input_uses_cached_relation(self, spark, sf_dir):
-        """Small inputs resolve to the hot-relation cache: columnar
-        InMemoryTableScan, re-sliced past the single-row-group parallelism
-        cap.  (Large inputs keep the streaming scan — previous tests.)"""
+    def test_small_input_plans_file_scan(self, spark, sf_dir):
+        """Small inputs plan like large ones: a FileScan with the filter
+        pushed down, never a persisted InMemoryTableScan."""
         df = aggregate_plan(
             os.path.join(sf_dir, "lineitem.parquet"),
             ["l_returnflag"],
             [["l_quantity", "sum", "s"]],
+            data_filter=[["l_quantity", ">", 30]],
             spark=spark,
         )
-        assert "InMemoryTableScan" in plan_of(df)
+        plan = plan_of(df)
+        assert "FileScan" in plan and "InMemoryTableScan" not in plan
+        assert "PushedFilters: [IsNotNull(l_quantity), GreaterThan(l_quantity,30" in plan
 
     def test_multifile_single_query(self, spark, sf_dir):
         path = os.path.join(sf_dir, "orders.parquet")
@@ -836,7 +834,6 @@ class TestRound5PlanShapes:
             ["extra"],
             [["m", "sum", "s"]],
             spark=spark,
-            use_relation_cache=False,
         )
         plan = plan_of(df)
         scans = [l for l in plan.splitlines() if "FileScan" in l]
@@ -877,7 +874,7 @@ class TestRound5PlanShapes:
         from parquery_spark.operators.semdedup import semdedup
 
         emb = relations.get_relation(
-            spark, os.path.join(sf_dir, "embeddings.parquet"), cache=False
+            spark, os.path.join(sf_dir, "embeddings.parquet")
         )
         out = semdedup(emb, k=4, iters=1, threshold=0.4)
         plan = plan_of(out)
@@ -915,7 +912,7 @@ class TestRound5PlanShapes:
         from parquery_spark.operators.timeseries import resample_daily
 
         orders = relations.get_relation(
-            spark, os.path.join(sf_dir, "orders.parquet"), cache=False
+            spark, os.path.join(sf_dir, "orders.parquet")
         )
         dense = resample_daily(
             orders.select(
@@ -957,7 +954,7 @@ class TestRound5PlanShapes:
         from parquery_spark.operators.quantize import quantize_int8
 
         emb = relations.get_relation(
-            spark, os.path.join(sf_dir, "embeddings.parquet"), cache=False
+            spark, os.path.join(sf_dir, "embeddings.parquet")
         )
         plan = plan_of(quantize_int8(emb))
         assert "Exchange" not in plan
@@ -989,7 +986,7 @@ class TestRound5PlanShapes:
         from parquery_spark.operators.pq import adc_topk, pq_train
 
         emb = relations.get_relation(
-            spark, os.path.join(sf_dir, "embeddings.parquet"), cache=False
+            spark, os.path.join(sf_dir, "embeddings.parquet")
         ).select("vec_id", "embedding")
         codes, book = pq_train(emb, m=4, k=4, iters=1)
         qrows = emb.limit(2).collect()
