@@ -140,7 +140,8 @@ def aggregate_pq(
 
     def _execute(paths):
         spark = get_spark()
-        if is_small_input(paths):
+        small = is_small_input(paths)
+        if small:
             # Execute under the dedicated small-query session (AQE off,
             # single reduce partition) instead of mutating the shared
             # session's conf — thread-safe by construction: a concurrent
@@ -155,6 +156,7 @@ def aggregate_pq(
             aggregate=aggregate,
             standard_missing_id=standard_missing_id,
             handle_missing_file=handle_missing_file,
+            small_input=small,
         )
         if as_df:
             return df.toPandas()

@@ -199,6 +199,7 @@ def build_aggregation_plan(
     aggregate: bool = True,
     standard_missing_id: int = tool.STANDARD_MISSING_ID,
     handle_missing_file: bool = True,
+    small_input: bool | None = None,
 ) -> DataFrame:
     """Build the lazy Spark plan implementing ``aggregate_pq`` semantics.
 
@@ -206,6 +207,10 @@ def build_aggregation_plan(
     reference: parquery/aggregate.py:142-215):
     normalize → plan result schema → pre-flight footer checks →
     filter/group plan → missing-column splice.
+
+    ``small_input`` is :func:`is_small_input` of the input when the caller
+    has already measured it (``aggregate_pq`` does, to pick its session);
+    None measures it here when the plan needs it.
     """
     groupby_cols = list(groupby_cols)
     measures = tool.normalize_measure_cols(measure_cols)
@@ -290,7 +295,6 @@ def build_aggregation_plan(
     # each, measured ~90 ms/query) while spark.sql() costs one.  Every
     # input, small or large, is a lazy parquet scan with full pushdown and
     # pruning; the view's relation comes from the relation cache.
-    view = relations.get_relation_view(spark, live_paths)
     where, args = _sql_where(filters)
 
     # Small inputs: COUNT(DISTINCT c) → SIZE(COLLECT_SET(c)).  Spark plans
@@ -305,7 +309,7 @@ def build_aggregation_plan(
     if (
         aggregate
         and any(op.lower() in _COUNT_DISTINCT_OPS for _, op, _ in live_measures)
-        and is_small_input(live_paths)
+        and (is_small_input(live_paths) if small_input is None else small_input)
     ):
         sql_aggs = dict(
             _SQL_AGGS, **dict.fromkeys(
@@ -367,10 +371,10 @@ def build_aggregation_plan(
         if col not in engine_cols:
             final.append(f"{int(standard_missing_id)} AS {_qi(col)}")
 
-    sql = (
-        f"SELECT {distinct}{', '.join(final)} FROM {_qi(view)}{where}{group}"
+    select_sql = f"SELECT {distinct}{', '.join(final)} FROM "
+    return relations.relation_sql(
+        spark, live_paths, lambda view: f"{select_sql}{_qi(view)}{where}{group}", args
     )
-    return relations.cached_sql(spark, sql, args)
 
 
 #: below this total input size, per-query latency is dominated by fixed

@@ -2464,9 +2464,9 @@ def q67_csv_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquery_spark.aggregate import aggregate_plan
 
     src = os.path.join(sf_dir, "nation.parquet")
-    # cache key includes the source file's stat identity (mtime_ns, size),
-    # mirroring relations._stat_key — a regenerated nation.parquet gets a
-    # fresh CSV instead of silently serving the previous corpus's fixture
+    # cache key is the source file's (abspath, mtime_ns, size) identity —
+    # a regenerated nation.parquet gets a fresh CSV instead of silently
+    # serving the previous corpus's fixture
     st = os.stat(src)
     ident = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}"
     tag = hashlib.md5(ident.encode()).hexdigest()[:10]

@@ -17,10 +17,10 @@ relation; the stat identity is ``(canonical path, mtime_ns, size)`` per
 file.  It serves every read: ``aggregate_pq``, ``aggregate_plan`` and the
 registry's ``queries.load``.  A replaced file has a new identity, so it
 gets a fresh relation, and that read evicts every entry over an older
-version of any of its files.  An entry owns the temp view
-:func:`get_relation_view` registers for it and the prepared plans over
-that view; eviction and :func:`invalidate` drop all of them, the view from
-the owning session's catalog.
+version of any of its files.  A path that cannot be stat'ed has no
+identity, so its relation is read fresh on every call.  An entry owns the
+temp view :func:`get_relation_view` registers for it; eviction and
+:func:`invalidate` drop it from the owning session's catalog.
 
 Spark's ``CacheManager`` is never used.  A persisted columnar copy of small
 inputs was measured and removed: it scanned every column of a file that
@@ -33,14 +33,13 @@ from __future__ import annotations
 
 import functools
 import itertools
-import re
 import threading
 from collections import OrderedDict
-from typing import Sequence
+from typing import Callable, Sequence
 
 import pyarrow.parquet as papq
 from py4j.protocol import Py4JError
-from pyspark.errors import PySparkException
+from pyspark.errors import AnalysisException, PySparkException
 from pyspark.sql import DataFrame, SparkSession
 
 from parquery_spark import fs
@@ -57,7 +56,9 @@ _views: dict[tuple, str] = {}
 _view_ids = itertools.count(1)
 
 
-def _lazy_read(spark: SparkSession, path_list: Sequence[str]) -> tuple[tuple, DataFrame]:
+def _lazy_read(
+    spark: SparkSession, path_list: Sequence[str]
+) -> tuple[tuple | None, DataFrame]:
     """The cached relation over ``path_list`` in ``spark``, and its key.
 
     A miss reads the relation with :func:`_read` and evicts every entry
@@ -65,8 +66,16 @@ def _lazy_read(spark: SparkSession, path_list: Sequence[str]) -> tuple[tuple, Da
     an entry's view is reading a file that has been replaced under it;
     failing loud is right there (``pin_snapshot`` is the contract for
     reads under concurrent writers, and snapshot paths are never
-    replaced).  The LRU trim never evicts the entry being returned."""
-    key = _key(spark, path_list)
+    replaced).  The LRU trim never evicts the entry being returned.
+
+    A path no backend can stat (a remote URI without a metadata backend, a
+    remote glob passed through verbatim, a file gone since the pre-flight)
+    has no version to key on: its relation is read fresh and not cached,
+    and the key is None."""
+    try:
+        key = _key(spark, path_list)
+    except OSError:
+        return None, _read(spark, path_list)
     with _lock:
         df = _relations.get(key)
         if df is not None:
@@ -198,13 +207,9 @@ def _parse_schema_names(path: str) -> frozenset:
 
 
 def _key(spark: SparkSession, paths: Sequence[str]) -> tuple:
-    """``(session id, ((canonical path, mtime_ns, size), ...))``.  A path
-    no backend can stat (or a file gone since the pre-flight, whose read
-    then raises Spark's own error) is keyed by its name alone."""
-    try:
-        return id(spark), tuple((fs.canonical(p), *fs.stat(p)) for p in paths)
-    except OSError:
-        return id(spark), tuple((fs.canonical(p), None, None) for p in paths)
+    """``(session id, ((canonical path, mtime_ns, size), ...))``; raises
+    ``OSError`` when a path cannot be stat'ed."""
+    return id(spark), tuple((fs.canonical(p), *fs.stat(p)) for p in paths)
 
 
 #: extension → source format.  Parquet is the reference's only format
@@ -378,19 +383,53 @@ def get_relation_view(spark: SparkSession, paths: str | Sequence[str]) -> str:
 
     The view belongs to the relation's cache entry: it is registered on the
     entry's first view request and dropped with the entry.  A replaced
-    file gets a new entry, so a new view name."""
+    file gets a new entry, so a new view name.  A relation that is not
+    cached (see :func:`_lazy_read`) gets a one-off view, which the caller
+    drops; :func:`relation_sql` does."""
     path_list = _expand(paths)
     while True:
         key, df = _lazy_read(spark, path_list)
         with _lock:
-            if key not in _relations:
+            if key is not None and key not in _relations:
                 continue  # evicted by a concurrent miss: a view needs an owner
             name = _views.get(key)
             if name is None:
                 name = f"__pq_rel_{next(_view_ids)}"
                 df.createOrReplaceTempView(name)
-                _views[key] = name
+                if key is not None:
+                    _views[key] = name
             return name
+
+
+def _owned(view: str) -> bool:
+    with _lock:
+        return view in _views.values()
+
+
+def relation_sql(
+    spark: SparkSession,
+    paths: str | Sequence[str],
+    render: Callable[[str], str],
+    args: dict | None = None,
+) -> DataFrame:
+    """The analyzed ``render(view)`` SQL, through :func:`cached_sql`, where
+    ``view`` names the relation over ``paths`` (:func:`get_relation_view`).
+
+    An analyzed DataFrame no longer needs its view, so only the analysis
+    must see a live one.  A concurrent eviction can drop the view between
+    naming it and analyzing the SQL; analysis then fails with
+    ``TABLE_OR_VIEW_NOT_FOUND`` and the SQL is resolved again over a new
+    entry.  A one-off view is dropped once its SQL is analyzed."""
+    while True:
+        view = get_relation_view(spark, paths)
+        try:
+            return cached_sql(spark, render(view), args)
+        except AnalysisException as exc:
+            if exc.getCondition() != "TABLE_OR_VIEW_NOT_FOUND" or _owned(view):
+                raise
+        finally:
+            if not _owned(view):
+                spark.catalog.dropTempView(view)
 
 
 #: (session id, sql, frozen args) -> analyzed DataFrame.  A prepared-
@@ -400,7 +439,7 @@ def get_relation_view(spark: SparkSession, paths: str | Sequence[str]) -> str:
 #: the SQL text embeds the relation's temp-view name, and view names are
 #: minted fresh per (path-set, mtime, size) identity — a replaced file gets a
 #: new view name, hence a new cache key, so a stale plan can never be served.
-#: Plans over a view leave the cache with the view's entry.
+#: Names are never reused, so plans over a dropped view just age out.
 _plans: "OrderedDict[tuple, DataFrame]" = OrderedDict()
 MAX_CACHED_PLANS = 128
 
@@ -433,15 +472,11 @@ def cached_sql(spark: SparkSession, sql: str, args: dict | None = None) -> DataF
 
 
 def _evict(key: tuple) -> None:
-    """Drop one entry with its temp view and the prepared plans over that
-    view.  The caller holds ``_lock``."""
+    """Drop one entry and its temp view.  The caller holds ``_lock``."""
     df = _relations.pop(key, None)
     view = _views.pop(key, None)
     if view is None:
         return
-    over_view = re.compile(rf"\b{view}\b")
-    for pkey in [k for k in _plans if over_view.search(k[1])]:
-        del _plans[pkey]
     try:
         df.sparkSession.catalog.dropTempView(view)
     except Exception:
@@ -449,9 +484,9 @@ def _evict(key: tuple) -> None:
 
 
 def invalidate(paths: str | Sequence[str] | None = None) -> None:
-    """Drop cached relations (with their views and prepared plans) and
-    footer schemas: all of them, or every one that reads any of ``paths``
-    (globs expanded, missing files allowed)."""
+    """Drop cached relations (with their views) and footer schemas: all of
+    them, or every one that reads any of ``paths`` (globs expanded, missing
+    files allowed)."""
     gone = None
     if paths is not None:
         path_list = [paths] if isinstance(paths, str) else list(paths)

@@ -29,6 +29,23 @@ def _view_names(session) -> set[str]:
     return {r.viewName for r in session.sql("SHOW VIEWS").collect()}
 
 
+class _Unversioned:
+    """A remote backend that answers existence but no file versions, like
+    an object store without a metadata backend."""
+
+    def exists(self, path):
+        return True
+
+    def stat(self, path):
+        raise OSError(f"cannot stat {path}")
+
+    def glob(self, pattern):
+        return None
+
+    def open_input(self, path):
+        raise OSError(f"cannot open {path}")
+
+
 class TestRelationCache:
     def test_cache_hit_returns_same_plan(self, spark, tmp_path):
         p = str(tmp_path / "t.parquet")
@@ -387,22 +404,77 @@ class TestRelationLifecycle:
         relations.invalidate([p, "/missing.parquet"])
         assert relations.get_relation(small, p) is not before
 
+    def test_unversioned_path_is_read_fresh(self, spark, tmp_path, monkeypatch):
+        """A path no backend can stat has no version to key an entry on:
+        every read builds its relation afresh, so a replaced file is read
+        new, and the read leaves no entry or view behind.  The file is
+        ``tmp_path`` mounted through Hadoop ViewFs, which Spark reads, with
+        a fake backend that cannot stat it."""
+        monkeypatch.setitem(relations.fs._TEST_FILESYSTEMS, "viewfs", _Unversioned())
+        conf = spark._jsc.hadoopConfiguration()
+        mount = "fs.viewfs.mounttable.pqsunversioned.link./data"
+        conf.set(mount, "file://" + str(tmp_path))
+        try:
+            uri = "viewfs://pqsunversioned/data/t.parquet"
+            p = str(tmp_path / "t.parquet")
+            _write(p, [1], [10.0])
+            views = _view_names(spark)
+            r1 = aggregate_pq(uri, ["d"], [["m", "sum", "s"]])
+            tmp = str(tmp_path / "t.parquet.new")
+            _write(tmp, [1, 1], [90.0, 9.0])  # a new size as well as new data
+            os.replace(tmp, p)
+            r2 = aggregate_pq(uri, ["d"], [["m", "sum", "s"]])
+            assert r1.column("s").to_pylist() == [10.0]
+            assert r2.column("s").to_pylist() == [99.0]
+            assert relations.get_relation(spark, uri) is not relations.get_relation(spark, uri)
+            assert _view_names(spark) == views
+            with relations._lock:
+                assert not [k for k in relations._relations if k[1][0][0] == uri]
+        finally:
+            conf.unset(mount)
+
+    def test_view_dropped_before_analysis(self, spark, tmp_path, monkeypatch):
+        """A concurrent read can evict an entry, dropping its view, after a
+        query has named the view and before its SQL is analyzed; the query
+        then resolves again over a new entry."""
+        p = str(tmp_path / "t.parquet")
+        _write(p, [1, 1], [2.0, 3.0])
+        sqls = []
+        real = relations.cached_sql
+
+        def evict_first(session, sql, args=None):
+            if not sqls:
+                relations.invalidate(p)
+            sqls.append(sql)
+            return real(session, sql, args)
+
+        monkeypatch.setattr(relations, "cached_sql", evict_first)
+        df = aggregate_plan(p, ["d"], [["m", "sum", "s"]], spark=spark)
+        assert [r["s"] for r in df.collect()] == [5.0]
+        assert len(sqls) == 2 and sqls[0] != sqls[1]
+
     def test_concurrent_views_keep_their_owners(self, spark, tmp_path, monkeypatch):
-        """Stress: more threads than cores resolve views over more files
-        than the LRU holds.  Afterwards the LRU is within its bound, every
-        view belongs to a live entry, and the session's catalog holds
-        exactly the views of its live entries."""
-        monkeypatch.setattr(relations, "MAX_CACHED_RELATIONS", 3)
+        """Stress: more threads than cores resolve views, and plan queries
+        over them, over more files than the LRU holds, so entries are
+        evicted between a view's naming and its query's analysis.  No
+        query fails; a plan still runs once its view is gone; afterwards
+        the LRU is within its bound, every view belongs to a live entry,
+        and the session's catalog holds exactly the views of its live
+        entries."""
+        monkeypatch.setattr(relations, "MAX_CACHED_RELATIONS", 1)
         paths = []
         for i in range(6):
             paths.append(str(tmp_path / f"s{i}.parquet"))
             _write(paths[-1], [i], [float(i)])
         errors: list[Exception] = []
+        plans = {}
 
         def work(i):
             try:
                 for j in range(12):
-                    relations.get_relation_view(spark, paths[(i + j) % len(paths)])
+                    p = paths[(i + j) % len(paths)]
+                    relations.get_relation_view(spark, p)
+                    plans[p] = aggregate_plan(p, ["d"], [["m", "sum", "s"]], spark=spark)
             except Exception as e:  # pragma: no cover
                 errors.append(e)
 
@@ -417,8 +489,10 @@ class TestRelationLifecycle:
         finally:
             sys.setswitchinterval(interval)
         assert not any(t.is_alive() for t in threads) and not errors
+        relations.invalidate(paths[0])
+        assert [r["s"] for r in plans[paths[0]].collect()] == [0.0]
         with relations._lock:
-            assert len(relations._relations) <= 3
+            assert len(relations._relations) <= 1
             assert set(relations._views) <= set(relations._relations)
             mine = {v for k, v in relations._views.items() if k[0] == id(spark)}
         assert {v for v in _view_names(spark) if v.startswith("__pq_rel_")} == mine
