@@ -168,49 +168,22 @@ def _gate_scope(
     return baseline, "no-baseline"
 
 
-def _clear_artifacts() -> None:
-    """``--fresh-artifacts``: delete the stat-keyed ``/tmp/pqs_*``
-    artifacts (same sweep, lock and exclusions as plan_audit's flag) so
-    PASS 1 measures genuinely COLD per-query times — artifact builds
-    attributed to their owning queries — while passes 2-5 stay warm.
-    The published headline remains the warm min-of-5 (build-once-read-
-    many is the artifact lifecycle); the cold pass makes the build cost
-    a recorded number (VERDICT r10 #3) instead of a PLAN_AUDIT footnote.
-    Never run concurrently with another Spark workload."""
-    import fcntl
-    import glob
-    import shutil
-    import tempfile
-
-    tmp = tempfile.gettempdir()
-    lock_path = os.path.join(tmp, f"pqs_audit.{os.getuid()}.lock")
-    fd = os.open(lock_path, os.O_CREAT | os.O_WRONLY | os.O_NOFOLLOW, 0o600)
-    if os.fstat(fd).st_uid != os.getuid():
-        sys.exit(f"{lock_path} is owned by another uid; refusing")
-    lock = os.fdopen(fd, "w")
-    try:
-        fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
-    except OSError:
-        sys.exit(f"another fresh-artifacts run holds {lock_path}; "
-                 "refusing to race artifact deletion")
-    for d in glob.glob(os.path.join(tmp, "pqs_*")):
-        if "smoke" in d:  # scale-smoke FIXTURES are not artifacts
-            continue
-        if os.path.basename(d).startswith("pqs_audit."):
-            continue  # the lockfile(s) themselves
-        shutil.rmtree(d, ignore_errors=True)
-    # keep the flock held for the process lifetime
-    globals()["_fresh_lock"] = lock
-
-
 def main():
     against = None
     baseline = None
     baseline_sf = None
     fresh = "--fresh-artifacts" in sys.argv
     if fresh:
+        # PASS 1 then measures genuinely COLD per-query times, artifact
+        # builds attributed to their owning queries, while passes 2-5 stay
+        # warm: the cold pass makes the build cost a recorded number
         sys.argv.remove("--fresh-artifacts")
-        _clear_artifacts()
+        from parquery_spark import artifacts
+
+        try:
+            _fresh_lock = artifacts.clear()  # held until exit
+        except RuntimeError as exc:
+            sys.exit(str(exc))
     if "--against" in sys.argv:
         i = sys.argv.index("--against")
         against = sys.argv[i + 1]

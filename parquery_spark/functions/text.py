@@ -42,14 +42,6 @@ def token_count(text: Column | str) -> Column:
     return F.regexp_count(c, F.lit(TOKEN_RE)).cast("long")
 
 
-def whitespace_token_count(text: Column | str) -> Column:
-    """Whitespace-split token count (the cruder classic)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.size(
-        F.filter(F.split(c, r"\s+"), lambda t: t != F.lit(""))
-    ).cast("long")
-
-
 def char_count(text: Column | str) -> Column:
     c = F.col(text) if isinstance(text, str) else text
     return F.length(c)
@@ -60,12 +52,6 @@ def punct_ratio(text: Column | str) -> Column:
     c = F.col(text) if isinstance(text, str) else text
     n_punct = F.length(c) - F.length(F.regexp_replace(c, r"[!-/:-@\[-`{-~]", ""))
     return F.when(F.length(c) > 0, n_punct / F.length(c)).otherwise(F.lit(0.0))
-
-
-def uppercase_ratio(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    n_upper = F.length(c) - F.length(F.regexp_replace(c, r"[A-Z]", ""))
-    return F.when(F.length(c) > 0, n_upper / F.length(c)).otherwise(F.lit(0.0))
 
 
 def stopword_ratio(text: Column | str, stopwords: list[str] | None = None) -> Column:

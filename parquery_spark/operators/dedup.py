@@ -1139,9 +1139,9 @@ def lsh_join_indexed(
     ]
     pred = F.expr(" OR ".join(clauses)) if clauses else None
 
-    from parquery_spark.operators.util import index_relation
+    from parquery_spark import relations
 
-    index = index_relation(spark, index_path)
+    index = relations.get_relation(spark, index_path)
     if pred is not None:
         index = index.filter(pred)
     # pruning keeps buckets whole (every row of a band_key shares its

@@ -141,9 +141,9 @@ def ivf_topk(
     exact cosine ranks the survivors (verify with ``.explain``:
     ``PartitionFilters: [cell#.. IN (..)]``)."""
     probes = probe_cells(centroids, query, nprobe)
-    from parquery_spark.operators.util import index_relation
+    from parquery_spark import relations
 
-    candidates = index_relation(spark, index_path).filter(
+    candidates = relations.get_relation(spark, index_path).filter(
         F.col("cell").isin(probes)
     )
     return cosine_topk(candidates, query, k, vec_col, id_col, digits)

@@ -30,13 +30,6 @@ from parquery_spark.operators.dedup import hash64
 _HASH_SPACE = 1 << 60
 
 
-def hash_bucket(key: Column | str, buckets: int, seed: int = 0) -> Column:
-    """Deterministic bucket id in ``[0, buckets)`` from a key column —
-    the primitive under hash sampling, A/B splits, and fold assignment."""
-    c = F.col(key).cast("string") if isinstance(key, str) else key.cast("string")
-    return hash64(c, seed) % F.lit(buckets)
-
-
 def hash_sample(
     df: DataFrame,
     key_col: str,

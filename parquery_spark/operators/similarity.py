@@ -202,21 +202,6 @@ def hyperplanes(dim: int, num_planes: int = 16, seed: int = 7) -> np.ndarray:
     return rng.standard_normal((num_planes, dim))
 
 
-def lsh_bucket(vec: Column | str, planes: np.ndarray) -> Column:
-    """Sign-bit signature: bit j set iff dot(vec, plane_j) > 0.
-
-    Expression form (interpreted HOF dots) — fine for ad-hoc single rows;
-    bulk paths use :func:`lsh_bucket_table`, whose explode-shaped plane
-    sums stay inside whole-stage codegen."""
-    v = _as_double(vec)
-    expr = F.lit(0).cast("long")
-    for j, plane in enumerate(planes):
-        expr = expr + F.when(
-            dot_literal(v, plane.tolist()) > 0, F.lit(1 << j).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-    return expr
-
-
 def _bucket_from_sums(num_planes: int) -> Column:
     # one parsed expression — the former per-plane Column chain cost
     # ~0.5 s of py4j round trips for 12 planes (round 12)
@@ -502,9 +487,9 @@ def cosine_topk_indexed(
         (1 << j) for j, p in enumerate(planes) if float(np.dot(p, query)) > 0
     )
     probes = hamming_ball(qsig, num_planes, probe_hamming)
-    from parquery_spark.operators.util import index_relation
+    from parquery_spark import relations
 
-    candidates = index_relation(spark, index_path).filter(
+    candidates = relations.get_relation(spark, index_path).filter(
         F.col("bucket").isin(probes)
     )
     return cosine_topk(candidates, query, k, vec_col, id_col, digits)

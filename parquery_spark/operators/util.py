@@ -73,33 +73,3 @@ def fan_out(df: DataFrame, *key_cols: str | Column) -> DataFrame:
         return df.repartition(sc.defaultParallelism)
     return df
 
-
-#: (session id, abs path, _SUCCESS mtime_ns) → analyzed read relation.
-_INDEX_RELATIONS: dict[tuple, DataFrame] = {}
-
-
-def index_relation(spark, index_path: str) -> DataFrame:
-    """A hive-partitioned index layout as a DataFrame, through a
-    per-session relation cache keyed by the layout's ``_SUCCESS`` stat
-    identity.
-
-    Why: ``spark.read.parquet(dir)`` builds an InMemoryFileIndex — a full
-    directory-tree listing — EVERY call; for a layout with ~1000 partition
-    directories that is seconds of driver time per probe (measured 4s on
-    the band-key index), paid before pruning can help.  Reusing the
-    analyzed relation pays the listing once per index version; partition
-    pruning still applies per downstream filter.  A rewritten index (new
-    ``_SUCCESS`` mtime) gets a fresh listing, so staleness is bounded the
-    same way as the file-relation cache."""
-    import os
-
-    try:
-        st = os.stat(os.path.join(index_path, "_SUCCESS"))
-        key = (id(spark), os.path.abspath(index_path), st.st_mtime_ns)
-    except OSError:
-        return spark.read.parquet(index_path)
-    df = _INDEX_RELATIONS.get(key)
-    if df is None:
-        df = spark.read.parquet(index_path)
-        _INDEX_RELATIONS[key] = df
-    return df

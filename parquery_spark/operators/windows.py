@@ -59,16 +59,3 @@ def lag_lead(
     return df.withColumn(f"{col}_lag", F.lag(col, offset).over(w)).withColumn(
         f"{col}_lead", F.lead(col, offset).over(w)
     )
-
-
-def rank_dense_rank(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    order_by: Sequence[Column],
-) -> DataFrame:
-    w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    return (
-        df.withColumn("rank", F.rank().over(w))
-        .withColumn("dense_rank", F.dense_rank().over(w))
-        .withColumn("row_number", F.row_number().over(w))
-    )

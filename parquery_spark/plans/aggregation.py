@@ -24,7 +24,6 @@ Scale notes (design target: 1000 executors, 100 TB):
 
 from __future__ import annotations
 
-from functools import reduce
 from typing import Any, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -76,46 +75,6 @@ def agg_expr(col: str, op: str, output: str) -> Column:
     return builder(col).alias(output)
 
 
-def filter_expr(col: str, op: str, value: Any) -> Column:
-    """One filter triple → a typed Column predicate.
-
-    Unlike the reference's DuckDB engine — which interpolated raw ``str(v)``
-    into SQL, breaking string literals and inviting injection (reference:
-    parquery/aggregate_duckdb.py:371-402; SURVEY.md §4 caveat) — ``lit()``
-    binds values as typed expressions, so string/date filters are safe.
-    """
-    c = F.col(col)
-    if op == "in":
-        return c.isin(list(value))
-    if op in ("not in", "nin"):
-        return ~c.isin(list(value))
-    if op in ("=", "=="):
-        return c == F.lit(value)
-    if op == "!=":
-        return c != F.lit(value)
-    if op == ">":
-        return c > F.lit(value)
-    if op == ">=":
-        return c >= F.lit(value)
-    if op == "<":
-        return c < F.lit(value)
-    if op == "<=":
-        return c <= F.lit(value)
-    raise NotImplementedError(
-        f"Filter operator {op!r} is not supported; valid operators: "
-        f"{list(tool.VALID_FILTER_OPS)}"
-    )
-
-
-def combined_filter(data_filter: Sequence[Sequence[Any]]) -> Column | None:
-    """AND-fold filter triples (reference: parquery/aggregate_pyarrow.py:336-341)."""
-    if not data_filter:
-        return None
-    return reduce(
-        lambda a, b: a & b, (filter_expr(col, op, v) for col, op, v in data_filter)
-    )
-
-
 # op name → SQL aggregate template for the single-roundtrip SQL fast path.
 # MUST stay semantically identical to _AGG_BUILDERS (same Spark engine, same
 # expressions — only the construction surface differs).
@@ -152,9 +111,9 @@ def _sql_where(
     """Filter triples → (WHERE clause, named parameters).
 
     Values are bound as **named parameters** (``spark.sql(..., args=...)``),
-    never interpolated — the same injection-safety contract as the Column
-    path's ``lit()`` (the reference's DuckDB engine interpolated ``str(v)``
-    and was injectable; SURVEY.md §4)."""
+    never interpolated, so string and date filters are safe (the
+    reference's DuckDB engine interpolated ``str(v)`` and was injectable;
+    SURVEY.md §4)."""
     if not filters:
         return "", {}
     parts: list[str] = []

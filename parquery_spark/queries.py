@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquery_spark import fs, relations
+from parquery_spark.artifacts import artifact
 from parquery_spark.operators.reuse import self_join_reusing
 from parquery_spark.operators.util import fan_out
 from parquery_spark.plans.aggregation import build_aggregation_plan
@@ -125,208 +126,6 @@ def _probe_rows(sf_dir: str, ids) -> list[dict]:
         filters=[("vec_id", "in", [int(i) for i in ids])],
     )
     return tbl.to_pylist()
-
-
-def _artifact_relation(spark: SparkSession, path: str) -> DataFrame:
-    """A parquet dir (usually a stat-keyed artifact) as a lazy relation
-    through the per-session analyzed-plan cache (round 12): building
-    ``spark.read.parquet`` over a directory costs ~110 ms of driver work
-    per call regardless of size (listing, plus a schema-inference Spark
-    job: the driver-side footer schema of ``relations._read`` covers
-    literal files only); the plan object is immutable for a given
-    ``_SUCCESS`` version, so reuse it.  Nothing is persisted — pruning,
-    PushedFilters and AQE behave exactly as with a fresh read; a rewritten
-    artifact (new ``_SUCCESS`` stat) gets a fresh listing."""
-    from parquery_spark.operators.util import index_relation
-
-    return index_relation(spark, path)
-
-
-def _materialize_once(final_dir: str, build, marker: str = "_SUCCESS") -> str:
-    """Publish a stat-keyed fixture directory ATOMICALLY: build into a
-    private tmp root, then one ``os.rename`` to the final path.
-
-    The naive pattern — check ``final/marker``, else run a multi-file
-    Spark write INTO ``final`` — has two races that bit this repo (gate
-    and scale_smoke running concurrently saw FAILED_READ_FILE): a reader
-    can list the directory mid-write, and two builders can interleave
-    file sets.  Build-then-rename closes both: readers only ever see a
-    complete artifact (the marker is inside the renamed tree), and when
-    two builders race, the rename loser discards its (bit-equivalent —
-    content is a pure function of the stat key) copy.
-
-    ``build(tmp_dir)`` must leave ``tmp_dir/marker`` present (Spark's
-    committer writes ``_SUCCESS`` at every output root; multi-dir
-    fixtures pass the LAST-written subpath, e.g. ``"codebook/_SUCCESS"``,
-    as the marker).  A half-written ``final_dir`` from a crashed legacy
-    run (no marker) is cleared before publishing.
-    """
-    import shutil
-    import uuid
-
-    if os.path.exists(os.path.join(final_dir, marker)):
-        _check_artifact_owner(final_dir)
-        return final_dir
-    # unique per ATTEMPT (not per process): two threads of one session
-    # racing the same fixture must not share a build root
-    tmp = f"{final_dir}.build-{uuid.uuid4().hex[:12]}"
-    build(tmp)
-    if not os.path.exists(os.path.join(tmp, marker)):
-        raise OSError(
-            f"fixture builder for {final_dir!r} did not produce {marker!r}"
-        )
-    if os.path.isdir(final_dir) and not os.path.exists(
-        os.path.join(final_dir, marker)
-    ):
-        shutil.rmtree(final_dir, ignore_errors=True)
-    try:
-        os.rename(tmp, final_dir)
-    except OSError:
-        # Either we lost the publish race (the winner's artifact is
-        # equivalent — content is a pure function of the stat key) or the
-        # rename genuinely failed (EACCES, EXDEV, ...).  Distinguish by
-        # re-checking the marker: a missing artifact here would otherwise
-        # surface much later as a confusing read error far from the cause.
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(os.path.join(final_dir, marker)):
-            raise
-        _check_artifact_owner(final_dir)  # the race winner must be us-ish
-    # GC runs only on the build path (a fresh corpus version just
-    # published), never on the stat-only hot path
-    _sweep_stale_versions(final_dir)
-    _sweep_global_budget(final_dir)
-    return final_dir
-
-
-def _sweep_stale_versions(final_dir: str, max_versions: int = 8) -> None:
-    """Reap STALE corpus versions of the artifact prefix just published:
-    keep the ``max_versions`` most-recently-built sibling directories
-    (``{prefix}_{10-hex-stat-tag}``), delete the rest.  Without this the
-    stat-keyed scheme accumulates one directory per (corpus version ×
-    logic tag) forever.
-
-    Safety: (a) runs only when a NEW version was just built — a steady
-    workload never deletes anything; (b) never deletes across uids (the
-    ``_check_artifact_owner`` rule applied to deletion); (c) the default
-    keeps 8 versions because up to ~5 tags per prefix are legitimately
-    live at once (three test SFs + the ×10/×100 scale-smoke corpora),
-    and the one-workload-at-a-time rule (NOTES.md) means nothing is
-    mid-read while a build publishes."""
-    import glob as _glob
-    import re as _re
-    import shutil as _shutil
-
-    m = _re.fullmatch(r"(.*)_[0-9a-f]{10}", final_dir)
-    if not m:
-        return
-    prefix = m.group(1)
-    sibs = []
-    for d in _glob.glob(prefix + "_" + "[0-9a-f]" * 10):
-        if d == final_dir or not os.path.isdir(d):
-            continue
-        try:
-            st = os.stat(d)
-        except OSError:
-            continue
-        if hasattr(os, "getuid") and st.st_uid != os.getuid():
-            continue  # never cross-uid delete
-        sibs.append((st.st_mtime, d))
-    sibs.sort(reverse=True)
-    # the just-published artifact counts toward the budget
-    for _, d in sibs[max_versions - 1:]:
-        _shutil.rmtree(d, ignore_errors=True)
-
-
-def _sweep_global_budget(
-    final_dir: str, budget_bytes: int | None = None
-) -> None:
-    """Per-uid TOTAL-bytes budget across ALL stat-keyed artifact prefixes
-    (VERDICT r10 #7): the per-prefix keep-8 sweep bounds versions per
-    prefix, but the number of prefixes grows with the query surface, so
-    the combined /tmp footprint was unbounded globally.  On publish, if
-    this uid's artifact directories under the same temp root together
-    exceed the budget (``PARQUERY_SPARK_ARTIFACT_BUDGET_BYTES``, default
-    4 GiB), reap OLDEST-FIRST by mtime until back under it.
-
-    Same guards as the per-prefix sweep: runs only on the build path;
-    only directories matching the ``pqs_{...}_{10-hex}`` naming scheme;
-    never across uids; never the just-published artifact (every other
-    artifact is rebuildable from its stat key, so reclamation costs a
-    rebuild, never correctness)."""
-    import glob as _glob
-    import re as _re
-    import shutil as _shutil
-
-    if budget_bytes is None:
-        budget_bytes = int(
-            os.environ.get(
-                "PARQUERY_SPARK_ARTIFACT_BUDGET_BYTES", str(4 << 30)
-            )
-        )
-    root = os.path.dirname(final_dir)
-    name_pat = _re.compile(r"pqs_.+_[0-9a-f]{10}")
-    entries = []
-    for d in _glob.glob(os.path.join(root, "pqs_*")):
-        if not os.path.isdir(d) or not name_pat.fullmatch(
-            os.path.basename(d)
-        ):
-            continue
-        try:
-            st = os.stat(d)
-        except OSError:
-            continue
-        if hasattr(os, "getuid") and st.st_uid != os.getuid():
-            continue  # never cross-uid delete
-        size = 0
-        for dirpath, _dirs, files in os.walk(d, onerror=lambda e: None):
-            for f in files:
-                try:
-                    size += os.lstat(os.path.join(dirpath, f)).st_size
-                except OSError:
-                    pass
-        entries.append((st.st_mtime, size, d))
-    total = sum(s for _, s, _ in entries)
-    if total <= budget_bytes:
-        return
-    entries.sort()  # oldest first
-    for _, size, d in entries:
-        if d == final_dir:
-            continue
-        _shutil.rmtree(d, ignore_errors=True)
-        total -= size
-        if total <= budget_bytes:
-            break
-
-
-def _check_artifact_owner(final_dir: str) -> None:
-    """Stat-keyed artifacts live at predictable names under the shared
-    /tmp; on a multi-user host another local user could squat/poison the
-    path and queries would silently read foreign data.  Trust a
-    pre-existing artifact only if we own it."""
-    st = os.stat(final_dir)
-    if hasattr(os, "getuid") and st.st_uid != os.getuid():
-        raise PermissionError(
-            f"artifact directory {final_dir!r} is owned by uid "
-            f"{st.st_uid}, not this process (uid {os.getuid()}) — "
-            "refusing to read a foreign /tmp artifact; remove it or set "
-            "a private TMPDIR"
-        )
-
-
-def _stat_dir(sf_dir: str, table: str, logic_tag: str, prefix: str) -> str:
-    """Stat-keyed /tmp directory for a per-corpus-version model/index
-    artifact: the key folds the source file identity (path, mtime, size)
-    with a logic-version tag — bump the tag whenever the building logic
-    changes, or a stale artifact silently masks the new path (NOTES.md
-    hazard).  Pair with :func:`_materialize_once` for atomic publish."""
-    import hashlib
-    import tempfile
-
-    src = _path(sf_dir, table)
-    st = os.stat(src)
-    ident = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|{logic_tag}"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    return os.path.join(tempfile.gettempdir(), f"{prefix}_{tag}")
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1218,10 +1017,6 @@ def _verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     restarts, which the in-memory cache never did)."""
     from parquery_spark.operators.dedup import lsh_verified_pairs
 
-    pdir = _stat_dir(
-        sf_dir, "documents", "vpairs-15-5-2-t0.5-v1", "pqs_vpairs"
-    )
-
     def _build(t):
         lsh_verified_pairs(
             load(spark, sf_dir, "documents"),
@@ -1229,8 +1024,10 @@ def _verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             num_hashes=15, bands=5, shingle_k=2, threshold=0.5,
         ).write.mode("overwrite").parquet(t)
 
-    pdir = _materialize_once(pdir, _build)
-    return _artifact_relation(spark, pdir)
+    pdir = artifact(
+        sf_dir, "documents", "vpairs-15-5-2-t0.5-v1", "vpairs", _build,
+    )
+    return relations.get_relation(spark, pdir)
 
 
 @query("q42_jaccard_pairs", _sql_lsh_verified(15, 5, 2, 1000, 0.5))
@@ -1273,16 +1070,14 @@ def _mh_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     a filter of the full banding IS the slice's banding)."""
     from parquery_spark.operators.dedup import band_keys
 
-    bdir = _stat_dir(sf_dir, "documents", "mh-full-16-4-2-v1", "pqs_mhfull")
-
     def _build(t):
         band_keys(
             load(spark, sf_dir, "documents").select("doc_id", "text"),
             "text", "doc_id", num_hashes=16, bands=4, shingle_k=2,
         ).write.mode("overwrite").parquet(t)
 
-    bdir = _materialize_once(bdir, _build)
-    return _artifact_relation(spark, bdir)
+    bdir = artifact(sf_dir, "documents", "mh-full-16-4-2-v1", "mhfull", _build)
+    return relations.get_relation(spark, bdir)
 
 
 @query("q44_simhash", _sql_simhash(60, 5, 4, max_bucket_size=1000))
@@ -1308,17 +1103,16 @@ def q44_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load(spark, sf_dir, "documents")
-    sdir = _stat_dir(sf_dir, "documents", "sh-60-v1", "pqs_shtable")
 
     def _build(t):
         simhash_table(
             docs.select("doc_id", "text"), "text", "doc_id", 60
         ).write.mode("overwrite").parquet(t)
 
-    sdir = _materialize_once(sdir, _build)
+    sdir = artifact(sf_dir, "documents", "sh-60-v1", "shtable", _build)
     return simhash_candidates(
         docs, "text", "doc_id", bits=60, bands=5, max_hamming=4,
-        table=_artifact_relation(spark, sdir), max_bucket_size=1000,
+        table=relations.get_relation(spark, sdir), max_bucket_size=1000,
     )
 
 
@@ -1428,21 +1222,19 @@ def q47_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pure function of (corpus, planes), staged once stat-keyed; the
     # verify join then reads parquet on both alias sides (params are in
     # the logic tag, matching the injected-relation contract)
-    bdir = _stat_dir(
-        sf_dir, "embeddings", "nd-bucket-p4-s7-d64-v1", "pqs_ndidx"
-    )
-
     def _build_bucket(t):
         near_dup_bucket_table(
             load(spark, sf_dir, "embeddings"),
             num_planes=4, seed=7, dim=64,
         ).write.parquet(t)
 
-    bdir = _materialize_once(bdir, _build_bucket)
+    bdir = artifact(
+        sf_dir, "embeddings", "nd-bucket-p4-s7-d64-v1", "ndidx", _build_bucket,
+    )
     return near_dup_pairs(
         load(spark, sf_dir, "embeddings"),
         threshold=0.3, num_planes=4, seed=7, dim=64,
-        bucketed=_artifact_relation(spark, bdir),
+        bucketed=relations.get_relation(spark, bdir),
     )
 
 
@@ -1624,8 +1416,6 @@ def q50_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from parquery_spark.sources.binary import read_binary_files
 
-    fdir = _stat_dir(sf_dir, "documents", "png-pixels-v1", "pqs_pximg")
-
     def _build(t):
         os.makedirs(t, exist_ok=True)
         for doc_id in range(40):
@@ -1650,7 +1440,9 @@ def q50_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(os.path.join(t, "_DONE"), "w") as fh:
             fh.write("ok")
 
-    fdir = _materialize_once(fdir, _build, marker="_DONE")
+    fdir = artifact(
+        sf_dir, "documents", "png-pixels-v1", "pximg", _build, marker="_DONE",
+    )
     raw = read_binary_files(
         spark, fdir, path_glob="img_*.png", media_type="image"
     ).select("path", "payload", "media_type")
@@ -2455,29 +2247,22 @@ def q67_csv_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``aggregate_pq`` plan path (header+inference read, tolerant-schema
     pre-flight, relation cache).  The oracle reads the parquet twin, so
     format equivalence itself is what's gated."""
-    import hashlib
-    import tempfile
-
     import pyarrow.csv as pacsv
     import pyarrow.parquet as papq
 
     from parquery_spark.aggregate import aggregate_plan
 
-    src = os.path.join(sf_dir, "nation.parquet")
-    # cache key is the source file's (abspath, mtime_ns, size) identity —
-    # a regenerated nation.parquet gets a fresh CSV instead of silently
-    # serving the previous corpus's fixture
-    st = os.stat(src)
-    ident = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    dst = os.path.join(tempfile.gettempdir(), f"pqs_nation_{tag}.csv")
-    if not os.path.exists(dst):
-        tbl = papq.read_table(src).sort_by([("n_nationkey", "ascending")])
-        tmp = dst + ".tmp"
-        pacsv.write_csv(tbl, tmp)  # vectorized, no per-row Python
-        os.replace(tmp, dst)
+    def _build(t):
+        os.makedirs(t)
+        tbl = papq.read_table(_path(sf_dir, "nation")).sort_by(
+            [("n_nationkey", "ascending")]
+        )
+        # vectorized, no per-row Python
+        pacsv.write_csv(tbl, os.path.join(t, "nation.csv"))
+
+    d = artifact(sf_dir, "nation", "csv-v1", "nation", _build, "nation.csv")
     return aggregate_plan(
-        dst,
+        os.path.join(d, "nation.csv"),
         ["n_regionkey"],
         [["n_nationkey", "count", "n"], ["n_name", "one", "first_name"],
          ["n_nationkey", "max", "max_key"]],
@@ -3211,27 +2996,19 @@ def q82_indexed_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (PartitionFilters — pinned in ``tests/test_scale_plans.py``), and
     equi-joins on the full band key.  Same oracle as q75: indexing must
     not change a single candidate pair."""
-    import hashlib
-    import tempfile
-
     from parquery_spark.operators.dedup import (
         lsh_join_indexed,
         write_minhash_index,
     )
 
-    src = _path(sf_dir, "documents")
-    st = os.stat(src)
     # a 5% ingest batch vs a 95% corpus — the realistic ratio where the
     # index pays: the probe set covers few (band, prefix) directories, so
     # partition pruning skips most of the index
-    # trailing v2 = adaptive-prefix layout generation (writer logic tag)
-    ident = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|16|4|2|20|v2"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    idx = os.path.join(tempfile.gettempdir(), f"pqs_mh_idx_{tag}")
     docs = load(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 20 != 0)
-    idx = _materialize_once(
-        idx,
+    # trailing v2 = adaptive-prefix layout generation (writer logic tag)
+    idx = artifact(
+        sf_dir, "documents", "16|4|2|20|v2", "mh_idx",
         lambda t: write_minhash_index(
             corpus.select("doc_id", "text"), t, "text", "doc_id",
             num_hashes=16, bands=4, shingle_k=2,
@@ -3291,9 +3068,6 @@ def q83_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     Index + centroids are built once per corpus version (stat-identity
     cache, centroids stored next to the data as the index metadata —
     exactly what a production layout persists)."""
-    import hashlib
-    import tempfile
-
     import numpy as np
 
     from parquery_spark.operators import ivf
@@ -3304,11 +3078,6 @@ def q83_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 0.5 gate detects a broken quantizer with 2 steps of margin
     k_cells, nprobe, topk = 16, 8, 10
 
-    src = _path(sf_dir, "embeddings")
-    st = os.stat(src)
-    ident = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|ivf16"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    idx = os.path.join(tempfile.gettempdir(), f"pqs_ivf_idx_{tag}")
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
     def _build_ivf(t):
@@ -3316,7 +3085,10 @@ def q83_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf.write_ivf_index(emb, t, centroids)
         np.save(os.path.join(t, "centroids.npy"), centroids)
 
-    idx = _materialize_once(idx, _build_ivf, marker="centroids.npy")
+    idx = artifact(
+        sf_dir, "embeddings", "ivf16", "ivf_idx", _build_ivf,
+        marker="centroids.npy",
+    )
     centroids = np.load(os.path.join(idx, "centroids.npy"))
 
     qvecs = {
@@ -3419,25 +3191,20 @@ def _events_stream_dir(sf_dir: str) -> str:
     (copy fallback) into a temp dir keyed by the file's stat identity —
     the file stream source requires a directory, and the link pins the
     snapshot the same way the batch read hardening does."""
-    import hashlib
     import shutil
-    import tempfile
 
-    src = _path(sf_dir, "events")
-    st = os.stat(src)
-    ident = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    d = os.path.join(tempfile.gettempdir(), f"pqs_events_src_{tag}")
-    dst = os.path.join(d, "events.parquet")
-    if not os.path.exists(dst):
-        os.makedirs(d, exist_ok=True)
-        tmp = dst + ".tmp"
+    def _build(t):
+        os.makedirs(t)
+        src, dst = _path(sf_dir, "events"), os.path.join(t, "events.parquet")
         try:
-            os.link(src, tmp)
+            os.link(src, dst)
         except OSError:
-            shutil.copy2(src, tmp)
-        os.replace(tmp, dst)
-    return d
+            shutil.copy2(src, dst)
+
+    return artifact(
+        sf_dir, "events", "link-v1", "events_src", _build,
+        marker="events.parquet",
+    )
 
 
 @query(
@@ -3998,20 +3765,12 @@ def _sentinel_stream_dir(
     max (observed: a stream-stream join over type-filtered sides never
     flushed its last <delay + join-window> of outer-join state).  Pass
     one type per filtered branch so every branch's watermark advances."""
-    import hashlib
     import shutil
 
-    src_dir = _events_stream_dir(sf_dir)
-    tag = (
-        "" if types == ("sentinel",)
-        else "_" + hashlib.md5("|".join(types).encode()).hexdigest()[:6]
-    )
-    sent_dir = src_dir + "_sentinel" + tag
-    if not os.path.exists(os.path.join(sent_dir, "z2.parquet")):
-        os.makedirs(sent_dir, exist_ok=True)
+    def _build(sent_dir):
+        os.makedirs(sent_dir)
         shutil.copy2(
-            os.path.join(src_dir, "events.parquet"),
-            os.path.join(sent_dir, "events.parquet"),
+            _path(sf_dir, "events"), os.path.join(sent_dir, "events.parquet")
         )
         base = load_events(spark, sf_dir).select(
             "event_id", "ts", "user_id", "event_type", "value", "props"
@@ -4043,7 +3802,12 @@ def _sentinel_stream_dir(
                 os.path.join(sent_dir, "events.parquet")
             ).st_mtime + 10 * (i + 1)
             os.utime(os.path.join(sent_dir, name), (ts_mtime, ts_mtime))
-    return sent_dir
+
+    # one prefix per type set, so each keeps its own versions
+    return artifact(
+        sf_dir, "events", "sentinel-v1", "events_" + "_".join(types), _build,
+        marker="z2.parquet",
+    )
 
 
 @query("q97_streaming_sessionize", _SESSION_SQL)
@@ -4104,16 +3868,7 @@ def q98_partitioned_dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     opens files outside the range (asserted in
     ``tests/test_scale_plans.py``).  The oracle filters the RAW table —
     the layout must change I/O, never results."""
-    import hashlib
-    import tempfile
-
     from parquery_spark.sources.parquet import write_partitioned
-
-    src = _path(sf_dir, "events")
-    st = os.stat(src)
-    ident = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|byday"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    lay = os.path.join(tempfile.gettempdir(), f"pqs_events_byday_{tag}")
 
     def _build_byday(t):
         events = load_events(spark, sf_dir).select(
@@ -4122,11 +3877,8 @@ def q98_partitioned_dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         write_partitioned(events.repartition("day"), t, ["day"])
 
-    lay = _materialize_once(lay, _build_byday)
-
-    from parquery_spark.operators.util import index_relation
-
-    part = index_relation(spark, lay)
+    lay = artifact(sf_dir, "events", "byday", "events_byday", _build_byday)
+    part = relations.get_relation(spark, lay)
     return (
         part.filter(
             (F.col("day") >= F.lit("2024-01-10").cast("date"))
@@ -4220,8 +3972,6 @@ def q100_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     version, later calls read the |segments|-row parquet."""
     from parquery_spark.operators.dedup import hash64
 
-    cdir = _stat_dir(sf_dir, "lineitem", "cksum-v1", "pqs_cksum")
-
     def _build(t):
         li = load(spark, sf_dir, "lineitem")
         row_str = F.concat_ws(
@@ -4235,7 +3985,9 @@ def q100_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.bit_xor(hash64(row_str)).alias("checksum"),
         ).write.parquet(t)
 
-    return _artifact_relation(spark, _materialize_once(cdir, _build))
+    return relations.get_relation(spark, artifact(
+        sf_dir, "lineitem", "cksum-v1", "cksum", _build,
+    ))
 
 
 @query(
@@ -4255,15 +4007,6 @@ def q101_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join; shuffle-freeness is plan-asserted in CI).  Results are gated
     against the plain-join oracle — bucketing must change the plan, never
     the answer."""
-    import hashlib
-    import tempfile
-
-    src = _path(sf_dir, "orders")
-    st = os.stat(src)
-    ident = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|bkt8"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"pqs_bucketed_{tag}")
-
     specs = (
         ("orders", "o_orderkey", "o_orderkey, o_orderstatus"),
         ("lineitem", "l_orderkey",
@@ -4277,11 +4020,11 @@ def q101_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # drop the (external) staging entry — files stay, the data
         # publishes atomically with the root rename below.  The staging
         # name carries the per-ATTEMPT build-root suffix: two threads of
-        # one session racing this fixture (the case _materialize_once
+        # one session racing this fixture (the case atomic publish
         # handles) must not collide on CREATE/DROP of one catalog name.
         attempt = os.path.basename(t).rsplit("-", 1)[-1]
         for table, key, cols in specs:
-            stage = f"pqs_stage_{table}_{tag}_{attempt}"
+            stage = f"pqs_stage_{table}_{attempt}"
             spark.sql(f"DROP TABLE IF EXISTS {stage}")
             spark.sql(
                 f"CREATE TABLE {stage} USING parquet "
@@ -4291,9 +4034,11 @@ def q101_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             spark.sql(f"DROP TABLE {stage}")
 
-    base = _materialize_once(
-        base, _build_bucketed, marker=os.path.join("lineitem", "_SUCCESS")
+    base = artifact(
+        sf_dir, "orders", "bkt8", "bucketed", _build_bucketed,
+        marker=os.path.join("lineitem", "_SUCCESS"),
     )
+    tag = base.rsplit("_", 1)[-1]
     for table, key, cols in specs:
         name = f"pqs_b_{table}_{tag}"
         if spark.catalog.tableExists(name):
@@ -4844,15 +4589,13 @@ def _winnow_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-call memo; this is the explicit, restart-surviving form."""
     from parquery_spark.operators.dedup import winnow_fingerprints
 
-    wdir = _stat_dir(sf_dir, "documents", "winnow-k5w4-v1", "pqs_winnow")
-
     def _build(t):
         winnow_fingerprints(
             load(spark, sf_dir, "documents"), "text", "doc_id", k=5, w=4
         ).write.parquet(t)
 
-    wdir = _materialize_once(wdir, _build)
-    return _artifact_relation(spark, wdir)
+    wdir = artifact(sf_dir, "documents", "winnow-k5w4-v1", "winnow", _build)
+    return relations.get_relation(spark, wdir)
 
 
 # ===========================================================================
@@ -5310,10 +5053,6 @@ def q118_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bucket sums over the histogram (identical to counting raw token
     # instances, without re-tokenizing the corpus per consumer), top-20
     # is a TakeOrderedAndProject over the same relation
-    hdir = _stat_dir(
-        sf_dir, "documents", "shingle-hist-v1", "pqs_shhist"
-    )
-
     def _build_hist(t):
         (
             load(spark, sf_dir, "documents")
@@ -5323,8 +5062,10 @@ def q118_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.parquet(t)
         )
 
-    hdir = _materialize_once(hdir, _build_hist)
-    hist = _artifact_relation(spark, hdir)
+    hdir = artifact(
+        sf_dir, "documents", "shingle-hist-v1", "shhist", _build_hist,
+    )
+    hist = relations.get_relation(spark, hdir)
 
     def bucket(r):
         return (hash64(F.col("token"), seed=f"cms{r}") % _CMS_WIDTH).alias(
@@ -5452,10 +5193,6 @@ def q119_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # q223-span pattern): the explode + df-cap window run once per
     # corpus, and all three consumers here (sizes + both self-join
     # sides) read parquet
-    gdir = _stat_dir(
-        sf_dir, "documents", f"grams3-df{_Q119_MAX_DF}-v1", "pqs_gramidx"
-    )
-
     def _build_grams(t):
         docs = load(spark, sf_dir, "documents")
         (
@@ -5477,8 +5214,11 @@ def q119_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.parquet(t)
         )
 
-    gdir = _materialize_once(gdir, _build_grams)
-    sh = _artifact_relation(spark, gdir)
+    gdir = artifact(
+        sf_dir, "documents", f"grams3-df{_Q119_MAX_DF}-v1", "gramidx",
+        _build_grams,
+    )
+    sh = relations.get_relation(spark, gdir)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     inter = (
         self_join_reusing(
@@ -5524,17 +5264,8 @@ def q120_compaction_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-group checksum proves the rewrite moved every row exactly once.
     Both rewrite steps are stat-keyed to the source file version, so a
     regenerated corpus invalidates the fixture."""
-    import hashlib
-    import tempfile
-
     from parquery_spark.operators.dedup import hash64
     from parquery_spark.operators.maintenance import compact_files
-
-    src = _path(sf_dir, "lineitem")
-    st = os.stat(src)
-    ident = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|compact"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    root = os.path.join(tempfile.gettempdir(), f"pqs_compact_{tag}")
 
     def _build_compacted(t):
         frag = os.path.join(t, "frag")
@@ -5547,8 +5278,9 @@ def q120_compaction_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         assert stats["files_after"] < stats["files_before"], stats
 
-    root = _materialize_once(
-        root, _build_compacted, marker=os.path.join("compacted", "_SUCCESS")
+    root = artifact(
+        sf_dir, "lineitem", "compact", "compact", _build_compacted,
+        marker=os.path.join("compacted", "_SUCCESS"),
     )
     # fan_out before the checksum (round 12): the compacted layout is
     # ~8 MB files, so the scan packs into a handful of splits and the
@@ -5556,7 +5288,7 @@ def q120_compaction_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     # project to the 4 referenced columns first so the spread exchange
     # carries nothing else (guide §2.3)
     li = fan_out(
-        _artifact_relation(spark, os.path.join(root, "compacted")).select(
+        relations.get_relation(spark, os.path.join(root, "compacted")).select(
             "l_orderkey", "l_linenumber", "l_extendedprice", "l_linestatus"
         ),
         "l_orderkey",
@@ -5828,19 +5560,10 @@ def q126_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once contract for the commonest production streaming job.
     The snapshot is versioned per batch (write-new + pointer swap, the
     MERGE pattern of any snapshot-isolated table format)."""
-    import hashlib
-    import tempfile
-
     from pyspark.sql import Window
 
     from parquery_spark.operators.upsert import upsert
     from parquery_spark.streaming.events import events_stream
-
-    src = _path(sf_dir, "events")
-    st = os.stat(src)
-    ident = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|supsert"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"pqs_supsert_{tag}")
 
     def latest_per_user(df):
         w = Window.partitionBy("user_id").orderBy(
@@ -5897,7 +5620,7 @@ def q126_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             if state["cur"] is None:
                 new = latest
             else:
-                cur = _artifact_relation(spark, state["cur"])
+                cur = spark.read.parquet(state["cur"])
                 new = upsert(cur, latest, ["user_id"])
             out = os.path.join(t, f"v{batch_id}")
             new.write.mode("overwrite").parquet(out)
@@ -5920,10 +5643,12 @@ def q126_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(os.path.join(t, "FINAL"), "w") as f:
             f.write(os.path.basename(state["cur"]))
 
-    base = _materialize_once(base, _build_supsert, marker="FINAL")
+    base = artifact(
+        sf_dir, "events", "supsert", "supsert", _build_supsert, marker="FINAL"
+    )
     with open(os.path.join(base, "FINAL")) as f:
         snap_dir = os.path.join(base, f.read().strip())
-    snap = _artifact_relation(spark, snap_dir)
+    snap = relations.get_relation(spark, snap_dir)
     return snap.select(
         "user_id",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
@@ -6312,7 +6037,6 @@ def q132_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact scan is the exchange all three iterations reuse.  Lineage
     stays flat because each iteration re-reads the edge parquet, not the
     previous plan — nothing persisted in-session."""
-    adir = _stat_dir(sf_dir, "lineitem", "pagerank-edges-v2", "pqs_pr")
 
     def _build_edges(t):
         li = load(spark, sf_dir, "lineitem").select(
@@ -6339,8 +6063,10 @@ def q132_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         deg = und.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
         und.join(deg, "src").write.parquet(t)
 
-    adir = _materialize_once(adir, _build_edges)
-    ewd = _artifact_relation(spark, adir).repartition(F.col("src"))
+    adir = artifact(
+        sf_dir, "lineitem", "pagerank-edges-v2", "pr", _build_edges,
+    )
+    ewd = relations.get_relation(spark, adir).repartition(F.col("src"))
     nn = (  # scalar: node count (driver-side by design)
         ewd.select("src").distinct().count()
     )
@@ -6481,17 +6207,10 @@ def q135_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORIGINAL table — the layout must change the I/O, never the answer.
     The narrowing of per-file min/max spans is asserted quantitatively in
     tests/test_pipeline_ops.py::TestZOrder."""
-    import hashlib
-    import tempfile
-
     from parquery_spark.operators.maintenance import write_zordered
 
-    src = _path(sf_dir, "lineitem")
-    st = os.stat(src)
-    ident = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|zorder"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    zdir = _materialize_once(
-        os.path.join(tempfile.gettempdir(), f"pqs_zorder_{tag}"),
+    zdir = artifact(
+        sf_dir, "lineitem", "zorder", "zorder",
         lambda t: write_zordered(
             load(spark, sf_dir, "lineitem"),
             t,
@@ -6499,7 +6218,7 @@ def q135_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_files=8,
         ),
     )
-    li = _artifact_relation(spark, zdir)
+    li = relations.get_relation(spark, zdir)
     return li.where(
         F.col("l_partkey").between(100, 300)
         & F.col("l_suppkey").between(10, 40)
@@ -6694,15 +6413,6 @@ def q138_schema_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     reader (q52) applied across writes.  Both generations are materialized
     parquet fixtures (stat-keyed), so the union reads real files with
     genuinely different physical schemas."""
-    import hashlib
-    import tempfile
-
-    src = _path(sf_dir, "orders")
-    st = os.stat(src)
-    ident = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|evo"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"pqs_evo_{tag}")
-
     def _build_generations(t):
         orders = load(spark, sf_dir, "orders")
         orders.where(F.col("o_orderkey") % 2 == 0).select(
@@ -6716,11 +6426,12 @@ def q138_schema_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("channel"),
         ).write.mode("overwrite").parquet(os.path.join(t, "v2"))
 
-    base = _materialize_once(
-        base, _build_generations, marker=os.path.join("v2", "_SUCCESS")
+    base = artifact(
+        sf_dir, "orders", "evo", "evo", _build_generations,
+        marker=os.path.join("v2", "_SUCCESS"),
     )
-    v1 = _artifact_relation(spark, os.path.join(base, "v1"))
-    v2 = _artifact_relation(spark, os.path.join(base, "v2"))
+    v1 = relations.get_relation(spark, os.path.join(base, "v1"))
+    v2 = relations.get_relation(spark, os.path.join(base, "v2"))
     unioned = v1.unionByName(v2, allowMissingColumns=True)
     return unioned.groupBy(
         F.coalesce(F.col("channel"), F.lit("<pre-schema>")).alias("channel")
@@ -7973,8 +7684,6 @@ def q158_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once as a stat-keyed storage artifact (the q132 pagerank-edges
     # pattern; round-9 honesty note: the former warm numbers here were
     # reading triangle_stats' leaked internal persists across calls)
-    edir = _stat_dir(sf_dir, "lineitem", "tri-edges-v1", "pqs_triedges")
-
     def _build_edges(t):
         li = load(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey"
@@ -7993,7 +7702,9 @@ def q158_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.parquet(t)
         )
 
-    edir = _materialize_once(edir, _build_edges)
+    edir = artifact(
+        sf_dir, "lineitem", "tri-edges-v1", "triedges", _build_edges,
+    )
     from parquery_spark.operators.graph import triangle_stats
 
     # round 12 note: deriving the edge count from parquet footers and
@@ -8001,7 +7712,7 @@ def q158_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured SLOWER (2.27 -> 2.73 s min-of-5): the count job doubles as
     # the cheap materialization of the persisted edge relation, which the
     # summary job's branches otherwise race to build.  Kept as-is.
-    return triangle_stats(_artifact_relation(spark, edir))
+    return triangle_stats(relations.get_relation(spark, edir))
 
 
 @query(
@@ -8518,21 +8229,7 @@ def q167_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     next to the working set (the q82/q83 index-amortization pattern):
     train once, prune per batch; a regenerated corpus invalidates the
     artifact and retrains."""
-    import hashlib
-    import tempfile
-
     from parquery_spark.operators.semdedup import kmeans_assign, semdedup
-
-    src = _path(sf_dir, "embeddings")
-    st = os.stat(src)
-    ident = (
-        f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}"
-        "|kmeans4-vec-tc64"  # logic-version tag: vectorized kernel +
-        # target_cell-derived k (round 7) — a stale kmeans3 artifact
-        # would silently mask the new training path
-    )
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    adir = os.path.join(tempfile.gettempdir(), f"pqs_semdedup_{tag}")
 
     emb = load(spark, sf_dir, "embeddings")
 
@@ -8549,8 +8246,13 @@ def q167_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         trained.write.mode("overwrite").parquet(t)
         trained.unpersist()  # artifact now lives on disk
 
-    adir = _materialize_once(adir, _build_assign)
-    assign = _artifact_relation(spark, adir)
+    # logic-version tag: vectorized kernel + target_cell-derived k
+    # (round 7) — a stale kmeans3 artifact would silently mask the new
+    # training path
+    adir = artifact(
+        sf_dir, "embeddings", "kmeans4-vec-tc64", "semdedup", _build_assign
+    )
+    assign = relations.get_relation(spark, adir)
 
     # the prune set is ALSO corpus-pure (embeddings + pinned params), so
     # it is staged the same way: semdedup materializes it in-session to
@@ -8558,10 +8260,6 @@ def q167_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # artifact and RELEASE the in-session copy — repeat calls read
     # parquet and the CacheManager stays flat (the former shape returned
     # semdedup's persisted relation, leaking one cache per call)
-    pdir = _stat_dir(
-        sf_dir, "embeddings", "semdedup-prune-t04-tc64-v1", "pqs_sdprune"
-    )
-
     def _build_prune(t):
         pruned = semdedup(
             emb, id_col="vec_id", vec_col="embedding", threshold=0.4,
@@ -8572,8 +8270,11 @@ def q167_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.parquet(t)
         pruned.unpersist()
 
-    pdir = _materialize_once(pdir, _build_prune)
-    return _artifact_relation(spark, pdir)
+    pdir = artifact(
+        sf_dir, "embeddings", "semdedup-prune-t04-tc64-v1", "sdprune",
+        _build_prune,
+    )
+    return relations.get_relation(spark, pdir)
 
 
 @query(
@@ -8833,17 +8534,6 @@ def q171_dynamic_partition_overwrite(
     values, patched days the new ones, matching the oracle's CASE
     twin.  Repartitioned on the partition column before the write so
     each day lands as one file, not (tasks x days) fragments."""
-    import hashlib
-
-    import tempfile
-
-    src_stat = os.stat(_path(sf_dir, "events"))
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{src_stat.st_mtime_ns}|{src_stat.st_size}"
-        "|cents-v2".encode()
-    ).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"pqs_dpo_{tag}")
-
     events = load_events(spark, sf_dir)
     day = F.date_trunc("day", F.col("ts").cast("timestamp")).cast("date")
     daily = events.groupBy(
@@ -8892,8 +8582,10 @@ def q171_dynamic_partition_overwrite(
         )
         open(os.path.join(t, "_done"), "w").close()
 
-    base = _materialize_once(base, _build_dpo, marker="_done")
-    out = _artifact_relation(spark, os.path.join(base, "daily"))
+    base = artifact(
+        sf_dir, "events", "cents-v2", "dpo", _build_dpo, marker="_done"
+    )
+    out = relations.get_relation(spark, os.path.join(base, "daily"))
     return out.select(
         F.unix_micros(F.col("day").cast("timestamp")).alias("day_us"),
         "event_type",
@@ -9812,19 +9504,11 @@ def q185_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the capped (cust, item) basket relation IS the co-purchase index
     # this query probes — a pure function of (orders, lineitem), staged
-    # once as a stat-keyed storage artifact (the orders stat is folded
-    # into the logic tag since _stat_dir keys on one table); the join +
-    # distinct + basket-cap window run once per corpus version and all
-    # three consumers (popularity count + both self-join sides) read
+    # once as a stat-keyed storage artifact keyed on both tables; the
+    # join + distinct + basket-cap window run once per corpus version and
+    # all three consumers (popularity count + both self-join sides) read
     # parquet.  No persist (the former pre-renamed a/b select() sides
     # defeated reuse entirely and leaked a cache to compensate).
-    ost = os.stat(_path(sf_dir, "orders"))
-    bdir = _stat_dir(
-        sf_dir, "lineitem",
-        f"basket-b{_Q185_MAX_BASKET}-o{ost.st_mtime_ns}-{ost.st_size}-v1",
-        "pqs_basket",
-    )
-
     def _build_baskets(t):
         orders = load(spark, sf_dir, "orders")
         li = load(spark, sf_dir, "lineitem")
@@ -9844,14 +9528,17 @@ def q185_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.parquet(t)
         )
 
-    bdir = _materialize_once(bdir, _build_baskets)
+    bdir = artifact(
+        sf_dir, ["lineitem", "orders"], f"basket-b{_Q185_MAX_BASKET}-v1",
+        "basket", _build_baskets,
+    )
     from parquery_spark.operators.util import fan_out
 
     # fan_out on the self-join key (round 12): the basket artifact reads
     # as ~3 byte-packed splits, capping the 13M-row pair generation at 3
     # tasks; cust-keyed spread lets the self-join and its partial
     # aggregation use the whole machine (q128's measured fix)
-    bi = fan_out(_artifact_relation(spark, bdir), "cust")
+    bi = fan_out(relations.get_relation(spark, bdir), "cust")
     cnt = bi.groupBy("item").agg(F.count(F.lit(1)).alias("c"))
     # the pair key is PACKED into one int64 before the exchange (round
     # 12, guide §2.3 "narrower types"): the pair relation is ~13M rows
@@ -10194,8 +9881,6 @@ def q188_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # prefix-sum passes' driver round-trips (boundaries + per-bucket
     # totals, twice) re-read a 4-column parquet instead of re-running
     # token_count over the text column each time
-    sdir = _stat_dir(sf_dir, "documents", "docstats-v1", "pqs_docstats")
-
     def _build_stats(t):
         load(spark, sf_dir, "documents").select(
             "doc_id",
@@ -10204,8 +9889,10 @@ def q188_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_chars",
         ).write.parquet(t)
 
-    sdir = _materialize_once(sdir, _build_stats)
-    docs = _artifact_relation(spark, sdir)
+    sdir = artifact(
+        sf_dir, "documents", "docstats-v1", "docstats", _build_stats,
+    )
+    docs = relations.get_relation(spark, sdir)
     # cardinality from the artifact's footers, not a count() job (r12)
     n = _footer_rows(sdir)
     SHIFT = F.lit(4294967296)
@@ -10282,8 +9969,6 @@ def q189_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # query exists to analyze — corpus-pure, staged once stat-keyed; the
     # prefix-sum passes and the normalizer then read a two-column
     # parquet instead of re-tokenizing the corpus per driver round-trip
-    vdir = _stat_dir(sf_dir, "documents", "vocab-v1", "pqs_vocab")
-
     def _build_vocab(t):
         (
             load(spark, sf_dir, "documents")
@@ -10293,8 +9978,8 @@ def q189_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.parquet(t)
         )
 
-    vdir = _materialize_once(vdir, _build_vocab)
-    vocab = _artifact_relation(spark, vdir)
+    vdir = artifact(sf_dir, "documents", "vocab-v1", "vocab", _build_vocab)
+    vocab = relations.get_relation(spark, vdir)
     total = vocab.agg(F.sum("c").alias("total"))
     # rank key: descending count, ascending term — encode as a single
     # orderable string key so the range partitioner sorts once
@@ -10417,15 +10102,6 @@ def q191_runtime_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     analog); the oracle recomputes from the raw log.  The
     stored-boolean-flag trap this guards against is pinned in
     tests/test_scale_plans.py::TestRuntimeOptimizations."""
-    import hashlib
-    import tempfile
-
-    src_stat = os.stat(_path(sf_dir, "events"))
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{src_stat.st_mtime_ns}|{src_stat.st_size}"
-        .encode()
-    ).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"pqs_dppq_{tag}")
     events = load_events(spark, sf_dir)
 
     def _build_star(t):
@@ -10442,9 +10118,11 @@ def q191_runtime_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).distinct().write.mode("overwrite").parquet(os.path.join(t, "dim"))
         open(os.path.join(t, "_done"), "w").close()
 
-    base = _materialize_once(base, _build_star, marker="_done")
-    fact = _artifact_relation(spark, os.path.join(base, "fact"))
-    dim = _artifact_relation(spark, os.path.join(base, "dim")).where(
+    base = artifact(
+        sf_dir, "events", "star-v1", "dppq", _build_star, marker="_done"
+    )
+    fact = relations.get_relation(spark, os.path.join(base, "fact"))
+    dim = relations.get_relation(spark, os.path.join(base, "dim")).where(
         F.dayofmonth("d") <= 5
     )
     j = fact.join(dim, F.col("day") == F.col("d"))
@@ -11093,15 +10771,7 @@ def q200_glob_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ghost_dim`` → -1, ``ghost_m`` → 0.0.  Fixture generations are
     written via Spark and re-laid as flat files so the glob genuinely
     selects among siblings of one directory."""
-    import hashlib
     import shutil
-    import tempfile
-
-    src = _path(sf_dir, "orders")
-    st = os.stat(src)
-    ident = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|globdrift"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"pqs_glob_{tag}")
 
     def _build_gens(t):
         orders = load(spark, sf_dir, "orders")
@@ -11137,7 +10807,9 @@ def q200_glob_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(gen_dir)
         open(os.path.join(t, "_done"), "w").close()
 
-    base = _materialize_once(base, _build_gens, marker="_done")
+    base = artifact(
+        sf_dir, "orders", "globdrift", "glob", _build_gens, marker="_done"
+    )
 
     df = build_aggregation_plan(
         spark,
@@ -11981,21 +11653,9 @@ def q211_pq_adc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     6); re-ranked recall@10 vs exact top-10 gates as a boolean >= 0.5
     (honest bar: near-uniform synthetic embeddings are the PQ worst
     case; measured 0.6-1.0 across SFs)."""
-    import hashlib
-    import tempfile
-
     from parquery_spark.operators.pq import adc_topk, pq_train
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    src = _path(sf_dir, "embeddings")
-    st = os.stat(src)
-    # v2 logic tag: vectorized Lloyd kernel (round 7) — force re-encode so
-    # the gate exercises the new training path, not a stale artifact
-    ident = (
-        f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|pq_m8k16i2v2"
-    )
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    adir = os.path.join(tempfile.gettempdir(), f"pqs_pq_model_{tag}")
 
     def _build_pq(t):
         codes, codebook = pq_train(emb, m=8, k=16, iters=2)
@@ -12006,16 +11666,19 @@ def q211_pq_adc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         codes.unpersist()
         codebook.unpersist()
 
-    adir = _materialize_once(
-        adir, _build_pq, marker=os.path.join("codebook", "_SUCCESS")
+    # v2 logic tag: vectorized Lloyd kernel (round 7) — force re-encode so
+    # the gate exercises the new training path, not a stale artifact
+    adir = artifact(
+        sf_dir, "embeddings", "pq_m8k16i2v2", "pq_model", _build_pq,
+        marker=os.path.join("codebook", "_SUCCESS"),
     )
-    codes = _artifact_relation(spark, os.path.join(adir, "codes"))
-    codebook = _artifact_relation(spark, os.path.join(adir, "codebook"))
+    codes = relations.get_relation(spark, os.path.join(adir, "codes"))
+    codebook = relations.get_relation(spark, os.path.join(adir, "codebook"))
 
     # row count from the parquet footer (round 12): the corpus relation
     # is the unfiltered single-file scan, so its cardinality is driver
     # metadata, not a Spark job
-    n = _footer_rows(src)
+    n = _footer_rows(_path(sf_dir, "embeddings"))
     shortlist = max(50, n // 20)
     qids = [0, 1, 2, 3]
     qrows = _probe_rows(sf_dir, qids)
@@ -12330,7 +11993,6 @@ def _word_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     ledger priced at ~1 s/query.  Staged once per corpus version, the
     consumers read a |sources|x|vocab|-row parquet instead; same
     explicit, labeled sharing as q158's edge artifact, no persist."""
-    hdir = _stat_dir(sf_dir, "documents", "wordhist-v1", "pqs_wordhist")
 
     def _build(t):
         from parquery_spark.operators.dedup import shingle_tokens
@@ -12341,7 +12003,9 @@ def _word_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("c")
         ).write.parquet(t)
 
-    return _artifact_relation(spark, _materialize_once(hdir, _build))
+    return relations.get_relation(spark, artifact(
+        sf_dir, "documents", "wordhist-v1", "wordhist", _build,
+    ))
 
 
 @query(
@@ -13037,8 +12701,8 @@ def q221_kmeans_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q222_binary_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw-file multimodal ingest end to end: a directory of real media
-    files (stat-keyed fixture, published atomically via
-    :func:`_materialize_once` — 60 files whose bytes derive from the
+    files (a stat-keyed :func:`~parquery_spark.artifacts.artifact`,
+    published atomically — 60 files whose bytes derive from the
     ``documents`` corpus, extensions cycling png/jpg/wav/mp4) is ingested
     with :func:`parquery_spark.sources.binary.read_binary_files`
     (distributed ``binaryFile`` listing+read, extension → media_type),
@@ -13060,7 +12724,6 @@ def q222_binary_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquery_spark.sources.binary import read_binary_files
 
     src = _path(sf_dir, "documents")
-    fdir = _stat_dir(sf_dir, "documents", "media60-codec-v2", "pqs_media")
 
     def _build(t):
         import pyarrow.parquet as papq
@@ -13093,7 +12756,10 @@ def q222_binary_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(os.path.join(t, "_DONE"), "w") as fh:
             fh.write("ok")
 
-    fdir = _materialize_once(fdir, _build, marker="_DONE")
+    fdir = artifact(
+        sf_dir, "documents", "media60-codec-v2", "media", _build,
+        marker="_DONE",
+    )
     # glob pinned to the 3-char media extensions: never matches the
     # _DONE marker or any foreign staging file
     raw = read_binary_files(
@@ -13132,16 +12798,6 @@ def _substr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     join in the family per gate run)."""
     from parquery_spark.operators.dedup import substring_spans
 
-    sdir = _stat_dir(
-        sf_dir, "documents",
-        # v2: the artifact builds with gram_key="hash" — the petabyte
-        # shuffle form (two xxhash64 longs per row instead of the
-        # ~50-byte gram string; measured −29% shuffle bytes at ×100 in
-        # SCALING.md).  q225 gates its exact output equality against the
-        # raw-string oracle, so the cheap form is also the proven form.
-        f"substr-L{_SUBSTR_L}-c{_SUBSTR_CAP}-v2", "pqs_substr",
-    )
-
     def _build(t):
         substring_spans(
             load(spark, sf_dir, "documents"), "text", "doc_id",
@@ -13149,8 +12805,16 @@ def _substr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             gram_key="hash",
         ).write.mode("overwrite").parquet(t)
 
-    sdir = _materialize_once(sdir, _build)
-    return _artifact_relation(spark, sdir)
+    # v2: the artifact builds with gram_key="hash" — the petabyte
+    # shuffle form (two xxhash64 longs per row instead of the ~50-byte
+    # gram string; measured −29% shuffle bytes at ×100 in SCALING.md).
+    # q225 gates its exact output equality against the raw-string
+    # oracle, so the cheap form is also the proven form.
+    sdir = artifact(
+        sf_dir, "documents", f"substr-L{_SUBSTR_L}-c{_SUBSTR_CAP}-v2",
+        "substr", _build,
+    )
+    return relations.get_relation(spark, sdir)
 
 # shared CTE chain for the exact-substring family (q223/q224): tokenize →
 # positional grams → stop-gram cap → gram self-join → diagonal islands.
@@ -13398,7 +13062,6 @@ def _docs_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     verdicts equal the batch bucket-min oracle (streaming/docs.py).
     ``feed_p1``/``feed_p2`` split the same files at the tertile-2/3
     boundary for the 2-phase drain→compact→drain lifecycle (v2)."""
-    d = _stat_dir(sf_dir, "documents", "docstream-3b-v2", "pqs_docstream")
 
     def _build(t):
         import glob as _glob
@@ -13424,7 +13087,10 @@ def _docs_stream_dir(spark: SparkSession, sf_dir: str) -> str:
                 # FileStreamSource batches in mtime order: pin it
                 os.utime(dst, (1_000_000 + i, 1_000_000 + i))
 
-    d = _materialize_once(d, _build, marker="t3/_SUCCESS")
+    d = artifact(
+        sf_dir, "documents", "docstream-3b-v2", "docstream", _build,
+        marker="t3/_SUCCESS",
+    )
     return d
 
 
@@ -13510,8 +13176,6 @@ def q227_streaming_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # compaction: fold the drained increment's bucket minima into the
     # persistent index (stat-keyed: built once per corpus version)
-    idx_root = _stat_dir(sf_dir, "documents", "mhidx227-v1", "pqs_mhidx227")
-
     def _build_idx(t):
         os.makedirs(t, exist_ok=True)
         docs_p1 = spark.read.schema(
@@ -13522,10 +13186,11 @@ def q227_streaming_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             num_hashes=16, bands=4, shingle_k=2,
         )
 
-    idx_root = _materialize_once(
-        idx_root, _build_idx, marker=os.path.join("index", "_SUCCESS")
+    idx_root = artifact(
+        sf_dir, "documents", "mhidx227-v1", "mhidx227", _build_idx,
+        marker=os.path.join("index", "_SUCCESS"),
     )
-    index_df = _artifact_relation(spark, os.path.join(idx_root, "index"))
+    index_df = relations.get_relation(spark, os.path.join(idx_root, "index"))
     # phase 2: tertile 3 under a FRESH checkpoint (state evicted) —
     # prior-corpus minima come only from the compacted index
     stream2 = minhash_dedup_stream(
@@ -13669,12 +13334,11 @@ def q229_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     session's UTC tz, and the gate would catch any drift as a shifted
     epoch.)  Reference is parquet-only (SURVEY §2.1); format breadth is
     an extension."""
-    d = _stat_dir(sf_dir, "orders", "orc-v1", "pqs_orders_orc")
 
     def _build(t):
         load(spark, sf_dir, "orders").write.mode("overwrite").orc(t)
 
-    d = _materialize_once(d, _build)
+    d = artifact(sf_dir, "orders", "orc-v1", "orders_orc", _build)
     return _orders_rollup(spark.read.orc(d))
 
 
@@ -13701,12 +13365,11 @@ def q230_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the text round trip (double formatting, timestamp parsing, quoting)
     is what's gated.  JSON is the lingua franca of event feeds; parquet
     -only reference, extension per SURVEY §2.4."""
-    d = _stat_dir(sf_dir, "orders", "jsonl-v1", "pqs_orders_jsonl")
 
     def _build(t):
         load(spark, sf_dir, "orders").write.mode("overwrite").json(t)
 
-    d = _materialize_once(d, _build)
+    d = artifact(sf_dir, "orders", "jsonl-v1", "orders_jsonl", _build)
     schema = (
         "o_orderkey long, o_custkey long, o_orderstatus string,"
         " o_totalprice double, o_orderdate timestamp,"
@@ -13952,8 +13615,6 @@ def q232_audio_pcm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from parquery_spark.sources.binary import read_binary_files
 
-    fdir = _stat_dir(sf_dir, "documents", "wav-pcm-v1", "pqs_pcmaud")
-
     def _build(t):
         os.makedirs(t, exist_ok=True)
         for doc_id in range(40):
@@ -13972,7 +13633,9 @@ def q232_audio_pcm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(os.path.join(t, "_DONE"), "w") as fh:
             fh.write("ok")
 
-    fdir = _materialize_once(fdir, _build, marker="_DONE")
+    fdir = artifact(
+        sf_dir, "documents", "wav-pcm-v1", "pcmaud", _build, marker="_DONE",
+    )
     raw = read_binary_files(
         spark, fdir, path_glob="aud_*.wav", media_type="audio"
     ).select("path", "payload", "media_type")
@@ -14073,8 +13736,6 @@ def q233_video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from parquery_spark.sources.binary import read_binary_files
 
-    fdir = _stat_dir(sf_dir, "documents", "avi-rgb-v1", "pqs_avivid")
-
     def _build(t):
         os.makedirs(t, exist_ok=True)
         for doc_id in range(24):
@@ -14099,7 +13760,9 @@ def q233_video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(os.path.join(t, "_DONE"), "w") as fh:
             fh.write("ok")
 
-    fdir = _materialize_once(fdir, _build, marker="_DONE")
+    fdir = artifact(
+        sf_dir, "documents", "avi-rgb-v1", "avivid", _build, marker="_DONE",
+    )
     raw = read_binary_files(
         spark, fdir, path_glob="vid_*.avi", media_type="video"
     ).select("path", "payload", "media_type")
@@ -14187,8 +13850,6 @@ def q234_jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from parquery_spark.sources.binary import read_binary_files
 
-    fdir = _stat_dir(sf_dir, "documents", "jpeg-gray-v1", "pqs_jpeggray")
-
     def _build(t):
         os.makedirs(t, exist_ok=True)
         for doc_id in range(30):
@@ -14212,7 +13873,10 @@ def q234_jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(os.path.join(t, "_DONE"), "w") as fh:
             fh.write("ok")
 
-    fdir = _materialize_once(fdir, _build, marker="_DONE")
+    fdir = artifact(
+        sf_dir, "documents", "jpeg-gray-v1", "jpeggray", _build,
+        marker="_DONE",
+    )
     raw = read_binary_files(
         spark, fdir, path_glob="jpg_*.jpg", media_type="image"
     ).select("path", "payload", "media_type")

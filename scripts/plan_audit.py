@@ -16,14 +16,14 @@ this is the initial plan, which is the upper bound AQE can only improve.
 
 BUILD-PHASE capture (round 8): everything a query function EXECUTES
 during construction — k-means/PQ/IVF training, index/artifact writes
-behind ``_materialize_once``, relation-cache fills — used to be
+behind ``artifacts.artifact``, relation-cache fills — used to be
 invisible to the audit because it runs before the returned plan exists.
 Each query now also snapshots the session's SQLAppStatusStore execution
 list around the call and aggregates the same shape counters over every
 execution the call triggered (``b_execs``/``b_shuffles``/``b_py``/
 ``b_cart`` columns).  Artifacts are built once per corpus version, so
 build columns show the cost at the FIRST query that touches an artifact;
-pass ``--fresh-artifacts`` to clear ``/tmp/pqs_*`` first and attribute
+pass ``--fresh-artifacts`` to clear the artifacts first and attribute
 every build to its owner (do not run concurrently with any other
 workload — one Spark workload at a time).
 """
@@ -370,42 +370,16 @@ if __name__ == "__main__":
     argv = list(sys.argv[1:])
     if "--fresh-artifacts" in argv:
         # attribute every artifact build to its owning query: clear the
-        # stat-keyed /tmp artifacts so each is rebuilt during THIS audit.
+        # stat-keyed artifacts so each is rebuilt during THIS audit.
         # Never run concurrently with another Spark workload (they would
         # race the rebuilds — the one-workload-at-a-time rule).
-        import fcntl
-        import glob
-        import shutil
+        from parquery_spark import artifacts
 
         argv.remove("--fresh-artifacts")
-        # exclusive lockfile: a concurrent gate/bench/session mid-read or
-        # mid-publish of an artifact would otherwise see its directory
-        # vanish (the one-workload-at-a-time rule, now enforced instead
-        # of commented).  Fail fast rather than silently racing.
-        # per-uid lock path + O_NOFOLLOW|verify-owner: a world-shared
-        # fixed /tmp name is a squatting/symlink surface (another local
-        # user pre-creates it and either owns the lock or redirects the
-        # open) — same hardening class as _check_artifact_owner
-        _lock_path = f"/tmp/pqs_audit.{os.getuid()}.lock"
-        _fd = os.open(
-            _lock_path, os.O_CREAT | os.O_WRONLY | os.O_NOFOLLOW, 0o600
-        )
-        if os.fstat(_fd).st_uid != os.getuid():
-            sys.exit(f"{_lock_path} is owned by another uid; refusing")
-        _lock = os.fdopen(_fd, "w")
         try:
-            fcntl.flock(_lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
-        except OSError:
-            sys.exit(
-                "another plan_audit --fresh-artifacts holds "
-                f"{_lock_path}; refusing to race artifact deletion"
-            )
-        for d in glob.glob("/tmp/pqs_*"):
-            if "smoke" in d:  # scale-smoke FIXTURES are not artifacts —
-                continue  # rebuilding those costs minutes of table writes
-            if os.path.basename(d).startswith("pqs_audit."):
-                continue  # the lockfile(s) themselves
-            shutil.rmtree(d, ignore_errors=True)
+            _lock = artifacts.clear()  # held until exit
+        except RuntimeError as exc:
+            sys.exit(str(exc))
     sf = argv[0] if argv else "/root/testdata/sf0.01"
     # an unrecognized flag (e.g. --help) or missing dir must NOT run the
     # audit and overwrite PLAN_AUDIT.md with 200 error rows (happened

@@ -138,7 +138,7 @@ def build_substr(factor: int, out_dir: str) -> str:
         copies.append(pa.table({"doc_id": ids, "text": txt}))
     # write-to-tmp + rename: a crash mid-write must not leave a
     # truncated file the exists-check above would then trust forever
-    # (the same publish race _materialize_once closes for /tmp fixtures)
+    # (the same publish race artifacts.artifact closes for temp-dir artifacts)
     tmp = f"{dst}.build-{uuid.uuid4().hex[:12]}"
     pq.write_table(
         pa.concat_tables(copies), tmp, compression="zstd",

@@ -178,7 +178,7 @@ class TestArtifactGC:
         return d
 
     def test_sweep_keeps_newest_reaps_rest(self, tmp_path):
-        from parquery_spark.queries import _sweep_stale_versions
+        from parquery_spark.artifacts import _sweep_stale_versions
 
         old = [self._mk(tmp_path, f"{i:010x}", 1000.0 + i) for i in range(4)]
         cur = self._mk(tmp_path, "f" * 10, 2000.0)
@@ -189,7 +189,7 @@ class TestArtifactGC:
         assert not any(os.path.exists(d) for d in old[:3])
 
     def test_sweep_ignores_non_artifact_names(self, tmp_path):
-        from parquery_spark.queries import _sweep_stale_versions
+        from parquery_spark.artifacts import _sweep_stale_versions
 
         cur = self._mk(tmp_path, "f" * 10, 2000.0)
         bystander = os.path.join(str(tmp_path), "pqs_gcdemo_notahexx")
@@ -203,7 +203,7 @@ class TestArtifactGC:
     def test_sweep_never_deletes_foreign_uid(self, tmp_path, monkeypatch):
         import types
 
-        from parquery_spark import queries as q
+        from parquery_spark import artifacts as q
 
         foreign = self._mk(tmp_path, "0" * 10, 1000.0)
         cur = self._mk(tmp_path, "f" * 10, 2000.0)
@@ -227,7 +227,7 @@ class TestArtifactGC:
         three prefixes staged over budget — reclamation is oldest-first
         regardless of prefix, stops once under budget, never touches the
         just-published artifact."""
-        from parquery_spark.queries import _sweep_global_budget
+        from parquery_spark.artifacts import _sweep_global_budget
 
         def mk(prefix, tag, mtime, nbytes):
             d = os.path.join(str(tmp_path), f"pqs_{prefix}_{tag}")
@@ -251,7 +251,7 @@ class TestArtifactGC:
     ):
         import types
 
-        from parquery_spark import queries as q
+        from parquery_spark import artifacts as q
 
         def mk(prefix, tag, mtime, nbytes):
             d = os.path.join(str(tmp_path), f"pqs_{prefix}_{tag}")
@@ -284,7 +284,7 @@ class TestArtifactGC:
         assert os.path.isdir(cur)
 
     def test_global_budget_noop_under_budget(self, tmp_path):
-        from parquery_spark.queries import _sweep_global_budget
+        from parquery_spark.artifacts import _sweep_global_budget
 
         d = os.path.join(str(tmp_path), "pqs_alpha_" + "a" * 10)
         os.makedirs(d)
@@ -297,7 +297,7 @@ class TestArtifactGC:
         """Stage 8 stale corpus versions, publish a 9th via
         _materialize_once — the oldest stale version is reaped under the
         default budget, the publish itself still succeeds."""
-        from parquery_spark.queries import _materialize_once
+        from parquery_spark.artifacts import _materialize_once
 
         stale = [
             self._mk(tmp_path, f"{i:010x}", 1000.0 + i) for i in range(8)

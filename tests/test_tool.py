@@ -272,7 +272,7 @@ class TestDriverPriorityRegistry:
 
 class TestMaterializeOnce:
     def test_builds_once_and_publishes_atomically(self, tmp_path):
-        from parquery_spark.queries import _materialize_once
+        from parquery_spark.artifacts import _materialize_once
 
         calls = []
 
@@ -295,7 +295,7 @@ class TestMaterializeOnce:
     def test_racing_builders_one_wins_other_discards(self, tmp_path):
         import threading
 
-        from parquery_spark.queries import _materialize_once
+        from parquery_spark.artifacts import _materialize_once
 
         final = str(tmp_path / "artifact")
         barrier = threading.Barrier(2)
@@ -327,7 +327,7 @@ class TestMaterializeOnce:
         assert leftovers == []
 
     def test_half_written_legacy_dir_is_replaced(self, tmp_path):
-        from parquery_spark.queries import _materialize_once
+        from parquery_spark.artifacts import _materialize_once
 
         final = str(tmp_path / "artifact")
         os.makedirs(final)  # crashed legacy run: no marker inside
@@ -345,7 +345,7 @@ class TestMaterializeOnce:
     def test_builder_missing_marker_raises(self, tmp_path):
         import pytest as _pytest
 
-        from parquery_spark.queries import _materialize_once
+        from parquery_spark.artifacts import _materialize_once
 
         with _pytest.raises(OSError, match="_SUCCESS"):
             _materialize_once(

@@ -9,7 +9,10 @@ import os
 import pytest
 
 from parquery_spark import fs, relations
-from parquery_spark.queries import q09_missing_column_splice
+from parquery_spark.queries import (
+    q09_missing_column_splice,
+    q185_item_similarity,
+)
 
 _MOUNT = "fs.viewfs.mounttable.pqs.link./data"
 
@@ -37,3 +40,13 @@ def test_missing_column_splice_over_viewfs(spark, viewfs_sf_dir, sf_dir):
     rows = sorted(got.collect())
     assert rows == sorted(want.collect())
     assert {r["ghost_dim"] for r in rows} == {-1}
+
+
+def test_artifact_query_over_viewfs(spark, viewfs_sf_dir, sf_dir):
+    """q185 builds a stat-keyed artifact from two tables: the key stats
+    them through ``fs``, so a non-local ``sf_dir`` reaches Spark."""
+    got = q185_item_similarity(spark, viewfs_sf_dir)
+    want = q185_item_similarity(spark, sf_dir)
+    assert got.columns == want.columns
+    rows = sorted(got.collect())
+    assert rows and rows == sorted(want.collect())
