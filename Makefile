@@ -9,7 +9,9 @@
 #   make plan-audit  - regenerate PLAN_AUDIT.md (MUST run at round close:
 #                      a stale audit vouches for plans that no longer
 #                      exist - VERDICT r6 #7)
-#   make bench       - bench.py at sf0.1 (run alone: CPU contention skews)
+#   make bench       - bench.py at sf0.1 (run alone: CPU contention skews);
+#                      bench_results.json keeps each query's recorder
+#                      record (construct/execute s, jobs, shuffle bytes)
 #   make perfbench   - perfbench self-tests, then one untraced run of each
 #                      BENCHMARK.json workload (run alone, like bench)
 #   make close       - gate + plan-audit + bench, sequentially

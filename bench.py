@@ -6,7 +6,12 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 
 Timing excludes session startup and the one-time JVM/codegen warmup (a
 trivial count over lineitem) but includes full plan + execution + collect
-per query — the end-to-end latency a caller of the engine sees.
+per query — the end-to-end latency a caller of the engine sees.  Each
+query runs through ``parquery_spark.diagnostics.record``: its time is
+construction (the call that returns the DataFrame) plus execution (the
+collect), and ``bench_results.json`` keeps the record of the pass that
+gave its min under ``layers`` (construct/execute seconds, jobs — all and
+during construction —, stages, tasks, shuffle-write and spill bytes).
 
 Noise handling (round 9): EVERY query runs FIVE times as five full
 passes over the registry — consecutive samples of one query land many
@@ -45,9 +50,34 @@ import json
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+
+def session(app_name: str, sf_dir: str):
+    """The harness SparkSession on ``local[$SPARK_GRAFT_CPUS]`` (default:
+    every core), shuffle partitions = cores unless set, warmed up once:
+    the JVM, the Parquet reader and codegen (an aggregate over
+    ``sf_dir``'s lineitem), the Python-worker pool (process start +
+    pandas import per worker) and the Arrow collect path — one-time
+    process costs, not per-query costs.  Every measuring script starts
+    here, so their numbers share one set-up."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
+    os.environ["PARQUERY_SPARK_MASTER"] = f"local[{cpus}]"
+    os.environ.setdefault("PARQUERY_SPARK_SHUFFLE_PARTITIONS", cpus)
+
+    from pyspark.sql import functions as F
+
+    from parquery_spark.session import get_spark
+
+    spark = get_spark(app_name)
+    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+    li.groupBy("l_returnflag").agg(F.sum("l_quantity")).collect()
+    spark.range(int(cpus) * 4).repartition(int(cpus)).mapInPandas(
+        lambda it: it, schema="id long"
+    ).collect()
+    spark.sql("select 1 as x").toArrow()
+    return spark
 
 
 def _regression_check(
@@ -208,50 +238,22 @@ def main():
     baseline, no_gate_reason = _gate_scope(
         baseline, baseline_sf, baseline_label, sf_dir
     )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    os.environ["PARQUERY_SPARK_MASTER"] = f"local[{cpus}]"
-    os.environ.setdefault("PARQUERY_SPARK_SHUFFLE_PARTITIONS", cpus)
-    # enable the UI so per-query shuffle volume can be read off the status
-    # REST API — scale evidence (shuffle BYTES, not just seconds) lands in
-    # the artifact; queries still run identically if the UI fails to bind
-    os.environ.setdefault("PARQUERY_SPARK_CONF_spark__ui__enabled", "true")
-    # the shuffle probe walks UI-retained stages; a 206-query × 2-run bench
-    # far exceeds the default 1000 retained — raise it so deltas don't
-    # undercount (negative deltas are dropped by shuffle_delta anyway)
-    os.environ.setdefault(
-        "PARQUERY_SPARK_CONF_spark__ui__retainedStages", "20000"
-    )
-
     import __spark_entry__ as entrymod
-    from parquery_spark.session import get_spark
+    from parquery_spark.diagnostics import record
 
-    spark = get_spark("parquery_spark_bench")
+    spark = session("parquery_spark_bench", sf_dir)
+    cpus = spark.sparkContext.defaultParallelism
+    fns = entrymod.queries()
 
-    # warm up JVM, parquet reader, codegen, shuffle, and Python-worker paths
-    # once — one-time process costs, not per-query costs
-    from pyspark.sql import functions as F
+    def run_pass() -> dict[str, dict]:
+        """One pass over the registry: a layer record per query."""
+        return {
+            name: record(spark, name, lambda fn=fn: fn(spark, sf_dir))
+            for name, fn in fns.items()
+        }
 
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    li.groupBy("l_returnflag").agg(F.sum("l_quantity")).collect()
-    # spawn the full Python-worker pool once (process start + pandas import
-    # per worker is a per-PROCESS cost, not a per-query cost)
-    spark.range(int(cpus) * 4).repartition(int(cpus)).mapInPandas(
-        lambda it: it, schema="id long"
-    ).collect()
-    # Arrow collect path (toArrow jars/classes) is a one-time process cost
-    spark.sql("select 1 as x").toArrow()
-
-    from parquery_spark.diagnostics import shuffle_delta
-    from parquery_spark.diagnostics import shuffle_written as _shuffle_probe
-
-    def shuffle_written():
-        return _shuffle_probe(spark)
-
-    def run_query(fn):
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        n = len(df.collect())
-        return time.perf_counter() - t0, n
+    def wall(rec: dict) -> float:
+        return round(rec["construct_s"] + rec["execute_s"], 4)
 
     # Head-to-head vs the reference implementation on an identical workload
     # (specs the reference API can express — numeric filters only: its
@@ -266,18 +268,11 @@ def main():
     except Exception as exc:  # pragma: no cover
         parity_err = f"{type(exc).__name__}: {exc}"
 
-    timings: dict[str, float] = {}
-    shuffle_bytes: dict[str, int] = {}
-    fns = entrymod.queries()
-    for name, fn in fns.items():
-        s0 = shuffle_written()
-        t, n = run_query(fn)
-        s1 = shuffle_written()
-        timings[name] = round(t, 4)
-        d = shuffle_delta(s0, s1)
-        if d is not None:
-            shuffle_bytes[name] = d
-        print(f"# {name}: {timings[name]:.3f}s ({n} rows)", file=sys.stderr)
+    recs = run_pass()
+    for name, rec in recs.items():
+        print(f"# {name}: {wall(rec):.3f}s ({rec['result']} rows)",
+              file=sys.stderr)
+    timings = {name: wall(rec) for name, rec in recs.items()}
 
     # The host this runs on shows multi-minute noise windows (identical
     # workloads swing 2-4x).  Four more FULL passes over the registry:
@@ -287,6 +282,8 @@ def main():
     # — is auditable from the artifact.
     cold = dict(timings)
     passes = [dict(timings)]
+    # each query's layer record comes from the pass that gave its min
+    layers = dict(recs)
     # SPARK_GRAFT_BENCH_PASSES (default 5): cross-SF scaling runs use 3
     # (cold + warm min-of-2) — the committed sf0.1 baseline and any
     # regression-gated run keep the full 5-pass discipline, which is
@@ -295,10 +292,11 @@ def main():
     # conservatively (never flattering).
     n_passes = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "5")))
     for p in range(2, n_passes + 1):
-        cur = {}
-        for name, fn in fns.items():
-            t, _ = run_query(fn)
-            cur[name] = round(t, 4)
+        recs = run_pass()
+        cur = {name: wall(rec) for name, rec in recs.items()}
+        for name, t in cur.items():
+            if t < wall(layers[name]):
+                layers[name] = recs[name]
         passes.append(cur)
         print(f"# pass {p}/{n_passes} total: {sum(cur.values()):.1f}s",
               file=sys.stderr)
@@ -403,8 +401,13 @@ def main():
     # drops the bulky per-spec parity dicts so it stays well under typical
     # tail-capture windows.
     full = dict(result)
-    if shuffle_bytes:
-        full["shuffle_bytes"] = shuffle_bytes
+    # the min pass's layer record per query; execution ids and the row
+    # count are properties of the run, not of the query's cost
+    full["layers"] = {
+        name: {k: v for k, v in rec.items()
+               if k not in ("name", "result", "construct_executions")}
+        for name, rec in layers.items()
+    }
     full["cold_queries"] = {
         k: cold[k] for k in sorted(cold) if cold[k] != timings[k]
     }

@@ -40,9 +40,11 @@ _SCHEME_RE = re.compile(r"^([A-Za-z][A-Za-z0-9+.-]*)://")
 #: schemes that resolve through plain os.* after prefix stripping
 _LOCAL_SCHEMES = {"file", "local"}
 
-#: pyarrow.fs scheme aliases (s3a/s3n are Hadoop spellings of s3)
+#: pyarrow.fs scheme aliases (s3a/s3n are Hadoop spellings of s3).  No
+#: ``viewfs``: its mount table lives only in the Hadoop client
+#: configuration, so pyarrow's HDFS client can never resolve it.
 _PYARROW_SCHEMES = {"s3": "s3", "s3a": "s3", "s3n": "s3", "gs": "gs",
-                    "gcs": "gs", "hdfs": "hdfs", "viewfs": "hdfs"}
+                    "gcs": "gs", "hdfs": "hdfs"}
 
 
 def scheme_of(path: str) -> str | None:

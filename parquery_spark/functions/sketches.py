@@ -56,22 +56,6 @@ def merge_sketch_rollups(
     return out.withColumn("estimate", F.hll_sketch_estimate("sketch"))
 
 
-def approx_quantiles(
-    df: DataFrame,
-    keys: Sequence[str],
-    value_col: str,
-    probabilities: Sequence[float] = (0.5, 0.95, 0.99),
-    accuracy: int = 10_000,
-) -> DataFrame:
-    """Per-key approximate quantiles (Greenwald-Khanna summary —
-    partial-aggregated, single shuffle on the keys)."""
-    return df.groupBy(*keys).agg(
-        F.percentile_approx(
-            value_col, F.array(*[F.lit(p) for p in probabilities]), F.lit(accuracy)
-        ).alias("quantiles")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Distributed Bloom filter (bitmap aggregation over the md5 hash family)
 # ---------------------------------------------------------------------------

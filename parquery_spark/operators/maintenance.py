@@ -180,73 +180,3 @@ def merge_aggregate_delta(base_agg, delta_agg, keys: list[str],
     return merged.where(F.col(count_col) > 0)
 
 
-def write_dataset_card(
-    spark,
-    df,
-    out_dir: str,
-    name: str,
-    key_col: str | None = None,
-    mode: str = "overwrite",
-) -> dict:
-    """Write ``df`` as ZSTD parquet plus a machine-readable DATASET CARD
-    (``_card.json`` sidecar): row count, schema, per-file sizes, an
-    order-independent content checksum (bit_xor of a row hash when
-    ``key_col`` given), and the engine/write configuration — the
-    self-describing export a downstream consumer (or a later backfill's
-    q175-style diff) verifies against without re-scanning the data.
-
-    The stats come from ONE aggregate over the same DataFrame (no second
-    source scan); the card is written last so a crashed export never
-    leaves a card describing missing data (write-then-publish, the q126
-    pointer-swap rule applied to metadata).
-    """
-    import json
-
-    from pyspark.sql import functions as F
-
-    from parquery_spark.operators.dedup import hash64
-
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    if key_col is not None:
-        aggs.append(
-            F.bit_xor(hash64(F.col(key_col).cast("string"))).alias(
-                "content_checksum"
-            )
-        )
-    df = df.persist()
-    try:
-        stats = df.agg(*aggs).collect()[0]
-        df.write.mode(mode).option("compression", "zstd").parquet(out_dir)
-    finally:
-        # owner-release even when the stats collect or the write raises —
-        # a leak here would outlive the call (the exact class the
-        # registry-wide cache contract eliminates)
-        df.unpersist()
-    files = sorted(
-        f for f in os.listdir(out_dir) if f.endswith(".parquet")
-    )
-    card = {
-        "name": name,
-        "n_rows": stats["n_rows"],
-        "content_checksum": (
-            stats["content_checksum"] if key_col is not None else None
-        ),
-        "checksum_key": key_col,
-        "schema": [
-            {"name": f.name, "type": f.dataType.simpleString(),
-             "nullable": f.nullable}
-            for f in df.schema.fields
-        ],
-        "files": [
-            {"name": f,
-             "bytes": os.path.getsize(os.path.join(out_dir, f))}
-            for f in files
-        ],
-        "format": "parquet/zstd",
-        "spark_version": spark.version,
-    }
-    tmp = os.path.join(out_dir, "_card.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(card, fh, indent=2, sort_keys=True)
-    os.replace(tmp, os.path.join(out_dir, "_card.json"))
-    return card

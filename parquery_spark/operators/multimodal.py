@@ -1145,27 +1145,6 @@ def extract_media_features(
     return df.mapInPandas(run, schema=out_schema)
 
 
-def resize_stub(
-    df: DataFrame,
-    payload_col: str = "payload",
-    target: tuple[int, int] = (224, 224),
-) -> DataFrame:
-    """STUB image resize: real plumbing (binary in → binary out through
-    Arrow batches), fake transform (md5-tagged passthrough bytes)."""
-    out_schema = df.schema
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[payload_col] = [
-                hashlib.md5(b + f"@{target[0]}x{target[1]}".encode()).digest()
-                for b in pdf[payload_col]
-            ]
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)
-
-
 def sample_frames(
     df: DataFrame,
     payload_col: str = "payload",
@@ -1214,41 +1193,6 @@ def sample_frames(
                     )
                     rows.append(rec)
             yield pd.DataFrame(rows, columns=passthrough + stat_cols)
-
-    return df.mapInPandas(run, schema=out_schema)
-
-
-def frame_sample_stub(
-    df: DataFrame,
-    payload_col: str = "payload",
-    every_n: int = 10,
-) -> DataFrame:
-    """STUB video frame sampling for payloads with no parseable
-    container (synthetic md5-derived frame fan-out) — the real RIFF/AVI
-    path is :func:`sample_frames` / :func:`decode_avi_frames`; this
-    remains only as the documented shape for codecs that need an
-    external library (MP4/H.264 → ffmpeg)."""
-    out_schema = T.StructType(
-        [f for f in df.schema if f.name != payload_col]
-        + [T.StructField("frame_idx", T.IntegerType()),
-           T.StructField("frame_hash", T.StringType())]
-    )
-    passthrough = [c for c in df.columns if c != payload_col]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                payload = row[payload_col]
-                n_frames = 1 + int(hashlib.md5(payload).hexdigest()[:4], 16) % 50
-                for idx in range(0, n_frames, every_n):
-                    rec = {c: row[c] for c in passthrough}
-                    rec["frame_idx"] = idx
-                    rec["frame_hash"] = hashlib.md5(
-                        payload + idx.to_bytes(4, "little")
-                    ).hexdigest()
-                    rows.append(rec)
-            yield pd.DataFrame(rows, columns=passthrough + ["frame_idx", "frame_hash"])
 
     return df.mapInPandas(run, schema=out_schema)
 

@@ -195,26 +195,6 @@ def pack_shards(
     )
 
 
-def write_shards(
-    df: DataFrame,
-    path: str,
-    size_col: Column | str,
-    shard_size: int,
-    order_col: str,
-    mode: str = "overwrite",
-) -> str:
-    """The training-data last mile: pack documents into fixed-budget
-    shards, then write one hive partition per shard
-    (``path/shard_id=N/...``).  A training run streams shard directories
-    in order; each holds ≈ ``shard_size`` tokens of whole documents.
-    Re-runs produce byte-identical shard assignment (deterministic prefix
-    sum), so incremental re-trains see stable shards."""
-    from parquery_spark.sources.parquet import write_partitioned
-
-    packed = pack_shards(df, size_col, shard_size, order_col)
-    return write_partitioned(packed, path, ["shard_id"], mode=mode)
-
-
 def sliding_chunks(
     df: DataFrame,
     id_col: str,

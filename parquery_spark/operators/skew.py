@@ -1,7 +1,7 @@
-"""Skew-mitigation operators: salted two-stage aggregation and salted
-broadcast joins — for the hot-key distributions AQE alone can't always
-save (a single key holding 30% of 100 TB overwhelms one reducer no matter
-how the remaining partitions are split).
+"""Skew-mitigation operator: salted two-stage aggregation — for the
+hot-key distributions AQE alone can't always save (a single key holding
+30% of 100 TB overwhelms one reducer no matter how the remaining
+partitions are split).
 
 These complement, not replace, AQE (``spark.sql.adaptive.skewJoin`` is on
 in the session defaults): salting is the explicit tool for *known* skew —
@@ -16,7 +16,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from parquery_spark.plans.aggregation import agg_expr
+from parquery_spark.plans.aggregation import _SQL_AGGS, _qi
 
 #: ops that decompose as op(op(partials)) — safe for two-stage salting
 _RESALT_FINAL = {
@@ -54,31 +54,16 @@ def salted_groupby(
         "__salt", (F.rand(seed=42) * salt_buckets).cast("int")
     )
     partial = salted.groupBy(*groupby_cols, "__salt").agg(
-        *[agg_expr(col, op, out) for col, op, out in measure_cols]
+        *[_agg(col, op, out) for col, op, out in measure_cols]
     )
     finals = [
-        agg_expr(out, _RESALT_FINAL[op.lower()], out)
+        _agg(out, _RESALT_FINAL[op.lower()], out)
         for _, op, out in measure_cols
     ]
     return partial.groupBy(*groupby_cols).agg(*finals)
 
 
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    right_on: str | None = None,
-    salt_buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-safe equi-join: salt the (large, skewed) left side randomly and
-    explode the (smaller) right side across all salt values, so one hot key
-    spreads over ``salt_buckets`` reducers.  Right-side rows are replicated
-    ``salt_buckets``× — use only when right ≪ left."""
-    rk = right_on or on
-    l = left.withColumn("__salt", (F.rand(seed=42) * salt_buckets).cast("int"))
-    r = right.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
-    )
-    cond = (l[on] == r[rk]) & (l["__salt"] == r["__salt"])
-    return l.join(r, cond, how).drop("__salt")
+def _agg(col: str, op: str, output: str) -> Column:
+    """One aliased aggregate expression from the shared aggregate-op table."""
+    return F.expr(_SQL_AGGS[op.lower()].format(c=_qi(col))).alias(output)
+

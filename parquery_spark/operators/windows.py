@@ -29,33 +29,3 @@ def top_n_per_group(
     )
 
 
-def running_agg(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    order_by: Sequence[Column],
-    agg_col: str,
-    op: str = "sum",
-    output: str | None = None,
-) -> DataFrame:
-    """Running aggregate over an unbounded-preceding frame."""
-    fns = {"sum": F.sum, "min": F.min, "max": F.max, "avg": F.avg,
-           "count": F.count, "mean": F.avg}
-    w = (
-        Window.partitionBy(*partition_by)
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return df.withColumn(output or f"running_{op}", fns[op](agg_col).over(w))
-
-
-def lag_lead(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    order_by: Sequence[Column],
-    col: str,
-    offset: int = 1,
-) -> DataFrame:
-    w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    return df.withColumn(f"{col}_lag", F.lag(col, offset).over(w)).withColumn(
-        f"{col}_lead", F.lead(col, offset).over(w)
-    )

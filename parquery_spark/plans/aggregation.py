@@ -26,13 +26,13 @@ from __future__ import annotations
 
 from typing import Any, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from parquery_spark import fs, relations, tool
 
-# op name → Spark aggregate expression builder.
+# op name → Spark SQL aggregate template; the one aggregate-op table (the
+# SQL fast path below and ``operators.skew.salted_groupby`` both build from it).
 # Semantics pinned in SURVEY.md §2.3 (divergences documented there):
 #  * std/stddev  → sample stddev (ddof=1), matching the reference's DuckDB
 #    engine (reference: parquery/aggregate_duckdb.py:308-309); its PyArrow
@@ -43,41 +43,8 @@ from parquery_spark import fs, relations, tool
 #  * one         → deterministic MIN, matching the reference's DuckDB engine
 #    (reference: parquery/aggregate_duckdb.py:316); F.first would be
 #    nondeterministic under parallel execution.
-_AGG_BUILDERS = {
-    "sum": F.sum,
-    "mean": F.avg,
-    "avg": F.avg,
-    "std": F.stddev_samp,
-    "stddev": F.stddev_samp,
-    "count": F.count,
-    "count_na": lambda c: F.count(F.when(F.col(c).isNull(), F.lit(1))),
-    "count_distinct": F.countDistinct,
-    "sorted_count_distinct": F.countDistinct,
-    "min": F.min,
-    "max": F.max,
-    "one": F.min,
-    # beyond-reference aggregate extensions (absent from the reference's
-    # 10-op whitelist, SURVEY.md §2.3):
-    "median": F.median,
-    "approx_count_distinct": F.approx_count_distinct,
-}
-
-
-def agg_expr(col: str, op: str, output: str) -> Column:
-    """Build one aliased Spark aggregate expression from a measure triple."""
-    try:
-        builder = _AGG_BUILDERS[op.lower()]
-    except KeyError:
-        raise NotImplementedError(
-            f"Aggregation operation {op!r} is not supported; valid operations: "
-            f"{sorted(_AGG_BUILDERS)}"
-        ) from None
-    return builder(col).alias(output)
-
-
-# op name → SQL aggregate template for the single-roundtrip SQL fast path.
-# MUST stay semantically identical to _AGG_BUILDERS (same Spark engine, same
-# expressions — only the construction surface differs).
+#  * median / approx_count_distinct are beyond-reference extensions (absent
+#    from the reference's 10-op whitelist).
 _SQL_AGGS = {
     "sum": "SUM({c})",
     "mean": "AVG({c})",
@@ -283,7 +250,7 @@ def build_aggregation_plan(
                 if op.lower() not in sql_aggs:
                     raise NotImplementedError(
                         f"Aggregation operation {op!r} is not supported; "
-                        f"valid operations: {sorted(_AGG_BUILDERS)}"
+                        f"valid operations: {sorted(_SQL_AGGS)}"
                     )
             select = [_qi(c) for c in live_groupby] + [
                 f"{sql_aggs[op.lower()].format(c=_qi(col))} AS {_qi(out)}"

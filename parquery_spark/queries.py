@@ -90,16 +90,19 @@ def _path(sf_dir: str, table: str) -> str:
 
 
 def _footer_rows(path: str) -> int:
-    """Exact row count of a local parquet file or directory layout from
-    its footers — the driver-side replacement for a ``df.count()`` job
-    when the relation is an unfiltered scan (round 12, guide §5 "the
+    """Exact row count of a parquet file (or a local directory layout)
+    from its footers — the driver-side replacement for a ``df.count()``
+    job when the relation is an unfiltered scan (round 12, guide §5 "the
     driver should do almost no data work" cuts both ways: a count JOB
     for a number the footers already hold is a scheduler round-trip
-    wasted)."""
+    wasted).  A non-local file's footer is read through ``fs``."""
     import glob as _glob
 
     import pyarrow.parquet as papq
 
+    if not fs.is_local(path):
+        with fs.open_input(path) as fh:
+            return papq.read_metadata(fh).num_rows
     if os.path.isdir(path):
         return sum(
             papq.read_metadata(p).num_rows
@@ -118,14 +121,16 @@ def _probe_rows(sf_dir: str, ids) -> list[dict]:
     fixture is written vec_id-ascending, which both the file-order
     collect and this read preserve); rows are dicts, a drop-in for the
     ``r["vec_id"]`` / ``r["embedding"]`` / ``r["label"]`` access pattern
-    of the Row objects they replace."""
+    of the Row objects they replace.  A non-local file is read through
+    ``fs``."""
     import pyarrow.parquet as papq
 
-    tbl = papq.read_table(
-        _path(sf_dir, "embeddings"),
-        filters=[("vec_id", "in", [int(i) for i in ids])],
-    )
-    return tbl.to_pylist()
+    path = _path(sf_dir, "embeddings")
+    filters = [("vec_id", "in", [int(i) for i in ids])]
+    if fs.is_local(path):
+        return papq.read_table(path, filters=filters).to_pylist()
+    with fs.open_input(path) as fh:
+        return papq.read_table(fh, filters=filters).to_pylist()
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1469,7 +1474,7 @@ def q50_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q51_median_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Beyond-reference aggregates: exact median and interpolated
     percentiles (the reference's op whitelist stops at stddev;
-    approx_count_distinct is also registered in _AGG_BUILDERS but has no
+    approx_count_distinct is also registered in _SQL_AGGS but has no
     cross-engine-stable value to oracle-check).
 
     Round 12 (guide §1.2): ``F.percentile``/``F.median`` plan as

@@ -402,69 +402,6 @@ def run_available_now(
     return stream_df.sparkSession.table(name)
 
 
-def purchase_totals_transform_with_state(stream: DataFrame) -> DataFrame:
-    """Per-key running totals via Spark 4's transformWithStateInPandas —
-    the NEW arbitrary-state API (typed ValueState handles, timers,
-    RocksDB-backed) superseding applyInPandasWithState.
-
-    ENVIRONMENT GATE: the API's Python worker speaks protobuf to the
-    state server; ``google.protobuf`` is not installed in this sandbox,
-    so calling this raises with a clear diagnosis.  The implementation
-    is real and the equivalent semantics are already hard-gated through
-    ``applyInPandasWithState`` (q97) — swap in this operator on an
-    environment with protobuf and the RocksDB provider enabled.
-    Money accumulates as exact integer cents in state (the q148 rule).
-    """
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires google.protobuf, which "
-            "is not installed in this environment; use "
-            "applyInPandasWithState (see q97) instead"
-        ) from e
-
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.streaming import StatefulProcessor
-
-    class PurchaseCounter(StatefulProcessor):
-        def init(self, handle):
-            self._state = handle.getValueState("totals", "n long, cents long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, cents = 0, 0
-            if self._state.exists():
-                n, cents = self._state.get()
-            for pdf in rows:
-                n += len(pdf)
-                cents += int(
-                    np.floor(pdf["value"].to_numpy() * 100 + 0.5)
-                    .astype("int64")
-                    .sum()
-                )
-            self._state.update((n, cents))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_purchases": [n],
-                    "total_value": [cents / 100.0],
-                }
-            )
-
-        def close(self):
-            pass
-
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        PurchaseCounter(),
-        outputStructType="user_id long, n_purchases long, "
-                         "total_value double",
-        outputMode="append",
-        timeMode="none",
-    )
-
-
 def sessionize_transform_with_state(
     stream: DataFrame, gap_minutes: int = 30
 ) -> DataFrame:

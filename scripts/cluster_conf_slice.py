@@ -22,7 +22,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -45,20 +44,18 @@ SLICE = [
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     import __spark_entry__ as e
-    from parquery_spark.session import get_spark
+    from bench import session
+    from parquery_spark.diagnostics import record
 
-    spark = get_spark("cluster_conf_slice")
+    spark = session("cluster_conf_slice", sf_dir)
     qs = e.queries()
-    # one warmup pass absorbs codegen + artifact build
     out: dict[str, float] = {}
     for name in SLICE:
-        best = None
+        walls = []
         for _ in range(3):
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).collect()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        out[name] = round(best, 3)
+            rec = record(spark, name, lambda: qs[name](spark, sf_dir))
+            walls.append(rec["construct_s"] + rec["execute_s"])
+        out[name] = round(min(walls), 3)
     print(json.dumps({
         "sf_dir": sf_dir,
         "shuffle_partitions":

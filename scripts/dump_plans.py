@@ -23,14 +23,11 @@ def main() -> None:
     outdir, suffix, *names = sys.argv[1:]
     os.makedirs(outdir, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    os.environ["PARQUERY_SPARK_MASTER"] = f"local[{cpus}]"
-    os.environ.setdefault("PARQUERY_SPARK_SHUFFLE_PARTITIONS", cpus)
 
+    from bench import session
     from parquery_spark.queries import QUERIES
-    from parquery_spark.session import get_spark
 
-    spark = get_spark("dump_plans")
+    spark = session("dump_plans", sf_dir)
     jvm = spark.sparkContext._jvm
     for name in names:
         fn = QUERIES[name][0]

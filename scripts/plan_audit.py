@@ -18,14 +18,14 @@ BUILD-PHASE capture (round 8): everything a query function EXECUTES
 during construction — k-means/PQ/IVF training, index/artifact writes
 behind ``artifacts.artifact``, relation-cache fills — used to be
 invisible to the audit because it runs before the returned plan exists.
-Each query now also snapshots the session's SQLAppStatusStore execution
-list around the call and aggregates the same shape counters over every
-execution the call triggered (``b_execs``/``b_shuffles``/``b_py``/
-``b_cart`` columns).  Artifacts are built once per corpus version, so
-build columns show the cost at the FIRST query that touches an artifact;
-pass ``--fresh-artifacts`` to clear the artifacts first and attribute
-every build to its owner (do not run concurrently with any other
-workload — one Spark workload at a time).
+Each query runs through ``diagnostics.record``, which returns the ids of
+the SQL executions its construction ran; the audit aggregates the same
+shape counters over those executions' plans (``b_execs``/``b_shuffles``/
+``b_py``/``b_cart`` columns).  Artifacts are built once per corpus
+version, so build columns show the cost at the FIRST query that touches
+an artifact; pass ``--fresh-artifacts`` to clear the artifacts first and
+attribute every build to its owner (do not run concurrently with any
+other workload — one Spark workload at a time).
 """
 
 from __future__ import annotations
@@ -97,23 +97,16 @@ def _truncate_formatted(desc: str) -> str:
     return desc[: min(cuts)] if cuts else desc
 
 
-def _max_execution_id(store) -> int:
-    lst = store.executionsList()
-    n = lst.size()
-    return lst.apply(n - 1).executionId() if n else -1
-
-
-def _build_phase_counts(store, after_id: int) -> dict:
-    """Aggregate shape counters over every SQL execution with id >
-    ``after_id`` — the jobs a query function ran while CONSTRUCTING its
-    returned plan (model training, artifact writes, cache fills)."""
+def _build_phase_counts(store, execution_ids: list[int]) -> dict:
+    """Aggregate shape counters over the SQL executions a query function
+    ran while CONSTRUCTING its returned plan (model training, artifact
+    writes, cache fills)."""
     out = {"b_execs": 0, "b_shuffles": 0, "b_py": 0, "b_cart": 0}
-    lst = store.executionsList()
-    for i in range(lst.size()):
-        ex = lst.apply(i)
-        if ex.executionId() <= after_id:
+    for eid in execution_ids:
+        ex = store.execution(eid)
+        if not ex.isDefined():
             continue
-        desc = _truncate_formatted(ex.physicalPlanDescription())
+        desc = _truncate_formatted(ex.get().physicalPlanDescription())
         out["b_execs"] += 1
         out["b_shuffles"] += len(_B_EXCHANGE.findall(desc))
         out["b_py"] += len(_B_PY.findall(desc))
@@ -210,34 +203,30 @@ WHITELIST = {
 
 
 def audit(sf_dir: str, names: list[str] | None = None) -> list[dict]:
+    from parquery_spark.diagnostics import record, sql_store
     from parquery_spark.session import get_spark
 
     import __spark_entry__ as e
 
-    # the build-phase capture iterates SQLAppStatusStore.executionsList,
-    # which is capped by spark.sql.ui.retainedExecutions (default 1000);
-    # a full audit runs well past that and would silently undercount the
-    # b_* columns once early executions are evicted.  It is a STATIC
-    # conf, so it must land before the session builds (env-driven conf,
-    # the bench.py mechanism) — the audit owns its session.
-    os.environ.setdefault(
-        "PARQUERY_SPARK_CONF_spark__sql__ui__retainedExecutions", "100000"
-    )
     spark = get_spark("plan_audit")
-    store = spark._jsparkSession.sharedState().statusStore()
+    store = sql_store(spark)
     rows = []
     qs = e.queries()
     for name, fn in qs.items():
         if names and name not in names:
             continue
-        before_id = _max_execution_id(store)
         try:
-            df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            rec = record(
+                spark, name, lambda: fn(spark, sf_dir),
+                lambda df: df._jdf.queryExecution().executedPlan().toString(),
+            )
         except Exception as exc:  # noqa: BLE001 — audit must finish
             rows.append({"name": name, "error": str(exc)[:120]})
             continue
-        build = _build_phase_counts(store, before_id)
+        plan = rec["result"]
+        # read per query, right after construction, so the store's
+        # retention limit never evicts an execution before it is counted
+        build = _build_phase_counts(store, rec["construct_executions"])
         # With AQE, toString prints the current/final plan AND a full
         # "== Initial Plan ==" duplicate; count only the first tree or
         # every operator doubles.

@@ -1,19 +1,15 @@
 #!/usr/bin/env python
-"""Per-query profiler for the optimization round: for each named query
-(default: the top-N slowest from the committed bench_results.json), run it
-in isolation and split the wall into
-
-* ``plan_s``   — Python-side DataFrame construction (py4j plan building,
-  artifact stat checks, any driver-side collects the builder fn does);
-* ``exec_s``   — the terminal ``collect()`` (Catalyst analysis through
-  result fetch);
-* ``jobs``     — Spark jobs launched by the WHOLE call (status tracker
-  delta), a direct count of action round-trips / AQE stage waves;
-* ``stages``   — completed stage count delta;
-* ``tasks``    — completed task count delta.
+"""Per-query profiler: run each named query (default: the top-N slowest
+from the committed bench_results.json) in isolation through
+``parquery_spark.diagnostics.record`` and print the record of its
+fastest run — ``construct_s`` (the call that builds the DataFrame:
+py4j plan building, artifact stat checks, any jobs the builder runs),
+``execute_s`` (the terminal ``collect()``), jobs (all, and during
+construction), stages, tasks, shuffle-write and spill bytes.
 
 Usage: python scripts/profile_queries.py [--top N] [--runs K] [name ...]
-Writes nothing; prints a table to stdout.  Run it ALONE (timing).
+Writes nothing; prints one JSON record per query to stdout.  Run it
+ALONE (timing).
 """
 
 from __future__ import annotations
@@ -21,7 +17,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -50,62 +45,21 @@ def main() -> None:
         ]
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    os.environ["PARQUERY_SPARK_MASTER"] = f"local[{cpus}]"
-    os.environ.setdefault("PARQUERY_SPARK_SHUFFLE_PARTITIONS", cpus)
 
+    from bench import session
+    from parquery_spark.diagnostics import record
     from parquery_spark.queries import QUERIES
-    from parquery_spark.session import get_spark
 
-    spark = get_spark("profile_queries")
-    sc = spark.sparkContext
-    from pyspark.sql import functions as F
-
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    li.groupBy("l_returnflag").agg(F.sum("l_quantity")).collect()
-    spark.range(int(cpus) * 4).repartition(int(cpus)).mapInPandas(
-        lambda it: it, schema="id long"
-    ).collect()
-
-    tracker = sc.statusTracker()
-
-    def job_ids():
-        return set(tracker.getJobIdsForGroup(None) or [])
-
-    print(f"# sf_dir={sf_dir} cpus={cpus} runs={runs} (reporting min)")
-    print(f"{'query':40s} {'total':>7s} {'plan':>7s} {'exec':>7s} "
-          f"{'jobs':>5s} {'stages':>7s} {'tasks':>6s} {'rows':>6s}")
+    spark = session("profile_queries", sf_dir)
+    print(f"# sf_dir={sf_dir} runs={runs} (the fastest run's record)")
     for name in names:
         fn = QUERIES[name][0]
-        best = None
-        for _ in range(runs):
-            sc.setJobDescription(f"profile:{name}")
-            j0 = job_ids()
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            t1 = time.perf_counter()
-            rows = df.collect()
-            t2 = time.perf_counter()
-            j1 = job_ids()
-            new_jobs = j1 - j0
-            n_stages = n_tasks = 0
-            for j in new_jobs:
-                ji = tracker.getJobInfo(j)
-                if ji is None:
-                    continue
-                for s in ji.stageIds:
-                    si = tracker.getStageInfo(s)
-                    if si is not None:
-                        n_stages += 1
-                        n_tasks += si.numCompletedTasks
-            rec = (t2 - t0, t1 - t0, t2 - t1, len(new_jobs), n_stages,
-                   n_tasks, len(rows))
-            if best is None or rec[0] < best[0]:
-                best = rec
-        sc.setJobDescription(None)
-        tot, plan, ex, nj, ns, nt, nr = best
-        print(f"{name:40s} {tot:7.3f} {plan:7.3f} {ex:7.3f} "
-              f"{nj:5d} {ns:7d} {nt:6d} {nr:6d}")
+        best = min(
+            (record(spark, name, lambda: fn(spark, sf_dir))
+             for _ in range(runs)),
+            key=lambda r: r["construct_s"] + r["execute_s"],
+        )
+        print(json.dumps(best, sort_keys=True))
 
 
 if __name__ == "__main__":

@@ -26,7 +26,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -55,11 +54,11 @@ def main() -> None:
         sys.exit(f"not a directory: {sf_dir!r}")
 
     import __spark_entry__ as entrymod
-    from parquery_spark.session import get_spark
+    from bench import session
+    from parquery_spark.diagnostics import record
 
-    spark = get_spark("sf10_spot")
+    spark = session("sf10_spot", sf_dir)
     qs = entrymod.queries()
-    spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
 
     from pyspark.sql import functions as F
 
@@ -87,14 +86,14 @@ def main() -> None:
     for name in names:
         if name not in qs:
             sys.exit(f"unknown query: {name}")
-        t0 = time.time()
         try:
-            n, mode = drain(qs[name](spark, sf_dir))
+            rec = record(spark, name, lambda: qs[name](spark, sf_dir), drain)
         except Exception as exc:  # record, keep measuring the rest
             out[name] = {"error": f"{type(exc).__name__}: {exc}"[:160]}
             print(f"# {name}: ERROR {exc}", file=sys.stderr)
             continue
-        wall = round(time.time() - t0, 3)
+        n, mode = rec["result"]
+        wall = round(rec["construct_s"] + rec["execute_s"], 3)
         out[name] = {"sec": wall, "rows": n}
         if mode != "xxhash64":
             out[name]["drain"] = mode

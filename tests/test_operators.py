@@ -74,22 +74,6 @@ class TestWindows:
         got = sorted((r["g"], r["v"]) for r in out.collect())
         assert got == [("a", 3), ("a", 4), ("b", 1), ("b", 2)]
 
-    def test_running_agg(self, spark):
-        df = spark.createDataFrame(
-            [("a", 1, 10.0), ("a", 2, 5.0), ("a", 3, 1.0)], ["g", "t", "v"]
-        )
-        out = windows.running_agg(df, ["g"], [F.col("t")], "v", "sum", "rs")
-        assert [r["rs"] for r in out.orderBy("t").collect()] == [10.0, 15.0, 16.0]
-
-    def test_lag_lead(self, spark):
-        df = spark.createDataFrame([("a", 1, "x"), ("a", 2, "y")], ["g", "t", "v"])
-        row = (
-            windows.lag_lead(df, ["g"], [F.col("t")], "v")
-            .filter(F.col("t") == 2).collect()[0]
-        )
-        assert row["v_lag"] == "x" and row["v_lead"] is None
-
-
 class TestDedup:
     @pytest.fixture(scope="class")
     def docs(self, spark):
@@ -363,23 +347,6 @@ class TestSkew:
         with pytest.raises(NotImplementedError, match="decomposable"):
             salted_groupby(skewed, ["k"], [["v", "mean", "m"]])
 
-    def test_salted_join_matches_direct(self, spark, skewed):
-        from parquery_spark.operators.skew import salted_join
-
-        dim = spark.createDataFrame(
-            [(i, f"name{i}") for i in range(8)], ["dk", "name"]
-        )
-        direct = sorted(
-            (r["k"], r["name"])
-            for r in skewed.join(dim, skewed.k == dim.dk).collect()
-        )
-        salted = sorted(
-            (r["k"], r["name"])
-            for r in salted_join(skewed, dim, "k", "dk", salt_buckets=4).collect()
-        )
-        assert salted == direct
-
-
 class TestSampling:
     def test_hash_sample_partition_invariant(self, spark):
         from parquery_spark.operators import sampling
@@ -621,38 +588,6 @@ class TestDeadLetter:
         rows = dead_letter_map(df, boom, "v", "double", ["id"]).collect()
         assert len(rows) == 2
         assert all(r["ok"] is False and r["v"] is None for r in rows)
-
-
-class TestDatasetCard:
-    def test_card_matches_written_data(self, spark, tmp_path):
-        import json
-
-        from pyspark.sql import functions as F
-
-        from parquery_spark.operators.maintenance import write_dataset_card
-
-        df = spark.range(100).select(
-            F.col("id"), (F.col("id") * 2).alias("v")
-        )
-        out = str(tmp_path / "export")
-        card = write_dataset_card(
-            spark, df, out, name="test-export", key_col="id"
-        )
-        on_disk = json.load(open(out + "/_card.json"))
-        assert on_disk == json.loads(json.dumps(card))
-        assert on_disk["n_rows"] == 100
-        assert {f["name"] for f in on_disk["schema"]} == {"id", "v"}
-        assert on_disk["files"] and all(
-            f["bytes"] > 0 for f in on_disk["files"]
-        )
-        # checksum is reproducible from the written data
-        back = spark.read.parquet(out)
-        from parquery_spark.operators.dedup import hash64
-
-        chk = back.agg(
-            F.bit_xor(hash64(F.col("id").cast("string")))
-        ).collect()[0][0]
-        assert chk == on_disk["content_checksum"]
 
 
 class TestSemDeDup:

@@ -255,28 +255,6 @@ class TestWeightedSample:
         assert got == [3]
 
 
-class TestWriteShards:
-    def test_shard_directories_and_budgets(self, spark, tmp_path):
-        import os
-
-        from parquery_spark.operators.packing import write_shards
-
-        rows = [(i, "x " * 50) for i in range(40)]  # 50 tokens each
-        df = spark.createDataFrame(rows, ["doc_id", "text"])
-        from parquery_spark.functions.text import token_count
-
-        out = str(tmp_path / "shards")
-        write_shards(df, out, token_count("text"), 200, "doc_id")
-        dirs = sorted(d for d in os.listdir(out) if d.startswith("shard_id="))
-        # 40 docs × 50 tokens / 200-token shards = 10 shards
-        assert dirs == [f"shard_id={i}" for i in range(10)]
-        back = spark.read.parquet(out)
-        assert back.count() == 40
-        per = {r["shard_id"]: r["n"] for r in
-               back.groupBy("shard_id").agg(F.count(F.lit(1)).alias("n")).collect()}
-        assert all(n == 4 for n in per.values())  # 4 whole docs per shard
-
-
 class TestBloom:
     def test_no_false_negatives_and_measurable_fp(self, spark):
         from parquery_spark.functions.sketches import bloom_build, bloom_probe

@@ -158,15 +158,3 @@ class TestSketches:
         }
         assert merged == direct  # HLL union is exact over sketch state
 
-    def test_approx_quantiles_shape(self, spark, sf_dir):
-        import os as _os
-
-        from parquery_spark.functions.sketches import approx_quantiles
-
-        li = spark.read.parquet(_os.path.join(sf_dir, "lineitem.parquet"))
-        rows = approx_quantiles(
-            li, ["l_returnflag"], "l_extendedprice", (0.5, 0.99)
-        ).collect()
-        for r in rows:
-            q50, q99 = r["quantiles"]
-            assert q50 <= q99

@@ -1,6 +1,7 @@
 """A non-local ``sf_dir``: the test data mounted through Hadoop ViewFs (it
 ships in hadoop-common, so no network is needed).  pyarrow has no working
-backend for ``viewfs://``, so footer reads go through ``fs._JStream``."""
+backend for ``viewfs://``, so footer and probe-vector reads go through
+``fs._JStream``."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ from parquery_spark import fs, relations
 from parquery_spark.queries import (
     q09_missing_column_splice,
     q185_item_similarity,
+    q220_triplet_mining,
 )
 
 _MOUNT = "fs.viewfs.mounttable.pqs.link./data"
@@ -47,6 +49,16 @@ def test_artifact_query_over_viewfs(spark, viewfs_sf_dir, sf_dir):
     them through ``fs``, so a non-local ``sf_dir`` reaches Spark."""
     got = q185_item_similarity(spark, viewfs_sf_dir)
     want = q185_item_similarity(spark, sf_dir)
+    assert got.columns == want.columns
+    rows = sorted(got.collect())
+    assert rows and rows == sorted(want.collect())
+
+
+def test_probe_vector_query_over_viewfs(spark, viewfs_sf_dir, sf_dir):
+    """q220 reads its anchor vectors on the driver with pyarrow; on a
+    non-local ``sf_dir`` that read goes through ``fs.open_input``."""
+    got = q220_triplet_mining(spark, viewfs_sf_dir)
+    want = q220_triplet_mining(spark, sf_dir)
     assert got.columns == want.columns
     rows = sorted(got.collect())
     assert rows and rows == sorted(want.collect())
