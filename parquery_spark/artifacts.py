@@ -83,9 +83,9 @@ def _materialize_once(final_dir: str, build, marker: str = "_SUCCESS") -> str:
     two builders race, the rename loser discards its (bit-equivalent —
     content is a pure function of the stat key) copy.
 
-    ``build(tmp_dir)`` must leave ``tmp_dir/marker`` present.  A
-    half-written ``final_dir`` from a crashed legacy run (no marker) is
-    cleared before publishing.
+    ``build(tmp_dir)`` must leave ``tmp_dir/marker`` present; a build that
+    raises leaves nothing behind.  A half-written ``final_dir`` from a
+    crashed legacy run (no marker) is cleared before publishing.
     """
     if os.path.exists(os.path.join(final_dir, marker)):
         _check_artifact_owner(final_dir)
@@ -93,7 +93,11 @@ def _materialize_once(final_dir: str, build, marker: str = "_SUCCESS") -> str:
     # unique per ATTEMPT (not per process): two threads of one session
     # racing the same fixture must not share a build root
     tmp = f"{final_dir}.build-{uuid.uuid4().hex[:12]}"
-    build(tmp)
+    try:
+        build(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
     if not os.path.exists(os.path.join(tmp, marker)):
         raise OSError(
             f"fixture builder for {final_dir!r} did not produce {marker!r}"

@@ -1,7 +1,6 @@
 from parquery_spark.streaming.events import (
     dedup_stream,
     sessionize_stream,
-    sessionize_transform_with_state,
     windowed_event_counts,
     windowed_event_counts_batch,
 )
@@ -10,6 +9,5 @@ __all__ = [
     "windowed_event_counts",
     "windowed_event_counts_batch",
     "sessionize_stream",
-    "sessionize_transform_with_state",
     "dedup_stream",
 ]

@@ -14,6 +14,9 @@ the real streaming engine:
   query q30 uses — one definition of correctness for both modes.
 * Sessionization uses ``applyInPandasWithState`` (per-key timeout state),
   the custom-stateful-operator escape hatch.
+* :func:`drain` runs a bounded stream to completion into an artifact build
+  directory; it and :func:`await_drain` are the only code that waits on a
+  streaming query.
 """
 
 from __future__ import annotations
@@ -23,6 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
@@ -304,194 +308,68 @@ def interval_join_preagg(
     )
 
 
-def run_available_now(
-    stream_df: DataFrame,
-    name: str,
-    output_mode: str = "append",
-    timeout_sec: int = 300,
-    state_partitions: int | None = 8,
-    persist_tag: str | None = None,
-    version: str = "v1",
-):
-    """Drain a bounded stream through the real streaming engine
-    (``availableNow`` trigger → memory sink) and return the static result
-    table — the harness that lets streaming operators sit in the ORACLED
-    query suite: same watermark/state machinery as a live run, finite
-    input, deterministic output.
+#: state-store partitions of a drain, captured from
+#: ``spark.sql.shuffle.partitions`` at query start.  Stateful micro-batches
+#: pay a per-partition, per-batch store open/commit, so a 32-way layout on
+#: a laptop-sized stream spends more time on store churn than on data
+#: (measured: a 4-batch outer-join drain took 4x longer than at 8).
+DRAIN_STATE_PARTITIONS = 8
+#: seconds a drain may run before it is stopped and reported as overrun
+DRAIN_TIMEOUT_SEC = 300
 
-    ``state_partitions`` pins the state-store partition count for this
-    query (captured from ``spark.sql.shuffle.partitions`` at query
-    start, then frozen in the checkpoint).  Stateful micro-batches pay a
-    per-partition, per-batch state-store open/commit cost, so a 32-way
-    layout on a laptop-sized stream spends more time on store churn than
-    on data (measured: a 4-batch outer-join drain at 32 partitions took
-    4x longer than at 8).  On a cluster, size it to parallelism needs
-    once — it cannot change across restarts of the same checkpoint.
 
-    ``persist_tag`` (append mode only) switches from the throwaway
-    memory sink to a DURABLE parquet sink + checkpoint keyed by
-    ``(name, version, tag)`` — the production shape of an incremental
-    pipeline.  Re-running the same query over the same (stat-keyed)
-    input resumes the checkpoint, finds every source file already
-    committed, processes ZERO new batches, and the previous sink
-    contents ARE the result: that no-op resume is the streaming engine's
-    own exactly-once restart semantics doing the caching (the same
-    contract ``tests/test_multimodal_streaming.py``'s kill/restart tests
-    prove), not a result memo — new input files under the same tag drain
-    incrementally.  Complete-mode queries keep the memory sink (file
-    sinks are append-only).
+def drain(stream_df: DataFrame, out_dir: str, output_mode: str = "append") -> None:
+    """Run a bounded stream to completion through the real streaming
+    engine (``availableNow``: the same watermark and state machinery as a
+    live run, finite input) and write its result to ``out_dir`` as
+    parquet — the harness that lets streaming operators sit in the
+    oracled query suite.  Callers pass an artifact build directory
+    (``artifacts.artifact``), which owns naming, reuse and publishing.
 
-    ``version`` is the LOGIC version of the streaming transformation —
-    the checkpoint can only detect input changes, never code changes, so
-    editing the query's semantics while keeping the old version would
-    silently serve pre-edit results (the stat-keyed-fixture staleness
-    trap, NOTES.md).  Bump it at every call site whose transformation
-    changes."""
-    import tempfile
+    ``output_mode`` is ``"append"`` or ``"complete"``.  Each micro-batch
+    is written through ``foreachBatch``: appended in append mode,
+    overwriting in complete mode (each batch is then the whole result).
+    A stream that produces no batch writes an empty result with the
+    stream's schema.  The checkpoint lives beside ``out_dir`` for the
+    drain's duration only: a drain always starts from an empty one.  A
+    stream exception propagates; an overrun stops the stream and raises
+    ``TimeoutError`` (:func:`await_drain`)."""
+    import shutil
 
     spark = stream_df.sparkSession
+    mode = {"append": "append", "complete": "overwrite"}[output_mode]
+    wrote = []
+
+    def write(batch: DataFrame, batch_id: int) -> None:
+        batch.write.mode(mode).parquet(out_dir)
+        wrote.append(batch_id)
+
+    ckpt = out_dir.rstrip("/") + ".checkpoint"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(DRAIN_STATE_PARTITIONS))
     try:
-        if persist_tag is not None and output_mode == "append":
-            base = os.path.join(
-                tempfile.gettempdir(),
-                f"pqs_drain_{name}_{version}_{persist_tag}",
-            )
-            sink, ckpt = os.path.join(base, "sink"), os.path.join(
-                base, "ckpt"
-            )
-            q = (
-                stream_df.writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-            finished = q.awaitTermination(timeout_sec)
-            if q.exception() is not None:
-                raise q.exception()
-            if not finished:
-                # the drain overran the timeout and is STILL writing: a
-                # read now would silently return a truncated prefix
-                q.stop()
-                raise TimeoutError(
-                    f"streaming drain '{name}' exceeded {timeout_sec}s"
-                )
-            return spark.read.parquet(sink)
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
+        await_drain(
+            stream_df.writeStream.foreachBatch(write)
+            .option("checkpointLocation", ckpt)
             .outputMode(output_mode)
             .trigger(availableNow=True)
             .start()
         )
-        finished = q.awaitTermination(timeout_sec)
-        if q.exception() is not None:
-            raise q.exception()
-        if not finished:
-            q.stop()
-            raise TimeoutError(
-                f"streaming drain '{name}' exceeded {timeout_sec}s"
-            )
     finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return stream_df.sparkSession.table(name)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        shutil.rmtree(ckpt, ignore_errors=True)
+    if not wrote:
+        spark.createDataFrame([], stream_df.schema).write.parquet(out_dir)
 
 
-def sessionize_transform_with_state(
-    stream: DataFrame, gap_minutes: int = 30
-) -> DataFrame:
-    """Sessionization TWIN of :func:`sessionize_stream` on Spark 4's
-    transformWithStateInPandas (VERDICT r11 #8): identical semantics —
-    per-user (start_ms, end_ms, n) state, a session row emitted when the
-    inactivity gap expires — expressed through the new API's typed
-    ValueState + explicit processing-time timers instead of
-    applyInPandasWithState's GroupState timeout.  The timer re-arm on
-    every input batch (delete + register now+gap) is exactly what
-    ``state.setTimeoutDuration`` does under the old API, so both
-    operators observe the same micro-batch sequence identically;
-    ``tests/test_multimodal_streaming.py::TestTransformWithState``
-    pins that parity differentially wherever protobuf is installed.
-
-    ENVIRONMENT GATE: the API's Python worker speaks protobuf to the
-    state server; ``google.protobuf`` is not installed in this sandbox,
-    so calling this raises with a clear diagnosis and the
-    applyInPandasWithState implementation (q97) carries the oracle
-    gate.  On a protobuf-enabled cluster this is the forward-compatible
-    operator — RocksDB-backed state, typed handles, timer API."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires google.protobuf, which "
-            "is not installed in this environment; use "
-            "sessionize_stream / applyInPandasWithState (see q97) instead"
-        ) from e
-
-    import pandas as pd
-
-    from pyspark.sql.streaming import StatefulProcessor
-
-    gap_ms = gap_minutes * 60 * 1000
-
-    class Sessionizer(StatefulProcessor):
-        def init(self, handle):
-            self._handle = handle
-            self._state = handle.getValueState(
-                "sess", "start_ms long, end_ms long, n long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            ts_min, ts_max, count = None, None, 0
-            for pdf in rows:
-                if len(pdf) == 0:
-                    continue
-                bmin, bmax = pdf["ts"].min(), pdf["ts"].max()
-                ts_min = bmin if ts_min is None else min(ts_min, bmin)
-                ts_max = bmax if ts_max is None else max(ts_max, bmax)
-                count += len(pdf)
-            if count:
-                if self._state.exists():
-                    start_ms, _, n = self._state.get()
-                else:
-                    start_ms, n = ts_min.value // 1_000_000, 0
-                self._state.update(
-                    (start_ms, ts_max.value // 1_000_000, n + count)
-                )
-                # re-arm the inactivity timer: the old API's
-                # setTimeoutDuration semantics, spelled explicitly
-                for t in self._handle.listTimers():
-                    self._handle.deleteTimer(t)
-                self._handle.registerTimer(
-                    timerValues.getCurrentProcessingTimeInMs() + gap_ms
-                )
-            yield from ()
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            if self._state.exists():
-                start_ms, end_ms, n = self._state.get()
-                self._state.clear()
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]],
-                        "session_start": [
-                            pd.Timestamp(start_ms, unit="ms")
-                        ],
-                        "session_end": [pd.Timestamp(end_ms, unit="ms")],
-                        "n_events": [n],
-                    }
-                )
-
-        def close(self):
-            pass
-
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        Sessionizer(),
-        outputStructType=SESSION_SCHEMA,
-        outputMode="append",
-        timeMode="processingTime",
-    )
+def await_drain(query: StreamingQuery) -> None:
+    """Wait for a started ``availableNow`` query to finish.  A query that
+    failed raises its ``StreamingQueryException`` (``awaitTermination``
+    re-raises it); one still running after :data:`DRAIN_TIMEOUT_SEC` is
+    stopped (so it writes nothing more) and raises ``TimeoutError`` —
+    reading its output now would return a truncated prefix."""
+    if not query.awaitTermination(DRAIN_TIMEOUT_SEC):
+        query.stop()
+        raise TimeoutError(
+            f"streaming drain {query.id} exceeded {DRAIN_TIMEOUT_SEC}s"
+        )

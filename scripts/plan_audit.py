@@ -190,11 +190,12 @@ WHITELIST = {
         " Arrow kernel at index-build time",
         "q50_multimodal_features": "mapInPandas decode IS the operator"
         " (warm-up/fixture executions)",
-        "q227_streaming_minhash_dedup": "the streaming drain runs at"
-        " query construction; its Arrow-batched signature kernel"
-        " (mapInPandas) + applyInPandasWithState state machine ARE the"
-        " operator (streaming/docs.py) — the returned rollup plan is"
-        " pure JVM",
+        "q227_streaming_minhash_dedup": "the streaming drains run while"
+        " their artifacts build, once per corpus version; the"
+        " Arrow-batched signature kernel (mapInPandas) +"
+        " applyInPandasWithState state machine ARE the operator"
+        " (streaming/docs.py) — the returned rollup plan reads the"
+        " drained parquet and is pure JVM",
         "q222_binary_file_ingest": "mapInPandas decode IS the operator"
         " (fixture build + listing executions)",
     },

@@ -225,17 +225,17 @@ def run_streaming(spark, sf_dir: str, provider: str | None = None) -> dict:
     the final watermark (should stay ~= the declared watermark delay at
     ANY scale — a growing lag means the drain can't keep up).
 
-    Stale drain checkpoints for THIS input are cleared first so every
-    scale runs a real drain (a resumed checkpoint processes zero batches
-    and would report empty state — the exactly-once no-op, not a
-    measurement)."""
-    import glob
+    Artifacts are cleared first (``artifacts.clear``, which keeps the
+    ``*smoke*`` tables) so every scale runs a real drain: a drained
+    artifact is read back without starting a stream and would report no
+    batches — an artifact read, not a measurement."""
     import json as _json
-    import shutil
 
     import __spark_entry__ as e
     from pyspark.sql import functions as F
     from pyspark.sql.streaming import StreamingQueryListener
+
+    from parquery_spark import artifacts
 
     class _Tap(StreamingQueryListener):
         def __init__(self):
@@ -256,21 +256,8 @@ def run_streaming(spark, sf_dir: str, provider: str | None = None) -> dict:
         def onQueryTerminated(self, event):
             pass
 
-    # force real drains: drop durable drain sinks/checkpoints for the
-    # streaming names measured here (they rebuild in this run; the smoke
-    # owns the machine per the one-workload-at-a-time rule)
-    # glob roots MUST match where run_available_now builds its drain dirs
-    # (tempfile.gettempdir(), not a hard-coded /tmp) — with TMPDIR set
-    # elsewhere a /tmp glob silently no-ops and the "forced real drain"
-    # resumes a warm checkpoint, measuring a cached result
-    import tempfile as _tempfile
-
-    _tmp = _tempfile.gettempdir()
-    for stem in ("pqs_drain_q97_sink_*", "pqs_drain_q157_sink_*",
-                 "pqs_drain_q227_sink_*"):
-        for d in glob.glob(os.path.join(_tmp, stem)):
-            shutil.rmtree(d, ignore_errors=True)
-
+    # held while the drains run: a second clearing run fails fast
+    lock = artifacts.clear()
     tap = _Tap()
     spark.streams.addListener(tap)
     qs = e.queries()
@@ -363,6 +350,7 @@ def run_streaming(spark, sf_dir: str, provider: str | None = None) -> dict:
                 "watermark_lag_sec": lag,
             }
     finally:
+        lock.close()
         spark.streams.removeListener(tap)
         if provider == "rocksdb":
             if _prev_prov is None:

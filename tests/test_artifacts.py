@@ -19,9 +19,8 @@ from parquery_spark import artifacts, fs, relations
 PACKAGE = Path(__file__).resolve().parent.parent / "parquery_spark"
 
 #: the only modules that may name a path under the temp root: the artifact
-#: store, the snapshot-copy fallback of ``aggregate._pinned_snapshot`` and the
-#: durable drain sink of ``streaming.events.run_available_now``
-TEMPDIR_CALLERS = {"artifacts.py", "aggregate.py", "streaming/events.py"}
+#: store and the snapshot-copy fallback of ``aggregate._pinned_snapshot``
+TEMPDIR_CALLERS = {"artifacts.py", "aggregate.py"}
 
 
 @pytest.fixture
@@ -141,7 +140,7 @@ def _calls_gettempdir(node: ast.AST) -> bool:
     )
 
 
-def test_only_three_modules_name_temp_paths():
+def test_only_two_modules_name_temp_paths():
     """A new hand-built artifact path has to change this test in the open:
     artifacts are named by ``artifacts.artifact`` alone."""
     found = set()

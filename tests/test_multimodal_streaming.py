@@ -716,78 +716,6 @@ class TestStreamJoinRecovery:
         assert sorted(ids) == [1, 2, 3]
 
 
-class TestTransformWithState:
-    def test_sessionize_twin_gated_on_protobuf(self, spark, tmp_path):
-        """The sessionize twin (VERDICT r11 #8) carries the same
-        environment gate: a clear diagnosis pointing at the
-        applyInPandasWithState implementation, never a worker crash."""
-        import pytest
-
-        from parquery_spark.streaming.events import (
-            sessionize_transform_with_state,
-        )
-
-        stream = spark.readStream.schema(EVENT_SCHEMA).parquet(
-            str(tmp_path)
-        )
-        try:
-            import google.protobuf  # noqa: F401
-        except ImportError:
-            with pytest.raises(NotImplementedError, match="protobuf"):
-                sessionize_transform_with_state(stream)
-            return
-        pytest.skip("protobuf present — parity test below runs instead")
-
-    def test_sessionize_twin_matches_old_api(
-        self, spark, event_dir, tmp_path
-    ):
-        """DIFFERENTIAL parity (VERDICT r11 #8 done-criterion): the
-        transformWithStateInPandas sessionizer and the
-        applyInPandasWithState one drain the SAME micro-batches and
-        must emit identical session rows.  Runs only where
-        google.protobuf is installed (not this sandbox); here the
-        environment gate above pins the refusal path instead."""
-        import pytest
-
-        try:
-            import google.protobuf  # noqa: F401
-        except ImportError:
-            pytest.skip(
-                "transformWithStateInPandas needs protobuf — gate "
-                "asserted by test_sessionize_twin_gated_on_protobuf"
-            )
-
-        from parquery_spark.streaming.events import (
-            sessionize_stream,
-            sessionize_transform_with_state,
-        )
-
-        def drain(df, name):
-            q = (
-                df.writeStream.format("memory").queryName(name)
-                .outputMode("append").trigger(availableNow=True).start()
-            )
-            q.awaitTermination(120)
-            if q.exception() is not None:
-                raise q.exception()
-            return {
-                (r["user_id"], r["session_start"], r["session_end"],
-                 r["n_events"])
-                for r in spark.table(name).collect()
-            }
-
-        old = drain(
-            sessionize_stream(spark, event_dir, EVENT_SCHEMA), "sess_old"
-        )
-        new_stream = spark.readStream.schema(EVENT_SCHEMA).parquet(
-            event_dir
-        )
-        new = drain(
-            sessionize_transform_with_state(new_stream), "sess_new"
-        )
-        assert old == new
-
-
 class TestMidStreamKillResume:
     def test_midstream_kill_and_resume_join_exactly_once(
         self, spark, tmp_path
@@ -896,59 +824,6 @@ class TestMidStreamKillResume:
         got = sorted((r["c_event_id"], r["c_user"]) for r in rows)
         # exactly once each, wherever the kill landed
         assert got == [(0, 1), (1, 2), (2, 3), (3, 4)]
-
-
-class TestPersistentDrainIncremental:
-    def test_persist_tag_resumes_and_drains_new_files(self, spark, tmp_path):
-        """The durable-sink drain (run_available_now persist_tag) is the
-        engine's incremental resume, NOT a result memo: same input →
-        no-op resume returns the same relation; a NEW file under the same
-        tag → only the delta is processed and the sink grows by exactly
-        its contribution."""
-        import datetime as dt
-
-        from pyspark.sql import functions as F
-
-        from parquery_spark.streaming.events import run_available_now
-
-        base = dt.datetime(2024, 1, 1)
-        src = str(tmp_path / "src")
-        schema = "event_id long, ts timestamp, user_id long, value double"
-
-        def write_file(rows):
-            (spark.createDataFrame(rows, schema).coalesce(1)
-             .write.mode("append").parquet(src))
-
-        def drain():
-            stream = (
-                spark.readStream.schema(schema).parquet(src)
-                .withWatermark("ts", "10 minutes")
-                .select("event_id", "user_id")
-            )
-            # tag must key on the FULL source path: pytest tmp basenames
-            # repeat across runs, and a reused checkpoint pointing at a
-            # previous run's src dir fails with a basePath mismatch —
-            # the real call sites stat-key for the same reason
-            import hashlib
-
-            tag = hashlib.md5(str(tmp_path).encode()).hexdigest()[:10]
-            return run_available_now(
-                stream, "inc_drain_sink", output_mode="append",
-                persist_tag=f"test{tag}",
-            )
-
-        write_file([(1, base, 1, 1.0), (2, base, 2, 1.0)])
-        r1 = sorted(r["event_id"] for r in drain().collect())
-        assert r1 == [1, 2]
-
-        # no new input: pure no-op resume, identical result
-        r2 = sorted(r["event_id"] for r in drain().collect())
-        assert r2 == [1, 2]
-
-        # new file: incremental drain appends exactly the delta
-        write_file([(3, base + dt.timedelta(minutes=1), 3, 1.0)])
-        r3 = sorted(r["event_id"] for r in drain().collect())
-        assert r3 == [1, 2, 3]
 
 
 class TestBinaryFileSource:

@@ -71,7 +71,7 @@ class TestStreamingMinhashDedup:
         and file 2 (batch 2) the near-copy — a per-batch (stateless)
         implementation would vote 0 for both."""
         from parquery_spark.streaming.docs import minhash_dedup_stream
-        from parquery_spark.streaming.events import run_available_now
+        from parquery_spark.streaming.events import drain
 
         text_a = "the quick brown fox jumps over the lazy dog tonight"
         feed = tmp_path / "feed"
@@ -92,9 +92,8 @@ class TestStreamingMinhashDedup:
         stream = minhash_dedup_stream(
             spark, str(feed), options={"maxFilesPerTrigger": "1"}
         )
-        votes = run_available_now(
-            stream, "t_sdedup_sink", output_mode="append"
-        )
+        drain(stream, str(tmp_path / "t_sdedup_sink"))
+        votes = spark.read.parquet(str(tmp_path / "t_sdedup_sink"))
         verdict = {
             r["doc_id"]: r["is_dup"]
             for r in votes.groupBy("doc_id")
@@ -108,7 +107,7 @@ class TestStreamingMinhashDedup:
         cardinality: votes rows = bands × docs, state keys = distinct
         (band, band_key) — the rate-invariance contract."""
         from parquery_spark.streaming.docs import minhash_dedup_stream
-        from parquery_spark.streaming.events import run_available_now
+        from parquery_spark.streaming.events import drain
 
         text = "alpha beta gamma delta epsilon zeta eta theta"
         df = spark.createDataFrame(
@@ -117,9 +116,8 @@ class TestStreamingMinhashDedup:
         src = tmp_path / "src"
         df.coalesce(1).write.parquet(str(src))
         stream = minhash_dedup_stream(spark, str(src))
-        votes = run_available_now(
-            stream, "t_sdedup_sink2", output_mode="append"
-        )
+        drain(stream, str(tmp_path / "t_sdedup_sink2"))
+        votes = spark.read.parquet(str(tmp_path / "t_sdedup_sink2"))
         rows = votes.collect()
         assert len(rows) == 5 * 4  # one vote per (doc, band)
         # identical docs share every bucket -> 4 distinct state keys,
@@ -158,7 +156,7 @@ class TestStateCompaction:
             compact_minhash_index,
             minhash_dedup_stream,
         )
-        from parquery_spark.streaming.events import run_available_now
+        from parquery_spark.streaming.events import drain
 
         text_a = "the quick brown fox jumps over the lazy dog tonight"
         text_b = "grep the logs for retry markers and flaky test names"
@@ -168,9 +166,8 @@ class TestStateCompaction:
         feed1 = self._stage(tmp_path, "p1", None)
         self._write_batch(spark, tmp_path, feed1, 1, p1_rows)
         stream1 = minhash_dedup_stream(spark, str(feed1))
-        votes1 = run_available_now(
-            stream1, "t_compact_p1", output_mode="append"
-        )
+        drain(stream1, str(tmp_path / "t_compact_p1"))
+        votes1 = spark.read.parquet(str(tmp_path / "t_compact_p1"))
         v1 = votes1.groupBy("doc_id").agg(
             F.max("dup_vote").alias("is_dup")
         ).collect()
@@ -188,9 +185,8 @@ class TestStateCompaction:
         feed2 = self._stage(tmp_path, "p2", None)
         self._write_batch(spark, tmp_path, feed2, 1, p2_rows)
         stream2 = minhash_dedup_stream(spark, str(feed2), index_df=idx)
-        votes2 = run_available_now(
-            stream2, "t_compact_p2", output_mode="append"
-        )
+        drain(stream2, str(tmp_path / "t_compact_p2"))
+        votes2 = spark.read.parquet(str(tmp_path / "t_compact_p2"))
         v2 = {
             r["doc_id"]: r["is_dup"]
             for r in votes2.groupBy("doc_id")
@@ -203,9 +199,8 @@ class TestStateCompaction:
         # without the index the evicted state under-votes doc 4 — proves
         # the verdicts above really came from the compacted index
         stream_no_idx = minhash_dedup_stream(spark, str(feed2))
-        votes_no = run_available_now(
-            stream_no_idx, "t_compact_p2_noidx", output_mode="append"
-        )
+        drain(stream_no_idx, str(tmp_path / "t_compact_p2_noidx"))
+        votes_no = spark.read.parquet(str(tmp_path / "t_compact_p2_noidx"))
         vno = {
             r["doc_id"]: r["is_dup"]
             for r in votes_no.groupBy("doc_id")
