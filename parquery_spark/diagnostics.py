@@ -3,9 +3,10 @@
 ``record`` runs one query and returns one structured record: the wall
 split into plan construction (the call that returns the DataFrame) and
 execution (the drain), plus the Spark work the call launched, read from
-the JVM status store.  The status store is fed with the UI off, so no
-harness has to switch the UI on or raise its retention settings to
-measure.  ``bench.session`` is the matching harness session.
+the JVM status store, and the generated classes it compiled.  The status
+store is fed with the UI off, so no harness has to switch the UI on or
+raise its retention settings to measure.  ``bench.session`` is the
+matching harness session.
 """
 
 from __future__ import annotations
@@ -31,12 +32,15 @@ def record(spark, name: str, call, drain=_rows) -> dict:
       (streaming micro-batches run under their own);
     * ``stages``, ``tasks``, ``shuffle_write_bytes``, ``spill_bytes`` —
       over the stages that ran during the call;
+    * ``codegen_compiles`` / ``codegen_s`` — generated classes Janino
+      compiled during the whole call, and the seconds it spent (JVM-wide
+      counters: a warm call whose shapes sit in the class cache reads 0);
     * ``construct_executions`` — ids of the SQL executions construction
       ran (read them with ``sql_store(spark).execution(id)``);
     * ``result`` — what ``drain`` returned.
 
-    Status-store reads happen outside both timings, after the listener
-    bus has delivered every event.
+    Status-store and compile-counter reads happen outside both timings,
+    after the listener bus has delivered every event.
     """
     sc = spark.sparkContext
     jsc = sc._jsc.sc()
@@ -44,6 +48,7 @@ def record(spark, name: str, call, drain=_rows) -> dict:
     sql = sql_store(spark)
     jsc.listenerBus().waitUntilEmpty()
     last_exec = _last_execution_id(sql)
+    compiles0, compile_ns0 = _codegen(spark)
     sc.setJobGroup(name, name)
     try:
         job0 = dag.nextJobId()
@@ -61,6 +66,7 @@ def record(spark, name: str, call, drain=_rows) -> dict:
     finally:
         sc._jsc.clearJobGroup()
     jsc.listenerBus().waitUntilEmpty()
+    compiles1, compile_ns1 = _codegen(spark)
     return {
         "name": name,
         "construct_s": round(t1 - t0, 4),
@@ -68,6 +74,8 @@ def record(spark, name: str, call, drain=_rows) -> dict:
         "jobs": job2 - job0,
         "construct_jobs": job1 - job0,
         **_stage_totals(jsc.statusStore(), range(job0, job2), since_ms),
+        "codegen_compiles": compiles1 - compiles0,
+        "codegen_s": round((compile_ns1 - compile_ns0) / 1e9, 4),
         "construct_executions": executions,
         "result": result,
     }
@@ -76,6 +84,22 @@ def record(spark, name: str, call, drain=_rows) -> dict:
 def sql_store(spark):
     """The session's SQL execution store (plans of every execution)."""
     return spark._jsparkSession.sharedState().statusStore()
+
+
+def _codegen(spark) -> tuple[int, int]:
+    """(classes compiled, nanoseconds compiling) since JVM start: the
+    compile-time histogram's count and ``CodeGenerator.compileTime``."""
+    jvm = spark._jvm
+    metrics = getattr(
+        getattr(jvm.org.apache.spark.metrics.source, "CodegenMetrics$"),
+        "MODULE$",
+    )
+    gen = getattr(
+        getattr(jvm.org.apache.spark.sql.catalyst.expressions.codegen,
+                "CodeGenerator$"),
+        "MODULE$",
+    )
+    return metrics.METRIC_COMPILATION_TIME().getCount(), gen.compileTime()
 
 
 def _last_execution_id(sql) -> int:

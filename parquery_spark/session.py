@@ -54,6 +54,17 @@ _DEFAULTS = {
     # breaks every reader that dispatches on the physical type (and is
     # deprecated in the parquet spec).
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+    # Generated-class cache (a static conf: read once, when the session is
+    # built).  Spark's default of 100 entries thrashes on a repeating query
+    # mix, so every warm call re-ran Janino: a warm pass over the 13-query
+    # perfbench `registry` subset recompiled 113-133 classes, one over the
+    # 218-query registry ~3,130 (20-23 s of a 77-81 s pass; sf0.001, 4
+    # cores).  At 4096 those passes compile 0 and 34-47 classes (0.5-0.6 s
+    # of a 68-70 s pass).  The registry's working set is ~2,900 classes,
+    # so 4096 holds it with headroom for larger-scale plan variants; JVM
+    # metaspace after a 3-pass registry run was 231 MB, against 199 MB at
+    # 100.
+    "spark.sql.codegen.cache.maxEntries": "4096",
 }
 
 
@@ -65,14 +76,6 @@ _SMALL_QUERY_CONF = {
     # aggregated results are small by contract; one reduce task collects
     # fastest
     "spark.sql.shuffle.partitions": "1",
-    # Whole-stage codegen ON: the first occurrence of a plan shape pays
-    # Janino compilation (~0.2-0.4s), but the generated-class cache makes
-    # every repeat of that shape ~20-30% faster than interpreted execution
-    # (measured at 600k rows: ~85-110ms/query compiled-warm vs ~110-150ms
-    # interpreted).  Production query mixes repeat shapes
-    # (same dashboards, different filter values — named-parameter binding
-    # keeps the plan shape stable), so warm-shape latency is the metric.
-    "spark.sql.codegen.wholeStage": "true",
 }
 
 _small_sessions: dict[int, SparkSession] = {}
@@ -121,7 +124,13 @@ def get_small_query_session(parent: SparkSession) -> SparkSession:
 
 
 def get_spark(app_name: str = "parquery_spark") -> SparkSession:
-    """Return the process-wide SparkSession, creating it on first use."""
+    """Return the process-wide SparkSession, creating it on first use.
+
+    ``_DEFAULTS`` (and ``PARQUERY_SPARK_CONF_*`` over them) apply only
+    when this call builds the session.  An already-active session is
+    adopted as it is, static confs included: it keeps whatever
+    generated-class cache bound (``spark.sql.codegen.cache.maxEntries``)
+    it was built with."""
     global _parent_session
     if _alive(_parent_session):
         return _parent_session

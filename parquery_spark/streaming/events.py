@@ -129,7 +129,11 @@ def sessionize_stream(
 ) -> DataFrame:
     """Custom stateful operator: per-user session assembly with a 30-minute
     inactivity timeout via ``applyInPandasWithState``.  State per key is a
-    3-tuple — constant memory per active user regardless of stream length."""
+    3-tuple — constant memory per active user regardless of stream length.
+
+    Not drainable: under an ``availableNow`` trigger the processing-time
+    timeout keeps the query running no-data batches, so it does not finish
+    while any session is open.  Run it live, or one batch at a time."""
     stream = spark.readStream.schema(schema).parquet(source_dir)
     return (
         stream.groupBy("user_id")

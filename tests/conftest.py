@@ -57,6 +57,19 @@ def spark():
     return get_spark("parquery_spark_tests")
 
 
+@pytest.fixture
+def no_live_streams(spark):
+    """Fail a test that leaves a streaming query running (and stop it,
+    so the tests after it share the session with no live stream)."""
+    yield
+    leaked = spark.streams.active
+    for q in leaked:
+        q.stop()
+    assert not leaked, (
+        f"streaming queries left running: {[q.name or q.id for q in leaked]}"
+    )
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

@@ -33,6 +33,33 @@ class TestRegressionRule:
     def test_rotation_is_not_a_regression(self):
         assert bench._regression_check({"new_q": 9.9}, {"old_q": 0.1}) == []
 
+    def test_breach_is_kept_only_if_its_remeasurement_holds(self):
+        """A first-look breach is re-measured CONFIRM_RUNS times: one
+        that re-measures clean (a noisy window) is dropped, one that
+        holds stays; a query that never breached is not re-run."""
+        old = {"noisy": 0.2, "real": 0.2, "fine": 0.2}
+        new = {"noisy": 0.9, "real": 0.9, "fine": 0.3}
+        samples = {"noisy": [0.95, 0.22, 0.8], "real": [0.9, 0.85, 0.88]}
+        calls = []
+
+        def rerun(name):
+            calls.append(name)
+            return samples[name][calls.count(name) - 1]
+
+        first, confirmed = bench._confirm_breaches(new, old, rerun)
+        assert [b.split(":")[0] for b in first] == ["noisy", "real"]
+        assert [b.split(":")[0] for b in confirmed] == ["real"]
+        assert "0.850s" in confirmed[0]  # the min over every sample
+        assert sorted(calls) == ["noisy"] * bench.CONFIRM_RUNS \
+            + ["real"] * bench.CONFIRM_RUNS
+
+    def test_codegen_totals_sum_a_pass(self):
+        recs = {
+            "q1": {"codegen_compiles": 3, "codegen_s": 0.1234},
+            "q2": {"codegen_compiles": 0, "codegen_s": 0.0},
+        }
+        assert bench._codegen_totals(recs) == {"compiles": 3, "s": 0.123}
+
     def test_load_baseline_full_and_driver_shapes(self, tmp_path):
         full = tmp_path / "full.json"
         full.write_text(json.dumps({"queries": {"q1": 1.0}}))

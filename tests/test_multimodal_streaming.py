@@ -7,7 +7,7 @@ import time
 import pytest
 
 # streaming-engine lifecycle integration (checkpoint restart, soak, kill/resume) — full-suite lane only (see conftest fast lane)
-pytestmark = pytest.mark.slow
+pytestmark = [pytest.mark.slow, pytest.mark.usefixtures("no_live_streams")]
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -16,6 +16,7 @@ from parquery_spark.streaming import (
     windowed_event_counts,
     windowed_event_counts_batch,
 )
+from parquery_spark.streaming.events import await_drain
 
 
 @pytest.fixture(scope="module")
@@ -459,7 +460,7 @@ class TestStreaming:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_drain(q)
         got = {
             (r["window_start"], r["event_type"]): (r["n"], r["total_value"])
             for r in spark.sql("SELECT * FROM win_counts").collect()
@@ -505,7 +506,7 @@ class TestStreaming:
                 .option("checkpointLocation", ckpt).outputMode("append")
                 .trigger(availableNow=True).start()
             )
-            q.awaitTermination(120)
+            await_drain(q)
             assert q.exception() is None
             return spark.read.parquet(sink)
 
@@ -536,15 +537,18 @@ class TestStreaming:
         assert set(out.columns) == {
             "user_id", "session_start", "session_end", "n_events"
         }
-        # run one availableNow pass to prove the stateful operator executes
+        # run one batch to prove the stateful operator executes.  Not
+        # availableNow: a processing-time timeout keeps an availableNow
+        # query running no-data batches while any session is open (this
+        # query was still running after 300 s)
         q = (
             out.writeStream.format("memory").queryName("sessions")
-            .outputMode("append").trigger(availableNow=True).start()
+            .outputMode("append").trigger(once=True).start()
         )
-        q.awaitTermination(120)
         # sessions only emit on timeout; zero rows after one pass is valid —
         # the assertion is that the stateful query ran to completion
-        assert not q.isActive or q.exception() is None
+        await_drain(q)
+        assert q.lastProgress["numInputRows"] == 40
 
 
 class TestStreamingSoak:
@@ -622,7 +626,7 @@ class TestStreamingDedup:
             out.writeStream.format("memory").queryName("dedup_out")
             .outputMode("append").trigger(availableNow=True).start()
         )
-        q.awaitTermination(120)
+        await_drain(q)
         got = [r["event_id"] for r in
                spark.sql("SELECT event_id FROM dedup_out").collect()]
         assert sorted(got) == list(range(10))  # each id exactly once
@@ -685,7 +689,7 @@ class TestStreamJoinRecovery:
                 .option("checkpointLocation", ckpt).outputMode("append")
                 .trigger(availableNow=True).start()
             )
-            q.awaitTermination(120)
+            await_drain(q)
             assert q.exception() is None
             return spark.read.parquet(sink).where("c_user >= 0")
 
@@ -816,7 +820,7 @@ class TestMidStreamKillResume:
             .option("path", sink).option("checkpointLocation", ckpt)
             .outputMode("append").trigger(availableNow=True).start()
         )
-        q2.awaitTermination(120)
+        await_drain(q2)
         assert q2.exception() is None
 
         rows = (spark.read.parquet(sink).where("c_user >= 0")
@@ -1172,9 +1176,7 @@ class TestRocksDBStateStore:
                 .outputMode("complete").trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(120)
-            if q.exception() is not None:
-                raise q.exception()
+            await_drain(q)  # re-raises the stream's exception
             return {
                 (r["window_start"], r["event_type"]):
                     (r["n"], r["total_value"])

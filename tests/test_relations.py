@@ -153,6 +153,8 @@ class TestSmallQuerySession:
         assert sq is not spark
         assert sq.sparkContext is spark.sparkContext
         assert sq.conf.get("spark.sql.adaptive.enabled") == "false"
+        # whole-stage codegen is Spark's default and the sibling keeps it
+        assert sq.conf.get("spark.sql.codegen.wholeStage") == "true"
         # memoized
         assert get_small_query_session(spark) is sq
 

@@ -14,7 +14,7 @@ import os
 import pytest
 
 # streaming state-store integration (micro-batch drains, checkpoint recovery) — full-suite lane only (see conftest fast lane)
-pytestmark = pytest.mark.slow
+pytestmark = [pytest.mark.slow, pytest.mark.usefixtures("no_live_streams")]
 from pyspark.sql import functions as F
 
 
@@ -305,6 +305,7 @@ class TestFuzzyDedupRecovery:
         import os as _os
 
         from parquery_spark.streaming.docs import minhash_dedup_stream
+        from parquery_spark.streaming.events import await_drain
 
         text_a = "alpha beta gamma delta epsilon zeta eta theta iota"
         text_b = "one small step for spark one giant leap for pipelines"
@@ -336,7 +337,7 @@ class TestFuzzyDedupRecovery:
                 .trigger(availableNow=True)
                 .start()
             )
-            assert q.awaitTermination(120)
+            await_drain(q)
             assert q.exception() is None
 
         stage(1, [(1, text_a), (2, text_b)])
