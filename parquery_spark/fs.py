@@ -33,6 +33,7 @@ from __future__ import annotations
 import glob as _glob
 import os
 import re
+import shutil
 from typing import Sequence
 
 _SCHEME_RE = re.compile(r"^([A-Za-z][A-Za-z0-9+.-]*)://")
@@ -263,6 +264,21 @@ def open_input(path: str):
             pass
     raise OSError(f"cannot open {path}: no filesystem backend for scheme "
                   f"{scheme_of(path)!r}")
+
+
+def link_or_copy(src: str, dst: str) -> None:
+    """Put the bytes of ``src`` at the local path ``dst``: a hardlink when
+    ``src`` is local (zero copy, and the link pins the file version), else,
+    or where the filesystem refuses the link, a byte copy read through
+    :func:`open_input`."""
+    if is_local(src):
+        try:
+            os.link(local_part(src), dst)
+            return
+        except OSError:
+            pass
+    with open_input(src) as fin, open(dst, "wb") as fout:
+        shutil.copyfileobj(fin, fout, 1 << 20)
 
 
 class _JStream:

@@ -944,13 +944,13 @@ def _index_prefix_chars(index_path: str, spark=None) -> int:
     """Prefix width of an existing index layout, read from its directory
     names (``bk_prefix=<value>`` under any ``band=*``).
 
-    Local paths list driver-side (one glob).  A NON-local layout
-    (``s3a://``, ``hdfs://``…) cannot be globbed with ``os`` primitives —
-    the former silent fallthrough to the default width made a probe
-    against a width-1 remote index prune to zero directories and admit
-    every duplicate (round-13 ADVICE).  With a session at hand the width
+    The layout is listed driver-side with one :func:`fs.glob` (Hadoop
+    ``globStatus`` for ``s3a://``, ``hdfs://``…).  Guessing the default
+    width for a layout that cannot be listed made a probe against a
+    width-1 remote index prune to zero directories and admit every
+    duplicate (round-13 ADVICE), so where no backend can list it the width
     is read from ONE row of the layout itself (the partition column is
-    part of every row); without one this raises instead of guessing."""
+    part of every row), and without a session this raises."""
     w = _index_prefix_chars_or_none(index_path, spark)
     return BAND_PREFIX_CHARS if w is None else w
 
@@ -958,16 +958,11 @@ def _index_prefix_chars(index_path: str, spark=None) -> int:
 def _index_prefix_chars_or_none(index_path: str, spark=None) -> int | None:
     """:func:`_index_prefix_chars` without the default: ``None`` when the
     layout holds no partition directory to read a width from."""
-    import glob as _glob
-    import os as _os
-
     from parquery_spark import fs as _fs
 
-    if _fs.is_local(index_path):
-        base = _fs.local_part(index_path)
-        for d in _glob.iglob(_os.path.join(base, "band=*", "bk_prefix=*")):
-            return len(_os.path.basename(d).split("=", 1)[1])
-        return None
+    dirs = _fs.glob(f"{index_path.rstrip('/')}/band=*/bk_prefix=*")
+    if dirs is not None:
+        return len(dirs[0].rsplit("=", 1)[1]) if dirs else None
     if spark is not None:
         rows = (
             spark.read.parquet(index_path)

@@ -82,7 +82,7 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     ReuseExchange as its zero-cache sharing mechanism, and a 27-query
     mini-bench ran 16% faster without the persisted copy; and real scans
     keep PushedFilters/partition pruning visible and honest."""
-    return relations.get_relation(spark, os.path.join(sf_dir, f"{table}.parquet"))
+    return relations.get_relation(spark, _path(sf_dir, table))
 
 
 def _path(sf_dir: str, table: str) -> str:
@@ -95,20 +95,14 @@ def _footer_rows(path: str) -> int:
     job when the relation is an unfiltered scan (round 12, guide §5 "the
     driver should do almost no data work" cuts both ways: a count JOB
     for a number the footers already hold is a scheduler round-trip
-    wasted).  A non-local file's footer is read through ``fs``."""
-    import glob as _glob
-
+    wasted).  Footers are read through ``fs``."""
     import pyarrow.parquet as papq
 
-    if not fs.is_local(path):
-        with fs.open_input(path) as fh:
-            return papq.read_metadata(fh).num_rows
-    if os.path.isdir(path):
-        return sum(
-            papq.read_metadata(p).num_rows
-            for p in _glob.glob(os.path.join(path, "*.parquet"))
-        )
-    return papq.read_metadata(path).num_rows
+    total = 0
+    for p in fs.glob(f"{path.rstrip('/')}/*.parquet") or [path]:
+        with fs.open_input(p) as fh:
+            total += papq.read_metadata(fh).num_rows
+    return total
 
 
 def _probe_rows(sf_dir: str, ids) -> list[dict]:
@@ -121,15 +115,11 @@ def _probe_rows(sf_dir: str, ids) -> list[dict]:
     fixture is written vec_id-ascending, which both the file-order
     collect and this read preserve); rows are dicts, a drop-in for the
     ``r["vec_id"]`` / ``r["embedding"]`` / ``r["label"]`` access pattern
-    of the Row objects they replace.  A non-local file is read through
-    ``fs``."""
+    of the Row objects they replace.  The file is read through ``fs``."""
     import pyarrow.parquet as papq
 
-    path = _path(sf_dir, "embeddings")
     filters = [("vec_id", "in", [int(i) for i in ids])]
-    if fs.is_local(path):
-        return papq.read_table(path, filters=filters).to_pylist()
-    with fs.open_input(path) as fh:
+    with fs.open_input(_path(sf_dir, "embeddings")) as fh:
         return papq.read_table(fh, filters=filters).to_pylist()
 
 
@@ -2258,9 +2248,8 @@ def q67_csv_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _build(t):
         os.makedirs(t)
-        tbl = papq.read_table(_path(sf_dir, "nation")).sort_by(
-            [("n_nationkey", "ascending")]
-        )
+        with fs.open_input(_path(sf_dir, "nation")) as fh:
+            tbl = papq.read_table(fh).sort_by([("n_nationkey", "ascending")])
         # vectorized, no per-row Python
         pacsv.write_csv(tbl, os.path.join(t, "nation.csv"))
 
@@ -3202,15 +3191,10 @@ def _events_stream_dir(sf_dir: str) -> str:
     (copy fallback) into a temp dir keyed by the file's stat identity —
     the file stream source requires a directory, and the link pins the
     snapshot the same way the batch read hardening does."""
-    import shutil
 
     def _build(t):
         os.makedirs(t)
-        src, dst = _path(sf_dir, "events"), os.path.join(t, "events.parquet")
-        try:
-            os.link(src, dst)
-        except OSError:
-            shutil.copy2(src, dst)
+        fs.link_or_copy(_path(sf_dir, "events"), os.path.join(t, "events.parquet"))
 
     return artifact(
         sf_dir, "events", _EVENTS_LINK_TAG, "events_src", _build,
@@ -3806,7 +3790,7 @@ def _sentinel_stream_dir(
 
     def _build(sent_dir):
         os.makedirs(sent_dir)
-        shutil.copy2(
+        fs.link_or_copy(
             _path(sf_dir, "events"), os.path.join(sent_dir, "events.parquet")
         )
         base = load_events(spark, sf_dir).select(
@@ -8586,9 +8570,6 @@ def q171_dynamic_partition_overwrite(
 
     def _build_dpo(t):
         table_dir = os.path.join(t, "daily")
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
         # full initial load
         daily.repartition("day").write.mode("overwrite").partitionBy(
             "day"
@@ -8607,9 +8588,11 @@ def q171_dynamic_partition_overwrite(
             (F.col("total_value") * 2).alias("total_value"),
             "day",
         )
-        patch.repartition("day").write.mode("overwrite").partitionBy(
-            "day"
-        ).parquet(table_dir)
+        # the per-write option, never the session conf: the session is
+        # shared, and dynamic mode writes no _SUCCESS marker
+        patch.repartition("day").write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("day").parquet(table_dir)
         after = {
             f: os.stat(os.path.join(table_dir, f)).st_mtime_ns
             for f in os.listdir(table_dir) if f.startswith("day=")
@@ -11477,8 +11460,7 @@ def _bpe_merges(
     from parquery_spark.operators.dedup import shingle_tokens
 
     src = _path(sf_dir, "documents")
-    st = os.stat(src)
-    key = (os.path.abspath(src), st.st_mtime_ns, st.st_size, n_merges)
+    key = (fs.canonical(src), *fs.stat(src), n_merges)
     if key not in _BPE_MERGES_CACHE:
         docs = load(spark, sf_dir, "documents")
         words = (
@@ -12707,9 +12689,10 @@ def q222_binary_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.makedirs(t, exist_ok=True)
         # predicate pushed into the parquet read: only the 60 fixture
         # rows reach the driver, not the whole corpus's text
-        tbl = papq.read_table(
-            src, columns=["doc_id", "text"], filters=[("doc_id", "<", 60)]
-        )
+        with fs.open_input(src) as fh:
+            tbl = papq.read_table(
+                fh, columns=["doc_id", "text"], filters=[("doc_id", "<", 60)]
+            )
         for doc_id, text in zip(
             tbl.column("doc_id").to_pylist(), tbl.column("text").to_pylist()
         ):

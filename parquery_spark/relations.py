@@ -18,9 +18,14 @@ file.  It serves every read: ``aggregate_pq``, ``aggregate_plan`` and the
 registry's ``queries.load``.  A replaced file has a new identity, so it
 gets a fresh relation, and that read evicts every entry over an older
 version of any of its files.  A path that cannot be stat'ed has no
-identity, so its relation is read fresh on every call.  An entry owns the
-temp view :func:`get_relation_view` registers for it; eviction and
-:func:`invalidate` drop it from the owning session's catalog.
+identity, so its relation is read fresh on every call.
+
+A second LRU, ``_plans``, maps (stat identity, SQL, args) to the analyzed
+SQL over a relation (:func:`relation_sql`).  Temp views are per analysis:
+a plan miss registers the relation under a fresh view name, analyzes the
+SQL over it and drops it before returning, so the session's catalog is
+left as it was found and no entry owns a view that eviction could drop
+under a concurrent reader.
 
 Spark's ``CacheManager`` is never used.  A persisted columnar copy of small
 inputs was measured and removed: it scanned every column of a file that
@@ -39,7 +44,7 @@ from typing import Callable, Sequence
 
 import pyarrow.parquet as papq
 from py4j.protocol import Py4JError
-from pyspark.errors import AnalysisException, PySparkException
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 
 from parquery_spark import fs
@@ -51,8 +56,6 @@ _lock = threading.RLock()
 _relations: "OrderedDict[tuple, DataFrame]" = OrderedDict()
 MAX_CACHED_RELATIONS = 512
 
-#: entry key -> the temp view the entry owns
-_views: dict[tuple, str] = {}
 _view_ids = itertools.count(1)
 
 
@@ -63,10 +66,10 @@ def _lazy_read(
 
     A miss reads the relation with :func:`_read` and evicts every entry
     over an older version of one of its files.  A reader still holding such
-    an entry's view is reading a file that has been replaced under it;
-    failing loud is right there (``pin_snapshot`` is the contract for
-    reads under concurrent writers, and snapshot paths are never
-    replaced).  The LRU trim never evicts the entry being returned.
+    an entry is reading a file that has been replaced under it; failing
+    loud is right there (``pin_snapshot`` is the contract for reads under
+    concurrent writers, and snapshot paths are never replaced).  The LRU
+    trim never evicts the entry being returned.
 
     A path no backend can stat (a remote URI without a metadata backend, a
     remote glob passed through verbatim, a file gone since the pre-flight)
@@ -102,12 +105,12 @@ _MAX_SCHEMA_ENTRIES = 256
 
 
 class SchemaUnreadableError(Exception):
-    """A LOCAL file was opened but its footer/header could not be parsed
+    """A file was opened but its footer/header could not be parsed
     (corrupt or truncated).  Reference parity: such a file contributes an
     empty column set and the query answers empty (reference:
-    parquery/tool.py:135-142, aggregate.py:165-170).  Distinct from the
-    backend-absent ``OSError`` (remote path, no metadata backend), which
-    callers must treat as "assume the columns exist" / fail loud."""
+    parquery/tool.py:135-142, aggregate.py:165-170).  Distinct from an
+    ``OSError`` (no backend, auth, a failed or short read), which callers
+    must treat as "assume the columns exist" / fail loud."""
 
 
 def schema_names(path: str) -> frozenset:
@@ -117,14 +120,13 @@ def schema_names(path: str) -> frozenset:
     columns appearing only deep in the file surface at read time via
     Spark's own inference).
 
-    Filesystem-agnostic: local paths read directly; remote URIs stat and
-    open through :mod:`parquery_spark.fs` (Hadoop FS / pyarrow.fs).  When
-    no backend can answer, this RAISES ``OSError`` — callers must treat
-    "schema unknown" as "assume the columns exist" and let the Spark scan
-    fail loud, never as an empty schema (the silent-empty-result class).
-    A *local* file that opens but fails to parse raises
-    :class:`SchemaUnreadableError` instead — the reference's tolerant
-    contract maps that to an empty result."""
+    Filesystem-agnostic: every path stats and opens through
+    :mod:`parquery_spark.fs`.  When no backend can answer, or a read
+    fails, this RAISES ``OSError`` — callers must treat "schema unknown"
+    as "assume the columns exist" and let the Spark scan fail loud, never
+    as an empty schema (the silent-empty-result class).  A file that opens
+    but fails to parse raises :class:`SchemaUnreadableError` instead — the
+    reference's tolerant contract maps that to an empty result."""
     mtime_ns, size = fs.stat(path)
     key = (fs.canonical(path), mtime_ns, size)
     with _lock:
@@ -132,27 +134,21 @@ def schema_names(path: str) -> frozenset:
         if names is not None:
             _schema_names.move_to_end(key)
             return names
-    if fs.is_local(path):
-        try:
-            names = _parse_schema_names(path)
-        except OSError:
-            # I/O failure on a local file (EACCES, transient NFS EIO,
-            # EMFILE...) is NOT the corrupt-content class: propagate, so
-            # the caller assumes the columns exist and the Spark scan
-            # fails LOUD — rebranding it "unreadable" would silently drop
-            # the file from the scan (the silent-partial-result class).
-            # pyarrow's ArrowIOError subclasses OSError, which is exactly
-            # right: an unreadable disk is an I/O problem, not parity.
-            raise
-        except Exception as exc:
-            # the file opened and CONTENT failed to parse (ArrowInvalid
-            # magic/footer, csv/json/unicode garbage): reference parity —
-            # corrupt local files contribute an empty column set
-            raise SchemaUnreadableError(f"unreadable schema: {path}") from exc
-    else:
-        # remote: any failure (no backend, auth, transient) must NOT look
-        # like "empty schema" — propagate so callers assume-present
+    try:
         names = _parse_schema_names(path)
+    except OSError:
+        # an I/O failure (EACCES, transient EIO, EMFILE, no backend, a
+        # failed or short remote read: ``fs`` streams raise OSError, and
+        # pyarrow's ArrowIOError subclasses it) is NOT the corrupt-content
+        # class: propagate, so the caller assumes the columns exist and
+        # the Spark scan fails LOUD — rebranding it "unreadable" would
+        # silently drop the file from the scan
+        raise
+    except Exception as exc:
+        # the file opened and CONTENT failed to parse (ArrowInvalid
+        # magic/footer, csv/json/unicode garbage): reference parity —
+        # corrupt files contribute an empty column set
+        raise SchemaUnreadableError(f"unreadable schema: {path}") from exc
     with _lock:
         _schema_names[key] = names
         while len(_schema_names) > _MAX_SCHEMA_ENTRIES:
@@ -192,17 +188,11 @@ def _parse_schema_names(path: str) -> frozenset:
     elif fmt == "orc":
         from pyarrow import orc as _orc
 
-        if fs.is_local(path):
-            names = frozenset(_orc.ORCFile(fs.local_part(path)).schema.names)
-        else:
-            with fs.open_input(path) as fh:
-                names = frozenset(_orc.ORCFile(fh).schema.names)
+        with fs.open_input(path) as fh:
+            names = frozenset(_orc.ORCFile(fh).schema.names)
     else:
-        if fs.is_local(path):
-            names = frozenset(papq.read_schema(fs.local_part(path)).names)
-        else:
-            with fs.open_input(path) as fh:
-                names = frozenset(papq.read_schema(fh).names)
+        with fs.open_input(path) as fh:
+            names = frozenset(papq.read_schema(fh).names)
     return names
 
 
@@ -375,35 +365,19 @@ def get_relation(spark: SparkSession, paths: str | Sequence[str]) -> DataFrame:
     return _lazy_read(spark, _expand(paths))[1]
 
 
-def get_relation_view(spark: SparkSession, paths: str | Sequence[str]) -> str:
-    """Resolve a path list to a registered temp-view name — the
-    single-Py4J-roundtrip query surface: ``spark.sql`` over the view costs
-    one gateway call, where the equivalent Column-API plan construction
-    costs dozens (~0.7 ms each).
-
-    The view belongs to the relation's cache entry: it is registered on the
-    entry's first view request and dropped with the entry.  A replaced
-    file gets a new entry, so a new view name.  A relation that is not
-    cached (see :func:`_lazy_read`) gets a one-off view, which the caller
-    drops; :func:`relation_sql` does."""
-    path_list = _expand(paths)
-    while True:
-        key, df = _lazy_read(spark, path_list)
-        with _lock:
-            if key is not None and key not in _relations:
-                continue  # evicted by a concurrent miss: a view needs an owner
-            name = _views.get(key)
-            if name is None:
-                name = f"__pq_rel_{next(_view_ids)}"
-                df.createOrReplaceTempView(name)
-                if key is not None:
-                    _views[key] = name
-            return name
+def get_relation_view(relation: DataFrame) -> str:
+    """Register ``relation`` as a temp view under a fresh name and return
+    the name.  The caller owns the view and drops it; no other code ever
+    names or drops it, so no thread can drop a view another is about to
+    analyze."""
+    name = f"__pq_rel_{next(_view_ids)}"
+    relation.createOrReplaceTempView(name)
+    return name
 
 
-def _owned(view: str) -> bool:
-    with _lock:
-        return view in _views.values()
+#: the name the SQL of :func:`relation_sql` is rendered over for its plan
+#: key; no view of this name is ever registered
+_PLACEHOLDER = "__pq_relation__"
 
 
 def relation_sql(
@@ -412,88 +386,89 @@ def relation_sql(
     render: Callable[[str], str],
     args: dict | None = None,
 ) -> DataFrame:
-    """The analyzed ``render(view)`` SQL, through :func:`cached_sql`, where
-    ``view`` names the relation over ``paths`` (:func:`get_relation_view`).
+    """The analyzed ``render(view)`` SQL, where ``view`` names the relation
+    over ``paths``, through :func:`cached_sql`.
 
-    An analyzed DataFrame no longer needs its view, so only the analysis
-    must see a live one.  A concurrent eviction can drop the view between
-    naming it and analyzing the SQL; analysis then fails with
-    ``TABLE_OR_VIEW_NOT_FOUND`` and the SQL is resolved again over a new
-    entry.  A one-off view is dropped once its SQL is analyzed."""
-    while True:
-        view = get_relation_view(spark, paths)
+    The plan is keyed on the relation's stat key, so a replaced file never
+    gets a stale plan.  A miss registers a fresh view, analyzes the SQL over
+    it and drops it: an analyzed DataFrame no longer needs its view."""
+    key, relation = _lazy_read(spark, _expand(paths))
+
+    def analyze() -> DataFrame:
+        view = get_relation_view(relation)
         try:
-            return cached_sql(spark, render(view), args)
-        except AnalysisException as exc:
-            if exc.getCondition() != "TABLE_OR_VIEW_NOT_FOUND" or _owned(view):
-                raise
+            sql = render(view)
+            return spark.sql(sql, args=args) if args else spark.sql(sql)
         finally:
-            if not _owned(view):
-                spark.catalog.dropTempView(view)
+            # the session catalog itself: ``spark.catalog.dropTempView``
+            # first re-analyzes the view to uncache it (0.8-1.1 ms against
+            # 0.13 ms, medians of 60 on 4 cores), and nothing caches a
+            # view that lives for one analysis
+            spark._jsparkSession.sessionState().catalog().dropTempView(view)
+
+    return cached_sql(key, render(_PLACEHOLDER), args, analyze)
 
 
-#: (session id, sql, frozen args) -> analyzed DataFrame.  A prepared-
-#: statement cache: Spark DataFrames are immutable lazy plans, so re-using
-#: one re-runs the job but skips parse, analysis, physical planning, and the
-#: codegen cache lookup (~40-60 ms/query at local scale).  Staleness safety:
-#: the SQL text embeds the relation's temp-view name, and view names are
-#: minted fresh per (path-set, mtime, size) identity — a replaced file gets a
-#: new view name, hence a new cache key, so a stale plan can never be served.
-#: Names are never reused, so plans over a dropped view just age out.
+#: (relation stat key, sql over the placeholder, frozen args) -> analyzed
+#: DataFrame.  A prepared-statement cache: Spark DataFrames are immutable
+#: lazy plans, so re-using one re-runs the job but skips parse, analysis,
+#: physical planning, and the codegen cache lookup (~40-60 ms/query at
+#: local scale).  The stat key carries the session id and every file's
+#: version, so plans are never shared across sessions or file versions.
 _plans: "OrderedDict[tuple, DataFrame]" = OrderedDict()
 MAX_CACHED_PLANS = 128
 
 
-def cached_sql(spark: SparkSession, sql: str, args: dict | None = None) -> DataFrame:
-    """``spark.sql`` through the prepared-plan cache.
-
-    ``args`` values are bound literals (part of the analyzed plan), so they
-    are part of the key; unhashable values fall through to a direct call.
-    """
+def cached_sql(
+    key: tuple | None, sql: str, args: dict | None, analyze: Callable[[], DataFrame]
+) -> DataFrame:
+    """``analyze()`` through the prepared-plan cache, keyed on the relation
+    ``key``, ``sql`` and ``args``.  ``args`` values are bound literals (part
+    of the analyzed plan), so they are part of the key.  A relation with no
+    key (see :func:`_lazy_read`) is analyzed afresh and not cached, since
+    its plan could never be hit again; so is SQL with an unhashable arg."""
     try:
-        akey = tuple(sorted(args.items())) if args else ()
-        key = (id(spark), sql, akey)
-        hash(key)  # force now: string keys sort without comparing values,
-        # so an unhashable VALUE (e.g. a list) survives sorted() and would
-        # otherwise blow up inside the cache lookup below
+        pkey = (key, sql, tuple(sorted(args.items())) if args else ())
+        hash(pkey)  # string keys sort without comparing values, so an
+        # unhashable VALUE (e.g. a list) survives sorted()
     except TypeError:
-        return spark.sql(sql, args=args) if args else spark.sql(sql)
+        pkey = None
+    if key is None or pkey is None:
+        return analyze()
     with _lock:
-        df = _plans.get(key)
+        df = _plans.get(pkey)
         if df is not None:
-            _plans.move_to_end(key)
+            _plans.move_to_end(pkey)
             return df
-    df = spark.sql(sql, args=args) if args else spark.sql(sql)
+    df = analyze()
     with _lock:
-        _plans[key] = df
+        _plans[pkey] = df
         while len(_plans) > MAX_CACHED_PLANS:
             _plans.popitem(last=False)
     return df
 
 
 def _evict(key: tuple) -> None:
-    """Drop one entry and its temp view.  The caller holds ``_lock``."""
-    df = _relations.pop(key, None)
-    view = _views.pop(key, None)
-    if view is None:
-        return
-    try:
-        df.sparkSession.catalog.dropTempView(view)
-    except Exception:
-        pass  # the session is already stopped
+    """Drop one entry.  The caller holds ``_lock``."""
+    _relations.pop(key, None)
 
 
 def invalidate(paths: str | Sequence[str] | None = None) -> None:
-    """Drop cached relations (with their views) and footer schemas: all of
-    them, or every one that reads any of ``paths`` (globs expanded, missing
-    files allowed)."""
+    """Drop cached relations, plans and footer schemas: all of them, or
+    every one that reads any of ``paths`` (globs expanded, missing files
+    allowed)."""
     gone = None
     if paths is not None:
         path_list = [paths] if isinstance(paths, str) else list(paths)
         gone = {fs.canonical(p) for p in expand_globs(path_list)}
+
+    def reads_gone(files) -> bool:
+        return gone is None or any(f[0] in gone for f in files)
+
     with _lock:
-        for key in [k for k in _relations
-                    if gone is None or any(f[0] in gone for f in k[1])]:
+        for key in [k for k in _relations if reads_gone(k[1])]:
             _evict(key)
-        for key in [k for k in _schema_names if gone is None or k[0] in gone]:
+        for key in [k for k in _plans if reads_gone(k[0][1])]:
+            del _plans[key]
+        for key in [k for k in _schema_names if reads_gone([k])]:
             del _schema_names[key]

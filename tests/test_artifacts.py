@@ -149,3 +149,16 @@ def test_only_two_modules_name_temp_paths():
         if any(_calls_gettempdir(n) for n in ast.walk(tree)):
             found.add(path.relative_to(PACKAGE).as_posix())
     assert found == TEMPDIR_CALLERS
+
+
+def test_q171_leaves_the_session_conf_alone(spark, sf_dir, tmp_root):
+    """q171's dynamic partition overwrite is a per-write option: the
+    shared session keeps static overwrites, so an artifact built after it
+    (a partitioned write that must leave ``_SUCCESS``) still publishes."""
+    from parquery_spark import queries
+
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(conf)
+    assert queries.q171_dynamic_partition_overwrite(spark, sf_dir).count() > 0
+    assert spark.conf.get(conf) == before
+    assert queries.q98_partitioned_dataset(spark, sf_dir).count() > 0

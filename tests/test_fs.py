@@ -11,7 +11,9 @@ checks must work for URI schemes, not just POSIX paths.  Three layers:
 
 from __future__ import annotations
 
+import ast
 import os
+from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as papq
@@ -20,6 +22,8 @@ import pytest
 from parquery_spark import fs, relations
 from parquery_spark.aggregate import aggregate_pq
 from parquery_spark.tool import MissingInputError
+
+PACKAGE = Path(__file__).resolve().parent.parent / "parquery_spark"
 
 
 def _write(path, a_vals):
@@ -314,3 +318,25 @@ class TestArtifactGC:
         assert got == final and os.path.isdir(final)
         assert not os.path.exists(stale[0])  # oldest reaped (budget 8)
         assert all(os.path.isdir(d) for d in stale[1:])  # 7 newest kept
+
+
+def test_no_local_remote_fork_outside_fs():
+    """Driver-side reads go through ``fs`` on every filesystem, so a
+    non-local ``sf_dir`` takes the path a local one does.  Only ``fs``
+    itself and the hardlink pinning of ``aggregate._pinned_snapshot``
+    (inodes are inherently local) may ask whether a path is local."""
+    found = set()
+    for path in sorted(PACKAGE.rglob("*.py")):
+        module = path.relative_to(PACKAGE).as_posix()
+        if module == "fs.py":
+            continue
+        tree = ast.parse(path.read_text(), str(path))
+        funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+        for node in ast.walk(tree):
+            func = getattr(node, "func", None)
+            name = getattr(func, "attr", getattr(func, "id", None))
+            if isinstance(node, ast.Call) and name in ("is_local", "local_part"):
+                owners = [f.name for f in funcs
+                          if f.lineno <= node.lineno <= f.end_lineno]
+                found.add(f"{module}:{owners[-1] if owners else '<module>'}")
+    assert found == {"aggregate.py:_pinned_snapshot"}

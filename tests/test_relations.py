@@ -1,12 +1,14 @@
 """Relation cache: plan reuse by file version, staleness on file replace,
-views and entries that leave with their file, nothing persisted, and
-thread-safety of the small-query fast path (no shared-conf mutation)."""
+entries that leave with their file, temp views that live for one analysis,
+nothing persisted, and thread-safety of the small-query fast path (no
+shared-conf mutation)."""
 
 from __future__ import annotations
 
 import os
 import sys
 import threading
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -27,6 +29,16 @@ def _plan(df) -> str:
 
 def _view_names(session) -> set[str]:
     return {r.viewName for r in session.sql("SHOW VIEWS").collect()}
+
+
+def _relation_views(spark) -> set[str]:
+    """The relation views left in the catalogs of both sessions."""
+    return {
+        v
+        for session in (spark, get_small_query_session(spark))
+        for v in _view_names(session)
+        if v.startswith("__pq_rel_")
+    }
 
 
 class _Unversioned:
@@ -100,18 +112,18 @@ class TestRelationCache:
         assert "collect_set" not in plan.lower()
 
     def test_lru_eviction(self, spark, tmp_path, monkeypatch):
-        """The one LRU is bounded, and an evicted entry takes its temp
-        view out of the session's catalog."""
+        """The one LRU is bounded; a plan over an evicted entry still runs,
+        and no read leaves a view in the session's catalog."""
         monkeypatch.setattr(relations, "MAX_CACHED_RELATIONS", 2)
-        views = []
+        plans = []
         for i in range(3):
             p = str(tmp_path / f"t{i}.parquet")
             _write(p, [i], [float(i)])
-            views.append(relations.get_relation_view(spark, p))
+            plans.append(aggregate_plan(p, ["d"], [["m", "sum", "s"]], spark=spark))
         with relations._lock:
             assert len(relations._relations) <= 2
-        names = _view_names(spark)
-        assert views[0] not in names and set(views[1:]) <= names
+        assert [r["s"] for r in plans[0].collect()] == [0.0]
+        assert not _relation_views(spark)
 
     def test_results_identical_with_and_without_cache(self, spark, sf_dir):
         path = os.path.join(sf_dir, "orders.parquet")
@@ -196,26 +208,32 @@ class TestSmallQuerySession:
 
 class TestPlanCache:
     """Prepared-plan cache (`relations.cached_sql`): repeats skip
-    parse/analysis; staleness is keyed away by per-file-version view names."""
+    parse/analysis; staleness is keyed away by the relation's stat key."""
 
     def test_repeat_returns_memoized_dataframe(self, spark, tmp_path):
         p = str(tmp_path / "pc.parquet")
         _write(p, [1, 2, 2], [1.0, 2.0, 3.0])
-        view = relations.get_relation_view(spark, p)
-        sql = f"SELECT d, SUM(m) AS s FROM {view} GROUP BY d"
-        df1 = relations.cached_sql(spark, sql)
-        df2 = relations.cached_sql(spark, sql)
+
+        def sql(view):
+            return f"SELECT d, SUM(m) AS s FROM {view} GROUP BY d"
+
+        df1 = relations.relation_sql(spark, p, sql)
+        df2 = relations.relation_sql(spark, p, sql)
         assert df1 is df2
+
         # args are part of the key: a different bound literal is a new plan
-        psql = f"SELECT d FROM {view} WHERE m > :lo"
-        a = relations.cached_sql(spark, psql, {"lo": 1.5})
-        b = relations.cached_sql(spark, psql, {"lo": 2.5})
+        def psql(view):
+            return f"SELECT d FROM {view} WHERE m > :lo"
+
+        a = relations.relation_sql(spark, p, psql, {"lo": 1.5})
+        b = relations.relation_sql(spark, p, psql, {"lo": 2.5})
         assert a is not b
         assert a.count() == 2 and b.count() == 1
+        assert not _relation_views(spark)
 
     def test_replaced_file_never_serves_stale_plan(self, spark, tmp_path):
-        """os.replace → new stat identity → new view name → new SQL text →
-        the memoized plan for the old version can never be keyed to."""
+        """os.replace → new stat identity → new plan key → the memoized
+        plan for the old version can never be keyed to."""
         p = str(tmp_path / "pc2.parquet")
         _write(p, [1], [10.0])
         r1 = aggregate_pq(p, ["d"], [["m", "sum", "s"]])
@@ -226,21 +244,25 @@ class TestPlanCache:
         assert r1.column("s").to_pylist() == [10.0]
         assert r2.column("s").to_pylist() == [99.0]
 
-    def test_one_view_per_relation_entry(self, spark, sf_dir):
-        """A relation entry owns one view: repeats in a session share it,
-        another session (its own entry) gets a distinct name, so the
-        memoized plans of one session can never be keyed to by the other;
-        the plan over the view scans the file."""
+    def test_plans_never_shared_across_sessions(self, spark, sf_dir):
+        """The same SQL over the same file is one plan per session: the
+        stat key carries the session, so a plan analyzed in one session is
+        never served to the other.  The plan scans the file."""
         path = os.path.join(sf_dir, "orders.parquet")
-        v1 = relations.get_relation_view(spark, path)
-        assert relations.get_relation_view(spark, path) == v1
-        vsmall = relations.get_relation_view(get_small_query_session(spark), path)
-        assert vsmall != v1 and v1 in _view_names(spark)
-        spec = (["o_orderstatus"], [["o_totalprice", "sum", "s"]])
-        df = aggregate_plan(path, *spec, spark=spark)
-        df.count()
-        plan = _plan(df)
+        small = get_small_query_session(spark)
+
+        def sql(view):
+            return f"SELECT o_orderstatus, SUM(o_totalprice) AS s FROM {view} GROUP BY 1"
+
+        mine = relations.relation_sql(spark, path, sql)
+        assert relations.relation_sql(spark, path, sql) is mine
+        theirs = relations.relation_sql(small, path, sql)
+        assert theirs is not mine
+        assert mine.sparkSession is spark and theirs.sparkSession is small
+        mine.count()
+        plan = _plan(mine)
         assert "FileScan" in plan and "InMemoryTableScan" not in plan
+        assert not _relation_views(spark)
 
 
 class TestCountDistinctRewrite:
@@ -283,9 +305,9 @@ class TestCountDistinctRewrite:
         sqls = []
         real = relations.cached_sql
 
-        def spy(session, sql, args=None):
+        def spy(key, sql, args, analyze):
             sqls.append(sql)
-            return real(session, sql, args)
+            return real(key, sql, args, analyze)
 
         monkeypatch.setattr(relations, "cached_sql", spy)
         r = aggregate_pq(p, ["d"], [["m", "count_distinct", "u"]], pin_snapshot=True)
@@ -326,21 +348,38 @@ class TestConcurrentQueries:
 class TestRelationLifecycle:
     """What the relation cache leaves behind, and who sees a replaced file."""
 
+    @pytest.fixture
+    def unversioned(self, spark, tmp_path, monkeypatch):
+        """``tmp_path/t.parquet`` as a URI that Spark reads but no backend
+        can stat: ``tmp_path`` mounted through Hadoop ViewFs, with a fake
+        backend for the scheme that cannot stat it."""
+        monkeypatch.setitem(relations.fs._TEST_FILESYSTEMS, "viewfs", _Unversioned())
+        # one mount table per test: Hadoop caches a ViewFs instance, with
+        # the links it was created with, per mount table name
+        table = f"pqs{uuid.uuid4().hex[:8]}"
+        conf = spark._jsc.hadoopConfiguration()
+        mount = f"fs.viewfs.mounttable.{table}.link./data"
+        conf.set(mount, "file://" + str(tmp_path))
+        yield f"viewfs://{table}/data/t.parquet"
+        conf.unset(mount)
+
     def test_snapshot_and_replace_reads_leave_nothing_behind(self, spark, tmp_path):
-        """Pinned-snapshot reads drop their entry, view and plans once the
-        result is fetched; a replaced file's read evicts the entry (and
-        view) of its old version."""
+        """Pinned-snapshot reads drop their entry and plans once the
+        result is fetched; a replaced file's read evicts the entry of its
+        old version; no read leaves a view."""
         small = get_small_query_session(spark)
         p = str(tmp_path / "t.parquet")
         _write(p, [1], [1.0])
         aggregate_pq(p, ["d"], [["m", "sum", "s"]], pin_snapshot=True)
 
         views, entries = len(_view_names(small)), len(relations._relations)
+        plans = len(relations._plans)
         for i in range(10):
             r = aggregate_pq(p, ["d"], [["m", "sum", "s"]], pin_snapshot=True)
             assert r.column("s").to_pylist() == [1.0]
         assert len(_view_names(small)) == views
         assert len(relations._relations) == entries
+        assert len(relations._plans) == plans
 
         for i in range(10):
             tmp = str(tmp_path / "next.parquet")
@@ -348,8 +387,8 @@ class TestRelationLifecycle:
             os.replace(tmp, p)
             r = aggregate_pq(p, ["d"], [["m", "sum", "s"]])
             assert r.column("s").to_pylist() == [float(i)]
-        # one entry and one view for the file's current version
-        assert len(_view_names(small)) <= views + 1
+        # one entry for the file's current version, and no view
+        assert len(_view_names(small)) == views
         assert len(relations._relations) <= entries + 1
 
     def test_replaced_file_is_read_fresh_everywhere(self, spark, tmp_path):
@@ -406,63 +445,44 @@ class TestRelationLifecycle:
         relations.invalidate([p, "/missing.parquet"])
         assert relations.get_relation(small, p) is not before
 
-    def test_unversioned_path_is_read_fresh(self, spark, tmp_path, monkeypatch):
+    def test_unversioned_path_is_read_fresh(self, spark, tmp_path, unversioned):
         """A path no backend can stat has no version to key an entry on:
         every read builds its relation afresh, so a replaced file is read
-        new, and the read leaves no entry or view behind.  The file is
-        ``tmp_path`` mounted through Hadoop ViewFs, which Spark reads, with
-        a fake backend that cannot stat it."""
-        monkeypatch.setitem(relations.fs._TEST_FILESYSTEMS, "viewfs", _Unversioned())
-        conf = spark._jsc.hadoopConfiguration()
-        mount = "fs.viewfs.mounttable.pqsunversioned.link./data"
-        conf.set(mount, "file://" + str(tmp_path))
-        try:
-            uri = "viewfs://pqsunversioned/data/t.parquet"
-            p = str(tmp_path / "t.parquet")
-            _write(p, [1], [10.0])
-            views = _view_names(spark)
-            r1 = aggregate_pq(uri, ["d"], [["m", "sum", "s"]])
-            tmp = str(tmp_path / "t.parquet.new")
-            _write(tmp, [1, 1], [90.0, 9.0])  # a new size as well as new data
-            os.replace(tmp, p)
-            r2 = aggregate_pq(uri, ["d"], [["m", "sum", "s"]])
-            assert r1.column("s").to_pylist() == [10.0]
-            assert r2.column("s").to_pylist() == [99.0]
-            assert relations.get_relation(spark, uri) is not relations.get_relation(spark, uri)
-            assert _view_names(spark) == views
-            with relations._lock:
-                assert not [k for k in relations._relations if k[1][0][0] == uri]
-        finally:
-            conf.unset(mount)
-
-    def test_view_dropped_before_analysis(self, spark, tmp_path, monkeypatch):
-        """A concurrent read can evict an entry, dropping its view, after a
-        query has named the view and before its SQL is analyzed; the query
-        then resolves again over a new entry."""
+        new, and the read leaves no entry or view behind."""
         p = str(tmp_path / "t.parquet")
-        _write(p, [1, 1], [2.0, 3.0])
-        sqls = []
-        real = relations.cached_sql
+        _write(p, [1], [10.0])
+        views = _view_names(spark)
+        r1 = aggregate_pq(unversioned, ["d"], [["m", "sum", "s"]])
+        tmp = str(tmp_path / "t.parquet.new")
+        _write(tmp, [1, 1], [90.0, 9.0])  # a new size as well as new data
+        os.replace(tmp, p)
+        r2 = aggregate_pq(unversioned, ["d"], [["m", "sum", "s"]])
+        assert r1.column("s").to_pylist() == [10.0]
+        assert r2.column("s").to_pylist() == [99.0]
+        assert (relations.get_relation(spark, unversioned)
+                is not relations.get_relation(spark, unversioned))
+        assert _view_names(spark) == views
+        with relations._lock:
+            assert not [k for k in relations._relations if k[1][0][0] == unversioned]
 
-        def evict_first(session, sql, args=None):
-            if not sqls:
-                relations.invalidate(p)
-            sqls.append(sql)
-            return real(session, sql, args)
+    def test_unversioned_read_caches_no_plan(self, spark, tmp_path, unversioned):
+        """A plan over a relation with no version could never be hit again,
+        so it is not cached."""
+        _write(str(tmp_path / "t.parquet"), [1, 1], [2.0, 3.0])
+        with relations._lock:
+            plans = list(relations._plans)
+        for _ in range(2):
+            df = aggregate_plan(unversioned, ["d"], [["m", "sum", "s"]], spark=spark)
+            assert [r["s"] for r in df.collect()] == [5.0]
+        with relations._lock:
+            assert list(relations._plans) == plans
 
-        monkeypatch.setattr(relations, "cached_sql", evict_first)
-        df = aggregate_plan(p, ["d"], [["m", "sum", "s"]], spark=spark)
-        assert [r["s"] for r in df.collect()] == [5.0]
-        assert len(sqls) == 2 and sqls[0] != sqls[1]
-
-    def test_concurrent_views_keep_their_owners(self, spark, tmp_path, monkeypatch):
-        """Stress: more threads than cores resolve views, and plan queries
-        over them, over more files than the LRU holds, so entries are
-        evicted between a view's naming and its query's analysis.  No
-        query fails; a plan still runs once its view is gone; afterwards
-        the LRU is within its bound, every view belongs to a live entry,
-        and the session's catalog holds exactly the views of its live
-        entries."""
+    def test_concurrent_callers_leave_no_views(self, spark, tmp_path, monkeypatch):
+        """Stress: more threads than cores query, through both sessions,
+        more files than the LRU holds, so entries are evicted while other
+        threads analyze SQL over them.  No query fails; a plan still runs
+        once its entry is invalidated; afterwards the LRU is within its
+        bound and neither session's catalog holds a relation view."""
         monkeypatch.setattr(relations, "MAX_CACHED_RELATIONS", 1)
         paths = []
         for i in range(6):
@@ -475,7 +495,8 @@ class TestRelationLifecycle:
             try:
                 for j in range(12):
                     p = paths[(i + j) % len(paths)]
-                    relations.get_relation_view(spark, p)
+                    r = aggregate_pq(p, ["d"], [["m", "sum", "s"]])
+                    assert r.column("s").to_pylist() == [float(paths.index(p))]
                     plans[p] = aggregate_plan(p, ["d"], [["m", "sum", "s"]], spark=spark)
             except Exception as e:  # pragma: no cover
                 errors.append(e)
@@ -495,6 +516,4 @@ class TestRelationLifecycle:
         assert [r["s"] for r in plans[paths[0]].collect()] == [0.0]
         with relations._lock:
             assert len(relations._relations) <= 1
-            assert set(relations._views) <= set(relations._relations)
-            mine = {v for k, v in relations._views.items() if k[0] == id(spark)}
-        assert {v for v in _view_names(spark) if v.startswith("__pq_rel_")} == mine
+        assert not _relation_views(spark)

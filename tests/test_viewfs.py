@@ -11,8 +11,12 @@ import pytest
 
 from parquery_spark import fs, relations
 from parquery_spark.queries import (
+    QUERIES,
     q09_missing_column_splice,
+    q67_csv_source,
+    q84_streaming_window_counts,
     q185_item_similarity,
+    q210_bpe_train_merges,
     q220_triplet_mining,
 )
 
@@ -62,3 +66,42 @@ def test_probe_vector_query_over_viewfs(spark, viewfs_sf_dir, sf_dir):
     assert got.columns == want.columns
     rows = sorted(got.collect())
     assert rows and rows == sorted(want.collect())
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(tuple(str(v) for v in row) for row in df.collect())
+
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        # a driver-side pyarrow read of a data file
+        q67_csv_source,
+        # a streaming source directory linked or copied from the data
+        q84_streaming_window_counts,
+        # an in-process memo keyed by the data file's version
+        q210_bpe_train_merges,
+    ],
+    ids=lambda q: q.__name__.split("_")[0],
+)
+def test_driver_side_data_access_over_viewfs(spark, viewfs_sf_dir, sf_dir, query):
+    got = query(spark, viewfs_sf_dir)
+    want = query(spark, sf_dir)
+    assert got.columns == want.columns
+    rows = _rows(got)
+    assert rows and rows == _rows(want)
+
+
+@pytest.mark.slow
+def test_every_query_over_viewfs(spark, viewfs_sf_dir, sf_dir):
+    """The whole registry answers over ViewFs exactly as it does locally."""
+    failed = {}
+    for name, (fn, *_) in QUERIES.items():
+        try:
+            got = fn(spark, viewfs_sf_dir)
+            want = fn(spark, sf_dir)
+            if got.columns != want.columns or _rows(got) != _rows(want):
+                failed[name] = "differs from the local result"
+        except Exception as exc:
+            failed[name] = f"{type(exc).__name__}: {str(exc)[:200]}"
+    assert not failed, "\n".join(f"{n}: {why}" for n, why in sorted(failed.items()))
