@@ -140,8 +140,8 @@ def aggregate_pq(
 
     def _execute(paths):
         spark = get_spark()
-        small = is_small_input(paths)
-        if small:
+        inputs = relations.resolve(paths)
+        if is_small_input(inputs):
             # Execute under the dedicated small-query session (AQE off,
             # single reduce partition) instead of mutating the shared
             # session's conf — thread-safe by construction: a concurrent
@@ -149,14 +149,13 @@ def aggregate_pq(
             spark = get_small_query_session(spark)
         df = build_aggregation_plan(
             spark,
-            paths,
+            inputs,
             groupby_cols,
             measure_cols,
             data_filter=data_filter,
             aggregate=aggregate,
             standard_missing_id=standard_missing_id,
             handle_missing_file=handle_missing_file,
-            small_input=small,
         )
         if as_df:
             return df.toPandas()
@@ -295,13 +294,4 @@ def finalize_group_by(
 
 def _to_arrow(df: DataFrame) -> pa.Table:
     """Materialize a Spark DataFrame as a pyarrow Table (Arrow-native path)."""
-    try:
-        return df.toArrow()
-    except Exception:
-        # NullType empty results can trip Arrow conversion on some versions;
-        # synthesize the null-typed table directly (reference contract:
-        # parquery/tool.py:222-237).
-        if df.isEmpty():
-            schema = pa.schema([(c, pa.null()) for c in df.columns])
-            return pa.Table.from_pydict({c: [] for c in df.columns}, schema=schema)
-        raise
+    return df.toArrow()

@@ -20,12 +20,12 @@ Resolution order per path:
 3. **pyarrow.fs** — covers ``s3``/``gs``/``hdfs`` without a JVM round
    trip, used when the JVM lacks a connector for the scheme.
 
-If NO layer can answer, the path is treated as **present with unknown
-stats** — never as missing: the query proceeds and the Spark scan raises
-the real error (no connector, no credentials, genuinely absent object).
-Fail loud, not empty.  Size/stat probes that cannot be answered raise
-``OSError`` instead, and their callers already degrade to the lazy
-uncached scan path — the correct posture for remote data anyway.
+One probe answers for a path, :func:`stat`: ``(mtime_ns, size)``, or
+``FileNotFoundError`` when a backend reports the path absent, or plain
+``OSError`` when NO backend can answer.  That last answer means *unknown*,
+never *missing*: the path is assumed present, so the Spark scan raises the
+real error (no connector, no credentials, genuinely absent object) — fail
+loud, not empty.  :func:`exists` is a reading of that answer.
 """
 
 from __future__ import annotations
@@ -140,8 +140,9 @@ def _pyarrow_ops(path: str):
 
 
 # test seam: tests install a fake remote filesystem here, keyed by scheme.
-# Each value implements exists(path) / stat(path)->(mtime_ns, size) /
-# glob(pattern)->list[str] / open_input(path)->binary file object.
+# Each value implements stat(path)->(mtime_ns, size) (raising as
+# :func:`stat` does) / glob(pattern)->list[str] / open_input(path)->binary
+# file object.
 _TEST_FILESYSTEMS: dict[str, object] = {}
 
 
@@ -149,37 +150,10 @@ _TEST_FILESYSTEMS: dict[str, object] = {}
 # public probes
 # ---------------------------------------------------------------------------
 
-def exists(path: str) -> bool:
-    """Existence, filesystem-agnostic.  When NO backend can answer a
-    remote path the answer is **True**: assuming presence routes the
-    query to the Spark scan, which raises the real error — assuming
-    absence is the silent-empty-result bug this module exists to fix."""
-    if is_local(path):
-        return os.path.exists(local_part(path))
-    fake = _TEST_FILESYSTEMS.get(scheme_of(path) or "")
-    if fake is not None:
-        return fake.exists(path)
-    h = _hadoop_ops(path)
-    if h is not None:
-        try:
-            return bool(h[0].exists(h[1]))
-        except Exception:
-            pass
-    pa = _pyarrow_ops(path)
-    if pa is not None:
-        try:
-            from pyarrow import fs as pafs
-
-            return pa[0].get_file_info(pa[1]).type != pafs.FileType.NotFound
-        except Exception:
-            pass
-    return True
-
-
 def stat(path: str) -> tuple[int, int]:
-    """``(mtime_ns, size_bytes)`` or raise ``OSError`` when no backend can
-    answer — callers use this for cache/staleness keys and degrade to the
-    uncached lazy scan on failure."""
+    """``(mtime_ns, size_bytes)``.  Raises ``FileNotFoundError`` when a
+    backend reports the path absent, and plain ``OSError`` when no backend
+    can answer (the path's state is unknown)."""
     if is_local(path):
         st = os.stat(local_part(path))
         return st.st_mtime_ns, st.st_size
@@ -191,24 +165,39 @@ def stat(path: str) -> tuple[int, int]:
         try:
             st = h[0].getFileStatus(h[1])
             return int(st.getModificationTime()) * 1_000_000, int(st.getLen())
-        except Exception:
-            pass
+        except Exception as exc:
+            jexc = getattr(exc, "java_exception", None)
+            jvm = _active_spark()._jvm
+            if jexc is not None and jvm.py4j.reflection.TypeUtil.isInstanceOf(
+                    "java.io.FileNotFoundException", jexc):
+                raise FileNotFoundError(f"File {path} does not exist") from None
     pa = _pyarrow_ops(path)
     if pa is not None:
         try:
             from pyarrow import fs as pafs
 
             info = pa[0].get_file_info(pa[1])
-            if info.type == pafs.FileType.NotFound:
-                raise OSError(f"File {path} does not exist")
-            mtime = int(info.mtime_ns) if info.mtime_ns is not None else 0
-            return mtime, int(info.size or 0)
-        except OSError:
-            raise
         except Exception:
-            pass
+            info = None
+        if info is not None and info.type == pafs.FileType.NotFound:
+            raise FileNotFoundError(f"File {path} does not exist")
+        if info is not None:
+            return int(info.mtime_ns or 0), int(info.size or 0)
     raise OSError(f"cannot stat {path}: no filesystem backend for scheme "
                   f"{scheme_of(path)!r}")
+
+
+def exists(path: str) -> bool:
+    """False only when a backend reports the path absent (:func:`stat`); a
+    path no backend can answer for is assumed present, so the Spark scan
+    raises the real error instead of the result being silently empty."""
+    try:
+        stat(path)
+    except FileNotFoundError:
+        return False
+    except OSError:
+        pass
+    return True
 
 
 def getsize(path: str) -> int:

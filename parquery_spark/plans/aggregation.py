@@ -29,7 +29,7 @@ from typing import Any, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from parquery_spark import fs, relations, tool
+from parquery_spark import relations, tool
 
 # op name → Spark SQL aggregate template; the one aggregate-op table (the
 # SQL fast path below and ``operators.skew.salted_groupby`` both build from it).
@@ -125,7 +125,6 @@ def build_aggregation_plan(
     aggregate: bool = True,
     standard_missing_id: int = tool.STANDARD_MISSING_ID,
     handle_missing_file: bool = True,
-    small_input: bool | None = None,
 ) -> DataFrame:
     """Build the lazy Spark plan implementing ``aggregate_pq`` semantics.
 
@@ -134,9 +133,8 @@ def build_aggregation_plan(
     normalize → plan result schema → pre-flight footer checks →
     filter/group plan → missing-column splice.
 
-    ``small_input`` is :func:`is_small_input` of the input when the caller
-    has already measured it (``aggregate_pq`` does, to pick its session);
-    None measures it here when the plan needs it.
+    ``file_name`` may be the result of ``relations.resolve`` (``aggregate_pq``
+    resolves it to pick its session); the plan then probes nothing again.
     """
     groupby_cols = list(groupby_cols)
     measures = tool.normalize_measure_cols(measure_cols)
@@ -151,28 +149,14 @@ def build_aggregation_plan(
     # only some files surfaces as nulls via mergeSchema, so filters on it
     # exclude those files' rows — the per-file "unknown dimension
     # contributes nothing" contract, preserved across the dataset.
-    # All existence/stat/footer probes go through parquery_spark.fs — on
-    # s3a://hdfs://gs:// URIs the POSIX calls this replaces reported
-    # "missing" for files that exist, silently emptying the result.  The
-    # shim's failure posture is the opposite: a path no backend can probe
-    # is assumed PRESENT and the Spark scan raises the real error.
-    paths = [file_name] if isinstance(file_name, str) else list(file_name)
-    live_paths = []
-    for p in paths:
-        if fs.exists(p):
-            # literal paths win even when they contain glob magic chars
-            # ('[', '*', '?' are legal filename characters)
-            live_paths.append(p)
-        elif relations.has_glob_magic(p):
-            # glob → sorted literal paths; an empty match behaves exactly
-            # like one missing file (skip, or raise per handle_missing_file)
-            hits = relations.expand_globs([p])
-            if hits:
-                live_paths.extend(hits)
-            elif not handle_missing_file:
-                raise tool.MissingInputError(f"File {p} does not exist")
-        elif not handle_missing_file:
-            raise tool.MissingInputError(f"File {p} does not exist")
+    # Every file is stat'ed once (relations.resolve); a path no backend can
+    # probe is assumed PRESENT, so the Spark scan raises the real error.
+    inputs = relations.resolve(file_name)
+    missing = [p for p in inputs if p.version is relations.ABSENT]
+    if missing and not handle_missing_file:
+        # an empty glob behaves exactly like one missing file
+        raise tool.MissingInputError(f"File {missing[0]} does not exist")
+    live_paths = [p for p in inputs if p.version is not relations.ABSENT]
     if not live_paths:
         return empty_result_plan(spark, result_cols)
 
@@ -235,7 +219,7 @@ def build_aggregation_plan(
     if (
         aggregate
         and any(op.lower() in _COUNT_DISTINCT_OPS for _, op, _ in live_measures)
-        and (is_small_input(live_paths) if small_input is None else small_input)
+        and is_small_input(inputs)
     ):
         sql_aggs = dict(
             _SQL_AGGS, **dict.fromkeys(
@@ -313,15 +297,11 @@ SMALL_INPUT_BYTES = 256 << 20
 _COUNT_DISTINCT_OPS = ("count_distinct", "sorted_count_distinct")
 
 
-def is_small_input(paths: str | Sequence[str]) -> bool:
-    """True when the existing files of ``paths`` (globs expanded) total
-    under :data:`SMALL_INPUT_BYTES`.  Unknown sizes (remote URIs without a
-    metadata backend) are NOT small — the scale path is the safe default."""
-    path_list = [paths] if isinstance(paths, str) else list(paths)
-    try:
-        total = sum(
-            fs.getsize(p) for p in relations.expand_globs(path_list) if fs.exists(p)
-        )
-    except OSError:
+def is_small_input(inputs: Sequence[relations.Input]) -> bool:
+    """True when the present files of ``inputs`` (``relations.resolve``)
+    total under :data:`SMALL_INPUT_BYTES`.  An unknown size is NOT small:
+    the scale path is the safe default."""
+    present = [i.version for i in inputs if i.version is not relations.ABSENT]
+    if None in present:
         return False
-    return total < SMALL_INPUT_BYTES
+    return sum(v[2] for v in present) < SMALL_INPUT_BYTES

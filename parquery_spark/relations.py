@@ -12,16 +12,21 @@ and the analyzed plan is immutable for a given file version.  At cluster
 scale this is the file-listing cache applied at the engine layer:
 re-listing a heavily partitioned table per query is minutes of driver time.
 
-One LRU, ``_relations``, maps (session, stat identity) to the analyzed
-relation; the stat identity is ``(canonical path, mtime_ns, size)`` per
-file.  It serves every read: ``aggregate_pq``, ``aggregate_plan`` and the
-registry's ``queries.load``.  A replaced file has a new identity, so it
-gets a fresh relation, and that read evicts every entry over an older
-version of any of its files.  A path that cannot be stat'ed has no
-identity, so its relation is read fresh on every call.
+A query resolves its input once (:func:`resolve`): each file is stat'ed
+once, and the missing-file skip or raise, the footer-schema cache, the size
+gate and the relation key all read that one answer, so one query never
+mixes two versions of a file, and pays one metadata round trip per file.
 
-A second LRU, ``_plans``, maps (stat identity, SQL, args) to the analyzed
-SQL over a relation (:func:`relation_sql`).  Temp views are per analysis:
+One LRU, ``_relations``, maps (session, file versions) to the analyzed
+relation.  It serves every read: ``aggregate_pq``, ``aggregate_plan`` and
+the registry's ``queries.load``.  A replaced file has a new version, so it
+gets a fresh relation, and that read evicts every entry over an older
+version of any of its files.  A path with no known version is read fresh
+on every call.
+
+A second LRU, ``_plans``, maps (relation key, SQL, args) to the analyzed
+SQL over a relation (:func:`relation_sql`); a plan is cached only while its
+relation is, and leaves with it.  Temp views are per analysis:
 a plan miss registers the relation under a fresh view name, analyzes the
 SQL over it and drops it before returning, so the session's catalog is
 left as it was found and no entry owns a view that eviction could drop
@@ -51,7 +56,7 @@ from parquery_spark import fs
 
 _lock = threading.RLock()
 
-#: (session id, stat key) -> analyzed relation (LRU: most recently used
+#: (session id, file versions) -> analyzed relation (LRU: most recently used
 #: last).  An entry holds a plan, never data.
 _relations: "OrderedDict[tuple, DataFrame]" = OrderedDict()
 MAX_CACHED_RELATIONS = 512
@@ -59,10 +64,59 @@ MAX_CACHED_RELATIONS = 512
 _view_ids = itertools.count(1)
 
 
+#: the version of a path a backend reports missing (see :class:`Input`)
+ABSENT = "absent"
+
+
+class Input(str):
+    """A path that carries :func:`resolve`'s answer for it: ``version`` is
+    ``(canonical path, mtime_ns, size)``, :data:`ABSENT`, or None when no
+    backend can answer (assumed present).  Resolving it again probes
+    nothing."""
+
+    def __new__(cls, path: str, version: tuple | str | None = None) -> "Input":
+        inp = super().__new__(cls, path)
+        inp.version = version
+        return inp
+
+
+def _version(path: str) -> tuple | str | None:
+    """The one filesystem probe of a query's input: one ``fs.stat``."""
+    try:
+        return (fs.canonical(path), *fs.stat(path))
+    except FileNotFoundError:
+        return ABSENT
+    except OSError:
+        return None
+
+
+def resolve(paths: str | Sequence[str]) -> list[Input]:
+    """``paths`` as :class:`Input` s, in order, each stat'ed once.  A path
+    that exists literally is itself, even with ``*?[`` in its name;
+    otherwise a pattern expands to its sorted matches (``fs.glob``), one
+    matching nothing is one absent path, and one no backend can expand
+    passes through unversioned, for Spark's readers to glob."""
+    out: list[Input] = []
+    for p in [paths] if isinstance(paths, str) else paths:
+        if isinstance(p, Input):
+            out.append(p)
+            continue
+        version = _version(p)
+        if version is ABSENT and has_glob_magic(p):
+            hits = fs.glob(p)
+            if hits:
+                out.extend(Input(h, _version(h)) for h in hits)
+                continue
+            if hits is None:
+                version = None
+        out.append(Input(p, version))
+    return out
+
+
 def _lazy_read(
-    spark: SparkSession, path_list: Sequence[str]
+    spark: SparkSession, inputs: Sequence[Input]
 ) -> tuple[tuple | None, DataFrame]:
-    """The cached relation over ``path_list`` in ``spark``, and its key.
+    """The cached relation over ``inputs`` in ``spark``, and its key.
 
     A miss reads the relation with :func:`_read` and evicts every entry
     over an older version of one of its files.  A reader still holding such
@@ -71,20 +125,19 @@ def _lazy_read(
     concurrent writers, and snapshot paths are never replaced).  The LRU
     trim never evicts the entry being returned.
 
-    A path no backend can stat (a remote URI without a metadata backend, a
-    remote glob passed through verbatim, a file gone since the pre-flight)
-    has no version to key on: its relation is read fresh and not cached,
-    and the key is None."""
-    try:
-        key = _key(spark, path_list)
-    except OSError:
-        return None, _read(spark, path_list)
+    An input with no version (a remote URI without a metadata backend, a
+    remote glob passed through verbatim, a missing file) has nothing to key
+    on: the relation is read fresh and not cached, and the key is None."""
+    versions = tuple(i.version for i in inputs)
+    if not all(isinstance(v, tuple) for v in versions):
+        return None, _read(spark, inputs)
+    key = (id(spark), versions)
     with _lock:
         df = _relations.get(key)
         if df is not None:
             _relations.move_to_end(key)
             return key, df
-    df = _read(spark, path_list)
+    df = _read(spark, inputs)
     with _lock:
         df = _relations.setdefault(key, df)
         _relations.move_to_end(key)
@@ -114,21 +167,23 @@ class SchemaUnreadableError(Exception):
 
 
 def schema_names(path: str) -> frozenset:
-    """Column names, driver-side and cheap, cached by file stat identity:
+    """Column names, driver-side and cheap, cached by file version:
     parquet/ORC from the footer, CSV from the header row, JSON-lines from
     the keys of the first rows (a sample — untyped formats have no footer;
     columns appearing only deep in the file surface at read time via
     Spark's own inference).
 
-    Filesystem-agnostic: every path stats and opens through
+    Keyed on the version :func:`resolve` gave ``path`` (a plain path is
+    stat'ed here).  Filesystem-agnostic: every path opens through
     :mod:`parquery_spark.fs`.  When no backend can answer, or a read
     fails, this RAISES ``OSError`` — callers must treat "schema unknown"
     as "assume the columns exist" and let the Spark scan fail loud, never
     as an empty schema (the silent-empty-result class).  A file that opens
     but fails to parse raises :class:`SchemaUnreadableError` instead — the
     reference's tolerant contract maps that to an empty result."""
-    mtime_ns, size = fs.stat(path)
-    key = (fs.canonical(path), mtime_ns, size)
+    key = path.version if isinstance(path, Input) else _version(path)
+    if not isinstance(key, tuple):  # absent, or no backend can answer
+        raise OSError(f"cannot stat {path}")
     with _lock:
         names = _schema_names.get(key)
         if names is not None:
@@ -196,12 +251,6 @@ def _parse_schema_names(path: str) -> frozenset:
     return names
 
 
-def _key(spark: SparkSession, paths: Sequence[str]) -> tuple:
-    """``(session id, ((canonical path, mtime_ns, size), ...))``; raises
-    ``OSError`` when a path cannot be stat'ed."""
-    return id(spark), tuple((fs.canonical(p), *fs.stat(p)) for p in paths)
-
-
 #: extension → source format.  Parquet is the reference's only format
 #: (SURVEY.md §2.1); CSV / JSON-lines / ORC are extension surface — same
 #: query API, tolerant-schema semantics, and relation cache on top.
@@ -234,34 +283,18 @@ def has_glob_magic(path: str) -> bool:
     return any(ch in _GLOB_MAGIC for ch in path)
 
 
-def expand_globs(paths: Sequence[str]) -> list[str]:
-    """Expand glob patterns to sorted literal paths (driver-side, cheap —
-    one directory listing per pattern).  Non-pattern paths pass through
-    untouched; a pattern matching nothing contributes nothing (callers
-    that want missing-input errors check emptiness themselves).  Sorted
-    expansion keeps multi-file schema-merge and cache keys deterministic
-    across runs.
+def expand_globs(paths: str | Sequence[str]) -> list[Input]:
+    """:func:`resolve` less the patterns that matched nothing: the paths a
+    read hands to Spark.  A missing literal path stays, so that Spark
+    raises its own error for it; when nothing is left this raises
+    ``MissingInputError``."""
+    inputs = [i for i in resolve(paths)
+              if i.version is not ABSENT or not has_glob_magic(i)]
+    if not inputs:
+        from parquery_spark.tool import MissingInputError
 
-    A path that EXISTS literally is never treated as a pattern —
-    ``*?[`` are all legal filename characters, and a real file named
-    ``events[2024].parquet`` must keep resolving to itself, not to the
-    character class ``[2024]``.
-
-    Remote URIs expand through Hadoop ``globStatus`` (the semantics
-    Spark's own file index applies); when no backend can expand a remote
-    pattern it passes through VERBATIM — Spark's readers glob natively,
-    so deferring beats wrongly reporting zero matches."""
-    out: list[str] = []
-    for p in paths:
-        if has_glob_magic(p) and not fs.exists(p):
-            hits = fs.glob(p)
-            if hits is None:
-                out.append(p)
-            else:
-                out.extend(hits)
-        else:
-            out.append(p)
-    return out
+        raise MissingInputError(f"no files match: {paths}")
+    return inputs
 
 
 def _read(spark: SparkSession, paths: Sequence[str]) -> DataFrame:
@@ -349,20 +382,11 @@ def _read_with_footer_schema(
     return DataFrame(jdf, spark)
 
 
-def _expand(paths: str | Sequence[str]) -> list[str]:
-    path_list = expand_globs([paths] if isinstance(paths, str) else list(paths))
-    if not path_list:
-        from parquery_spark.tool import MissingInputError
-
-        raise MissingInputError(f"no files match: {paths}")
-    return path_list
-
-
 def get_relation(spark: SparkSession, paths: str | Sequence[str]) -> DataFrame:
     """Resolve a path list (globs expanded) to its analyzed relation,
     through the relation cache.  The relation is a lazy scan: filters and
     column pruning stay per query."""
-    return _lazy_read(spark, _expand(paths))[1]
+    return _lazy_read(spark, expand_globs(paths))[1]
 
 
 def get_relation_view(relation: DataFrame) -> str:
@@ -392,7 +416,7 @@ def relation_sql(
     The plan is keyed on the relation's stat key, so a replaced file never
     gets a stale plan.  A miss registers a fresh view, analyzes the SQL over
     it and drops it: an analyzed DataFrame no longer needs its view."""
-    key, relation = _lazy_read(spark, _expand(paths))
+    key, relation = _lazy_read(spark, expand_globs(paths))
 
     def analyze() -> DataFrame:
         view = get_relation_view(relation)
@@ -442,15 +466,19 @@ def cached_sql(
             return df
     df = analyze()
     with _lock:
-        _plans[pkey] = df
-        while len(_plans) > MAX_CACHED_PLANS:
-            _plans.popitem(last=False)
+        if key in _relations:  # else it was evicted meanwhile (see _evict)
+            _plans[pkey] = df
+            while len(_plans) > MAX_CACHED_PLANS:
+                _plans.popitem(last=False)
     return df
 
 
 def _evict(key: tuple) -> None:
-    """Drop one entry.  The caller holds ``_lock``."""
+    """Drop one relation and every plan over it, so that no plan keeps an
+    evicted relation alive.  The caller holds ``_lock``."""
     _relations.pop(key, None)
+    for pkey in [k for k in _plans if k[0] == key]:
+        del _plans[pkey]
 
 
 def invalidate(paths: str | Sequence[str] | None = None) -> None:
@@ -459,8 +487,7 @@ def invalidate(paths: str | Sequence[str] | None = None) -> None:
     allowed)."""
     gone = None
     if paths is not None:
-        path_list = [paths] if isinstance(paths, str) else list(paths)
-        gone = {fs.canonical(p) for p in expand_globs(path_list)}
+        gone = {fs.canonical(p) for p in resolve(paths)}
 
     def reads_gone(files) -> bool:
         return gone is None or any(f[0] in gone for f in files)
@@ -468,7 +495,5 @@ def invalidate(paths: str | Sequence[str] | None = None) -> None:
     with _lock:
         for key in [k for k in _relations if reads_gone(k[1])]:
             _evict(key)
-        for key in [k for k in _plans if reads_gone(k[0][1])]:
-            del _plans[key]
         for key in [k for k in _schema_names if reads_gone([k])]:
             del _schema_names[key]

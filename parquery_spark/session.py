@@ -99,8 +99,8 @@ def _alive(s: SparkSession | None) -> bool:
 
 def get_small_query_session(parent: SparkSession) -> SparkSession:
     """A sibling ``SparkSession`` (same SparkContext) tuned for low-latency
-    small queries.  Its relations are cached apart from the parent's: the
-    relation cache and its temp views are per session.
+    small queries.  Its relations and plans are cached apart from the
+    parent's: the cache keys carry the session.
 
     Using a separate session instead of mutating ``parent.conf`` makes the
     small-input fast path safe under concurrency: two threads can run a

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import tempfile
 from typing import Any
 
 import pyarrow as pa
@@ -41,14 +42,9 @@ except ImportError:  # pragma: no cover
 
 
 def create_full_filename(filename: str, workdir: str | None = None) -> str:
-    """Resolve the output path; remove a pre-existing target (overwrite
-    semantics, reference: parquery/write.py:33-54)."""
-    full = os.path.join(workdir, filename) if workdir else filename
-    if os.path.isdir(full):
-        shutil.rmtree(full)
-    elif os.path.exists(full):
-        os.remove(full)
-    return full
+    """Resolve the output path (reference: parquery/write.py:33-54); the
+    write replaces an existing target once the new bytes are complete."""
+    return os.path.join(workdir, filename) if workdir else filename
 
 
 def df_to_parquet(
@@ -59,44 +55,61 @@ def df_to_parquet(
     debug: bool = False,
     single_file: bool = True,
 ) -> str:
-    """Write a DataFrame/Table to ZSTD Parquet; returns the output path."""
+    """Write a DataFrame/Table to ZSTD Parquet; returns the output path.
+
+    The bytes go to a hidden sibling directory and are renamed over a file
+    target from there, so a concurrent reader sees the old file or the new
+    one, never a missing or partial one.  A directory target
+    (``single_file=False``) is removed first: that replace is not atomic."""
     full = create_full_filename(filename, workdir)
+    head, tail = os.path.split(full)
+    tmp = tempfile.mkdtemp(prefix=f".{tail}.", dir=head or ".")
+    staged = os.path.join(tmp, tail)
+    try:
+        if hasattr(df, "sparkSession"):
+            # Spark DataFrame → distributed write
+            out = df.coalesce(1) if single_file else df
+            out.write.parquet(staged, compression="zstd")
+            if single_file:
+                _promote_single_part(staged, full)
+            else:
+                _replace(staged, full)
+            return full
 
-    # Spark DataFrame → distributed write
-    if hasattr(df, "sparkSession"):
-        out = df.coalesce(1) if single_file else df
-        out.write.mode("overwrite").parquet(full, compression="zstd")
-        if single_file:
-            _promote_single_part(full)
+        if pl is not None and isinstance(df, pl.DataFrame):
+            table = df.to_arrow()  # zero-copy (reference: parquery/write.py:126-130)
+        elif pd is not None and isinstance(df, pd.DataFrame):
+            table = pa.Table.from_pandas(df, preserve_index=False)
+        elif isinstance(df, pa.Table):
+            table = df
+        else:
+            raise TypeError(
+                f"Unsupported input type for df_to_parquet: {type(df).__name__}"
+            )
+        with pq.ParquetWriter(staged, table.schema, compression="zstd") as writer:
+            for offset in range(0, max(table.num_rows, 1), chunksize):
+                writer.write_table(table.slice(offset, chunksize))
+        _replace(staged, full)
         return full
-
-    if pl is not None and isinstance(df, pl.DataFrame):
-        table = df.to_arrow()  # zero-copy (reference: parquery/write.py:126-130)
-    elif pd is not None and isinstance(df, pd.DataFrame):
-        table = pa.Table.from_pandas(df, preserve_index=False)
-    elif isinstance(df, pa.Table):
-        table = df
-    else:
-        raise TypeError(
-            f"Unsupported input type for df_to_parquet: {type(df).__name__}"
-        )
-
-    with pq.ParquetWriter(full, table.schema, compression="zstd") as writer:
-        for offset in range(0, max(table.num_rows, 1), chunksize):
-            writer.write_table(table.slice(offset, chunksize))
-    return full
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
-def _promote_single_part(directory: str) -> None:
-    """Replace the Spark output directory with its single part file, so the
-    result is one Parquet *file* — the reference's unit of distribution."""
+def _promote_single_part(directory: str, target: str) -> None:
+    """Move the single part file of a Spark output directory to ``target``
+    (the reference's unit is one file); else the directory itself."""
     parts = [
         f for f in os.listdir(directory)
         if f.endswith(".parquet") and not f.startswith(("_", "."))
     ]
-    if len(parts) != 1:  # keep directory layout if unexpected
-        return
-    tmp = directory + ".__single__"
-    os.replace(os.path.join(directory, parts[0]), tmp)
-    shutil.rmtree(directory)
-    os.replace(tmp, directory)
+    _replace(os.path.join(directory, parts[0]) if len(parts) == 1 else directory, target)
+
+
+def _replace(src: str, dst: str) -> None:
+    """``os.replace``, atomic for a file over a file; when either side is a
+    directory, ``dst`` is removed first."""
+    if os.path.isdir(dst):
+        shutil.rmtree(dst)
+    elif os.path.isdir(src) and os.path.lexists(dst):
+        os.remove(dst)
+    os.replace(src, dst)

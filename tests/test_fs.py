@@ -4,7 +4,7 @@ checks must work for URI schemes, not just POSIX paths.  Three layers:
 * ``file://`` absolute URIs end-to-end (every backend — os.*, Hadoop FS,
   pyarrow — can serve them, so the whole aggregate path must work);
 * a mocked remote filesystem (scheme ``mock://``) proving the pre-flight
-  routes exists/stat/glob/footer reads through the shim;
+  routes stat/glob/footer reads through the shim;
 * an unknown scheme, proving the failure posture is FAIL LOUD at the
   Spark scan — never a silent empty result for a file that might exist.
 """
@@ -85,10 +85,6 @@ class _FakeRemote:
     def _local(self, path):
         return os.path.join(self.root, path.split("://", 1)[1])
 
-    def exists(self, path):
-        self.calls.append(("exists", path))
-        return os.path.exists(self._local(path))
-
     def stat(self, path):
         self.calls.append(("stat", path))
         st = os.stat(self._local(path))
@@ -126,7 +122,7 @@ class TestMockedRemote:
         assert {"a-31", "m1"} <= relations.schema_names(uri)
         assert not fs.exists("mock://absent.parquet")
         kinds = {k for k, _ in mockfs.calls}
-        assert {"exists", "stat", "open"} <= kinds
+        assert {"stat", "open"} <= kinds
 
     def test_glob_expansion_remote(self, mockfs, tmp_path):
         for i in range(2):
@@ -147,6 +143,66 @@ class TestMockedRemote:
                 "mock://nothing.parquet", ["a-31"], [["m1", "sum"]],
                 handle_missing_file=False,
             )
+
+
+class TestOneResolvePerQuery:
+    """A query stats each input file once, and everything downstream (the
+    missing-file decision, the footer-schema cache, the size gate, the
+    relation key) reads that one answer."""
+
+    @pytest.fixture()
+    def probes(self, monkeypatch):
+        calls = {"stat": 0, "exists": 0, "getsize": 0}
+        for name in calls:
+            real = getattr(fs, name)
+
+            def counted(path, _name=name, _real=real):
+                calls[_name] += 1
+                return _real(path)
+
+            monkeypatch.setattr(fs, name, counted)
+        return calls
+
+    def test_one_stat_per_file(self, spark, tmp_path, probes):
+        paths = [str(tmp_path / f"f{i}.parquet") for i in range(2)]
+        for p in paths:
+            _write(p, [1, 2])
+        for spec in ([["m1", "sum"]], [["m1", "sum"]], [["m1", "count_distinct"]]):
+            before = dict(probes)
+            aggregate_pq(paths[0], ["a-31"], spec)  # cold, warm, COUNT(DISTINCT)
+            assert {k: probes[k] - before[k] for k in probes} == {
+                "stat": 1, "exists": 0, "getsize": 0}
+        before = dict(probes)
+        res = aggregate_pq([*paths, str(tmp_path / "gone.parquet")], ["a-31"],
+                           [["m1", "sum"]])
+        assert res.num_rows == 2
+        assert {k: probes[k] - before[k] for k in probes} == {
+            "stat": 3, "exists": 0, "getsize": 0}
+
+    def test_one_version_per_query(self, spark, tmp_path, monkeypatch):
+        """A backend that answers a new version on every stat, as for a
+        file being replaced: the footer-schema entry and the relation key
+        of one query carry the same version."""
+
+        class Churning(_FakeRemote):
+            def stat(self, path):
+                return len(self.calls), super().stat(path)[1]
+
+        fake = Churning(tmp_path)
+        monkeypatch.setitem(fs._TEST_FILESYSTEMS, "mock", fake)
+        real_read = relations._read
+        # Spark has no reader for the fake scheme: scan the backing file
+        monkeypatch.setattr(relations, "_read", lambda spark, paths: real_read(
+            spark, [fake._local(p) for p in paths]))
+        _write(str(tmp_path / "t.parquet"), [1, 2])
+        uri = "mock://t.parquet"
+        relations.invalidate(uri)
+        res = aggregate_pq(uri, ["a-31"], [["m1", "sum"]])
+        assert res.num_rows == 2
+        with relations._lock:
+            schema = [k for k in relations._schema_names if k[0] == uri]
+            relation = [f for k in relations._relations for f in k[1] if f[0] == uri]
+        assert len(schema) == 1 and relation == schema
 
 
 class TestUnknownSchemeFailsLoud:
@@ -320,23 +376,44 @@ class TestArtifactGC:
         assert all(os.path.isdir(d) for d in stale[1:])  # 7 newest kept
 
 
+def _call_sites(modules, match) -> set[str]:
+    """``module:function`` of every call in ``modules`` whose callee node
+    ``match`` accepts."""
+    found = set()
+    for module in modules:
+        path = PACKAGE / module
+        tree = ast.parse(path.read_text(), str(path))
+        funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and match(node.func):
+                owners = [f.name for f in funcs
+                          if f.lineno <= node.lineno <= f.end_lineno]
+                found.add(f"{module}:{owners[-1] if owners else '<module>'}")
+    return found
+
+
 def test_no_local_remote_fork_outside_fs():
     """Driver-side reads go through ``fs`` on every filesystem, so a
     non-local ``sf_dir`` takes the path a local one does.  Only ``fs``
     itself and the hardlink pinning of ``aggregate._pinned_snapshot``
     (inodes are inherently local) may ask whether a path is local."""
-    found = set()
-    for path in sorted(PACKAGE.rglob("*.py")):
-        module = path.relative_to(PACKAGE).as_posix()
-        if module == "fs.py":
-            continue
-        tree = ast.parse(path.read_text(), str(path))
-        funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
-        for node in ast.walk(tree):
-            func = getattr(node, "func", None)
-            name = getattr(func, "attr", getattr(func, "id", None))
-            if isinstance(node, ast.Call) and name in ("is_local", "local_part"):
-                owners = [f.name for f in funcs
-                          if f.lineno <= node.lineno <= f.end_lineno]
-                found.add(f"{module}:{owners[-1] if owners else '<module>'}")
+    modules = [p.relative_to(PACKAGE).as_posix() for p in sorted(PACKAGE.rglob("*.py"))]
+    found = _call_sites(
+        [m for m in modules if m != "fs.py"],
+        lambda func: getattr(func, "attr", getattr(func, "id", None))
+        in ("is_local", "local_part"),
+    )
     assert found == {"aggregate.py:_pinned_snapshot"}
+
+
+def test_input_probes_only_in_resolve():
+    """The query path probes its input in one place, ``relations._version``
+    (one ``fs.stat`` per file, under ``relations.resolve``): no second
+    existence, size or version probe can see another version of a file."""
+    found = _call_sites(
+        ["aggregate.py", "plans/aggregation.py", "relations.py"],
+        lambda func: isinstance(func, ast.Attribute)
+        and isinstance(func.value, ast.Name) and func.value.id == "fs"
+        and func.attr in ("stat", "exists", "getsize"),
+    )
+    assert found == {"relations.py:_version"}

@@ -45,9 +45,6 @@ class _Unversioned:
     """A remote backend that answers existence but no file versions, like
     an object store without a metadata backend."""
 
-    def exists(self, path):
-        return True
-
     def stat(self, path):
         raise OSError(f"cannot stat {path}")
 
@@ -390,6 +387,19 @@ class TestRelationLifecycle:
         # one entry for the file's current version, and no view
         assert len(_view_names(small)) == views
         assert len(relations._relations) <= entries + 1
+
+    def test_plans_leave_with_their_relation(self, spark, tmp_path):
+        """A replaced file's read evicts the relation of its old version and
+        every plan over it: no plan keeps an evicted relation alive or holds
+        a slot of the plan LRU."""
+        p = str(tmp_path / "t.parquet")
+        for i in range(3):
+            _write(p + ".new", [1], [float(i)])
+            os.replace(p + ".new", p)
+            r = aggregate_pq(p, ["d"], [["m", "sum", "s"]])
+            assert r.column("s").to_pylist() == [float(i)]
+        with relations._lock:
+            assert all(k[0] in relations._relations for k in relations._plans)
 
     def test_replaced_file_is_read_fresh_everywhere(self, spark, tmp_path):
         """After ``os.replace`` every reader sees the new bytes, with no

@@ -65,6 +65,49 @@ class TestWrite:
         out = df_to_parquet(df, str(tmp_path / "d.parquet"), single_file=False)
         assert os.path.isdir(out)
 
+    @pytest.mark.parametrize("kind", ["arrow", "spark"])
+    def test_read_racing_a_replace_sees_the_old_file(
+        self, tmp_path, spark, monkeypatch, kind
+    ):
+        """A query that runs while ``df_to_parquet`` replaces its file,
+        fired from inside the write, answers from the old file: the new
+        bytes are renamed into place only once complete."""
+        from parquery_spark import write
+
+        path = str(tmp_path / "r.parquet")
+        df_to_parquet(pa.table({"d": [1], "m": [10.0]}), path)
+        seen = []
+
+        def query():
+            r = aggregate_pq(path, ["d"], [["m", "sum", "s"]])
+            seen.append(r.column("s").to_pylist())
+
+        if kind == "arrow":
+            new = pa.table({"d": [1], "m": [20.0]})
+            real = pq.ParquetWriter.write_table
+
+            def hooked(self, *args, **kwargs):
+                if not seen:
+                    query()
+                return real(self, *args, **kwargs)
+
+            monkeypatch.setattr(pq.ParquetWriter, "write_table", hooked)
+        else:
+            new = spark.createDataFrame([(1, 20.0)], "d long, m double")
+            real = write._promote_single_part
+
+            def hooked(*args):
+                query()
+                return real(*args)
+
+            monkeypatch.setattr(write, "_promote_single_part", hooked)
+        df_to_parquet(new, path)
+        monkeypatch.undo()
+        assert seen == [[10.0]]
+        r = aggregate_pq(path, ["d"], [["m", "sum", "s"]])
+        assert r.column("s").to_pylist() == [20.0]
+        assert os.listdir(tmp_path) == ["r.parquet"]  # no temp left behind
+
     def test_polars_if_available(self, tmp_path):
         pl = pytest.importorskip("polars")
         df = pl.DataFrame({"a": [1, 2, 3]})
